@@ -1,18 +1,18 @@
 #!/usr/bin/env python
-"""Registry-wide join-strategy audit (round-10 verdict item #1).
+"""Registry-wide join-strategy audit.
 
-For EVERY registered query, plan it twice — once with the session
-default ``spark.sql.join.preferSortMergeJoin=false`` and once with
-``true`` — and diff the join-strategy multiset.  The queries whose
-plans change under the flip are exactly the ones the session-wide SHJ
-preference can affect; everything else is provably untouched by it.
+For EVERY registered query, plan it twice — once under Spark's
+default ``spark.sql.join.preferSortMergeJoin=true`` and once with the
+flip ``false`` — and diff the join-strategy multiset.  A query whose
+plan changes under the flip has a join whose strategy rests on a
+session-wide switch instead of a per-join hint; the expected count is
+zero.
 
-For each changed query the report prints the SHJ nodes' build side so
-a reviewer can check the planner guard (build side under
-autoBroadcastJoinThreshold x shuffle partitions and 3x smaller than
-probe) picked a bounded side.  Planning only — nothing executes.
+For each changed query the report prints both plans' join nodes, so a
+reviewer can see which join to pin and which side it builds.
+Planning only — nothing executes.
 
-    python examples/join_strategy_sweep.py [out_path]
+    SPARK_GRAFT_SF_DIR=/path/to/sf0.01 python examples/join_strategy_sweep.py [out_path]
 """
 
 from __future__ import annotations
@@ -40,7 +40,7 @@ def main() -> None:
     out_path = sys.argv[1] if len(sys.argv) > 1 else os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r10",
+        "r11",
         "join_strategy_sweep.txt",
     )
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
@@ -51,7 +51,7 @@ def main() -> None:
         master=f"local[{cpus}]",
     )
     lines: list[str] = [
-        f"-- join-strategy sweep @ {sf_dir}: preferSortMergeJoin=false (session default) vs true",
+        f"-- join-strategy sweep @ {sf_dir}: preferSortMergeJoin=true (Spark default) vs false",
         "-- planning only (no execution); queries not listed under CHANGED plan identically either way",
         "",
     ]
@@ -64,29 +64,28 @@ def main() -> None:
         fn = Q.REGISTRY[name].fn
         per_variant: dict[str, list[tuple[str, str]]] = {}
         try:
-            for v in ("false", "true"):
+            for v in ("true", "false"):
                 spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
                 per_variant[v] = _join_nodes(fn(spark, sf_dir))
         except Exception as e:  # build-time failure (missing table etc.)
             errors.append(f"{name}: {type(e).__name__}: {e}")
             continue
-        shj = per_variant["false"]
-        kinds = Counter(n for n, _ in shj)
+        kinds = Counter(n for n, _ in per_variant["true"])
         strategies_all.update(kinds)
         if kinds:
             n_with_joins += 1
-        if Counter(n for n, _ in per_variant["true"]) != kinds:
+        if Counter(n for n, _ in per_variant["false"]) != kinds:
             changed.append(name)
             lines.append(f"CHANGED {name}:")
-            for v in ("false", "true"):
+            for v in ("true", "false"):
                 lines.append(f"  preferSMJ={v}:")
                 for n, d in per_variant[v]:
                     lines.append(f"    {d[:200]}")
             lines.append("")
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
+    spark.conf.unset("spark.sql.join.preferSortMergeJoin")
     lines.append(f"-- queries planned: {len(names) - len(errors)}/{len(names)}"
                  f" ({n_with_joins} contain joins)")
-    lines.append(f"-- join strategies under the session default: "
+    lines.append(f"-- join strategies under Spark's default: "
                  + ", ".join(f"{k}={v}" for k, v in sorted(strategies_all.items())))
     lines.append(f"-- queries whose strategy changes under the flip: {len(changed)}"
                  + (": " + ", ".join(changed) if changed else ""))

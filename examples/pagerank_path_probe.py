@@ -3,14 +3,13 @@
 
     python examples/pagerank_path_probe.py [sf_dir] [--paths both|broadcast|shuffle] [--parity]
 
-The operator auto-routes on |V| vs ``spark.sparkplans.
-pagerankBroadcastNodes`` (default 8M): below it, ranks broadcast into
-the dst-partitioned edges with ZERO exchanges per iteration; above
-it, each iteration shuffles the |V|-row ranks side plus the one
-corpus groupBy(dst) exchange (operators/graph.py:57-75).  The
-broadcast path has measured rungs to sf30; this harness measures the
-shuffle path on the SAME data by forcing ``pagerankBroadcastNodes=0``
-— the configuration that IS the plan at 100x scale (sf100-class
+The operator auto-routes on |V| vs ``graph._PAGERANK_BROADCAST_NODES``
+(8M): below it, ranks broadcast into the dst-partitioned edges with
+ZERO exchanges per iteration; above it, each iteration shuffles the
+|V|-row ranks side plus the one corpus groupBy(dst) exchange
+(operators/graph.py:57-75).  The broadcast path has measured rungs
+to sf30; this harness measures the shuffle path on the SAME data by
+setting that constant to 0 — the configuration that IS the plan at 100x scale (sf100-class
 graphs run ~20M nodes, past any sane broadcast ceiling), previously
 exercised only by the toy-scale parity test.
 
@@ -90,14 +89,9 @@ def main() -> int:
         if paths == "both"
         else [paths]
     )
+    limit = graph._PAGERANK_BROADCAST_NODES
     for leg in legs:
-        if leg == "shuffle":
-            spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
-        else:
-            try:
-                spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
-            except Exception:
-                pass
+        graph._PAGERANK_BROADCAST_NODES = 0 if leg == "shuffle" else limit
         par_open = _cpu_par()
         j0 = jobs()
         t0 = time.perf_counter()

@@ -36,8 +36,6 @@ from pyspark.storagelevel import StorageLevel
 
 RELIABLE_FLAG = "spark.sparkplans.reliableCheckpoints"
 DIR_KEY = "spark.sparkplans.checkpointDir"
-STORAGE_KEY = "spark.sparkplans.materializeStorage"
-ADAPTIVE_BYTES_KEY = "spark.sparkplans.materializeAdaptiveBytes"
 
 # localCheckpoint's stock storage level keeps DESERIALIZED rows in
 # the unified memory store; its unroll-size estimates are loose
@@ -48,14 +46,11 @@ ADAPTIVE_BYTES_KEY = "spark.sparkplans.materializeAdaptiveBytes"
 # it is the safe choice above a size estimate; below it, deserialized
 # rows skip a serialize+deserialize round trip per consumer — the
 # measured cost of always-serialized was 1.8-2.4x on materialize-heavy
-# queries at sf0.1 (roc_auc_cosine 1.01->2.40 s).  `adaptive` (the
-# default) picks per-frame using the Catalyst plan-size estimate;
-# `disk` removes the memory store from the equation entirely for one
-# local write+read.
+# queries at sf0.1 (roc_auc_cosine 1.01->2.40 s).  The level is
+# picked per-frame from the Catalyst plan-size estimate.
 _LEVELS = {
     "memory_deser": StorageLevel.MEMORY_AND_DISK_DESER,
     "memory_ser": StorageLevel.MEMORY_AND_DISK,
-    "disk": StorageLevel.DISK_ONLY,
 }
 # Catalyst's estimate is of the UNCOMPRESSED row width off a
 # compressed-parquet leaf, propagated through joins/generates with
@@ -119,14 +114,12 @@ def materialize(
 
     ``localCheckpoint(eager)`` by default — at an ADAPTIVE storage
     level: deserialized memory+disk when the Catalyst size estimate is
-    below ``spark.sparkplans.materializeAdaptiveBytes`` (default
-    64 MiB — fast re-reads for the model-state and slim frames that
-    dominate at bench scale), SERIALIZED memory+disk above it (exact
-    byte accounting + incremental spill — the level that kept the sf10
-    corpus frames from OOMing a deserialized memory store).
-    ``spark.sparkplans.materializeStorage`` forces a level
-    (``memory_ser`` / ``disk`` / ``memory_deser``) instead of
-    ``adaptive``; ``spark.sparkplans.reliableCheckpoints=true`` routes
+    below ``_ADAPTIVE_DEFAULT_BYTES`` (64 MiB — fast re-reads for the
+    model-state and slim frames that dominate at bench scale),
+    SERIALIZED memory+disk above it (exact byte accounting +
+    incremental spill — the level that kept the sf10 corpus frames
+    from OOMing a deserialized memory store).
+    ``spark.sparkplans.reliableCheckpoints=true`` routes
     to a reliable ``checkpoint`` on distributed storage (see module
     docstring for the trade).
 
@@ -330,34 +323,12 @@ def _has_row_multiplier(df: DataFrame) -> bool:
 
 def storage_level_key(df: DataFrame) -> str:
     """The ``_LEVELS`` key :func:`materialize` will use for ``df``:
-    an explicit ``spark.sparkplans.materializeStorage`` wins;
-    otherwise adaptive — deserialized iff the Catalyst estimate is at
-    most ``spark.sparkplans.materializeAdaptiveBytes``, SHRUNK 64x
-    when the plan contains a row-multiplying operator (the estimate
-    is then only a lower bound — see ``_has_row_multiplier``).  An
-    unavailable estimate reads as huge -> serialized, the safe side."""
-    spark = df.sparkSession
-    try:
-        key = spark.conf.get(STORAGE_KEY, "adaptive")
-    except Exception:
-        key = "adaptive"
-    key = (key or "adaptive").lower()
-    if key in _LEVELS:
-        return key
-    if key != "adaptive":
-        # An explicit-but-unknown value must fail loudly: silently
-        # falling through to adaptive would give a user who believes
-        # they forced a level different behavior with no signal.
-        raise ValueError(
-            f"invalid {STORAGE_KEY}={key!r}: expected 'adaptive' or one "
-            f"of {sorted(_LEVELS)}"
-        )
-    try:
-        limit = int(
-            spark.conf.get(ADAPTIVE_BYTES_KEY, None) or _ADAPTIVE_DEFAULT_BYTES
-        )
-    except Exception:
-        limit = _ADAPTIVE_DEFAULT_BYTES
+    deserialized iff the Catalyst estimate is at most
+    ``_ADAPTIVE_DEFAULT_BYTES``, SHRUNK 64x when the plan contains a
+    row-multiplying operator (the estimate is then only a lower bound
+    — see ``_has_row_multiplier``).  An unavailable estimate reads as
+    huge -> serialized, the safe side."""
+    limit = _ADAPTIVE_DEFAULT_BYTES
     est = plan_size_bytes(df)
     if est is None:
         return "memory_ser"

@@ -345,13 +345,14 @@ def connected_components(
             f"connected_components did not converge in {max_iter} rounds"
         )
     # at the fixed point every edge points child -> component root, so
-    # a node's label is min(self, its unique root); roots map to self
-    lab = edges.groupBy("src").agg(F.min("dst").alias("__m"))
-    return nodes.join(
-        lab, nodes["node"] == lab["src"], "left"
-    ).select(
-        "node",
-        F.least(F.col("node"), F.coalesce("__m", F.col("node"))).alias("comp"),
+    # a node's label is min(self, its unique root); roots map to self.
+    # Every edge endpoint is a node, so one union + min-aggregate
+    # labels them all: one exchange at any scale, no join to plan.
+    return (
+        nodes.select("node", F.col("node").alias("comp"))
+        .unionByName(edges.select(F.col("src").alias("node"), F.col("dst").alias("comp")))
+        .groupBy("node")
+        .agg(F.min("comp").alias("comp"))
     )
 
 
@@ -493,6 +494,15 @@ def deduplicate(
     return df.join(F.broadcast(losers), id_col, "left_anti")
 
 
+# slices="auto" sizing (see prefix_filter_pairs): peak scratch per
+# slice (per EXECUTOR's local disk on a real cluster) and the slice
+# count ceiling.  A caller who needs more slices than the ceiling
+# passes an explicit slices=N and runs it in slice_range chunks.
+_SSJOIN_SLICE_BYTES = 8 << 30
+_SSJOIN_MAX_SLICES = 1024
+# Age after which a caller-supplied slice_dir's run= subdirs are pruned.
+_SSJOIN_SLICE_RETENTION_S = 86400.0
+
 # Last slices="auto" decision (diagnostics for scale harnesses; see
 # prefix_filter_pairs) — driver-only, overwritten per call.
 last_auto_decision: dict | None = None
@@ -562,8 +572,9 @@ def prefix_filter_pairs(
     shuffle would exhaust local disk; on a cluster the same knob
     bounds scratch per executor.  ``slices="auto"`` measures the exact
     candidate-volume upper bound (one cheap aggregation over the
-    prefix rows) and derives the slice count from the
-    ``spark.sparkplans.ssjoinSliceBytes`` scratch budget — the knob
+    prefix rows) and derives the slice count from an 8 GiB per-slice
+    scratch budget (at most 1024 slices; beyond that it warns and
+    the caller passes ``slices=N`` with ``slice_range``) — the knob
     becomes a measured decision instead of a guess.
 
     ``slice_range=(lo, hi)`` executes only slices ``lo..hi-1`` of the
@@ -711,15 +722,8 @@ def prefix_filter_pairs(
         # Measured calibration at sf10 (SCALE.md): 7.1e9 raw rows, and
         # a 1/64 slice held ~8 GB of transient spill+shuffle on disk,
         # i.e. ~72 bytes of peak disk per raw row (unsafe rows written
-        # twice: sorter spill runs + shuffle files, zstd).  The budget
-        # knob is spark.sparkplans.ssjoinSliceBytes (default 8 GiB of
-        # peak scratch per slice — per EXECUTOR's local disk on a real
-        # cluster, where each executor only hosts its share).
-        budget = int(
-            df.sparkSession.conf.get(
-                "spark.sparkplans.ssjoinSliceBytes", str(8 << 30)
-            )
-        )
+        # twice: sorter spill runs + shuffle files, zstd).
+        budget = _SSJOIN_SLICE_BYTES
         raw_ub = (
             pref.groupBy("p")
             .agg(
@@ -734,15 +738,12 @@ def prefix_filter_pairs(
         )
         wanted = max(1, -(-int(raw_ub) * 72 // max(budget, 1)))
         # The slice-count ceiling exists so a mis-estimated candidate
-        # volume can't explode into tens of thousands of tiny jobs; it
-        # is a CONF (not a silent constant) because when it binds, the
-        # per-slice scratch EXCEEDS the ssjoinSliceBytes contract — at
-        # sf100 the 8 GiB budget wants ~6.5k slices and a hard 1024
-        # clamp would run ~51 GB/slice, 6.4x the knob's promise.  The
-        # breach is computed, recorded, and warned, never silent.
-        cap = int(
-            df.sparkSession.conf.get("spark.sparkplans.ssjoinMaxSlices", "1024")
-        )
+        # volume can't explode into tens of thousands of tiny jobs.
+        # When it binds, the per-slice scratch EXCEEDS the budget — at
+        # sf100 the 8 GiB budget wants ~6.5k slices and the 1024 clamp
+        # would run ~51 GB/slice, 6.4x the promise.  The breach is
+        # computed, recorded, and warned, never silent.
+        cap = _SSJOIN_MAX_SLICES
         slices = min(max(cap, 1), wanted)
         breach = max(0, int(raw_ub) * 72 // max(int(slices), 1) - budget)
         # diagnostic hook: scale harnesses read the measured decision
@@ -763,12 +764,11 @@ def prefix_filter_pairs(
 
             warnings.warn(
                 f"ssjoin slices='auto' wanted {wanted} slices to honor "
-                f"ssjoinSliceBytes={budget} but ssjoinMaxSlices={cap} "
-                f"binds: projected peak scratch per slice exceeds the "
-                f"budget by ~{breach / (1 << 30):.1f} GiB. Raise "
-                "spark.sparkplans.ssjoinMaxSlices (and run via "
-                "slice_range in resumable chunks) or raise the budget "
-                "to match the executors' local disk.",
+                f"a {budget}-byte scratch budget but the {cap}-slice "
+                f"cap binds: projected peak scratch per slice exceeds "
+                f"the budget by ~{breach / (1 << 30):.1f} GiB. Pass an "
+                f"explicit slices={wanted} and run it via slice_range "
+                "in resumable chunks.",
                 stacklevel=2,
             )
 
@@ -825,21 +825,15 @@ def prefix_filter_pairs(
         # it cannot be deleted before the caller consumes the result.
         # To keep repeated runs from accumulating unbounded scratch on
         # the shared store, prune run= dirs older than
-        # spark.sparkplans.ssjoinSliceRetentionSec (default 86400 s)
-        # on entry — age-based so a concurrent session's live run is
-        # never swept.  Pruning applies to local filesystems only; on
+        # _SSJOIN_SLICE_RETENTION_S (one day) on entry — age-based so a
+        # concurrent session's live run is never swept.  Pruning applies to local filesystems only; on
         # object stores point a bucket-lifecycle rule at the dir (the
         # same contract every Spark shuffle-/checkpoint-on-S3 setup
         # uses).
         import os as _os
 
-        retention = float(
-            spark.conf.get(
-                "spark.sparkplans.ssjoinSliceRetentionSec", "86400"
-            )
-        )
         if _os.path.isdir(root):
-            cutoff = _time.time() - retention
+            cutoff = _time.time() - _SSJOIN_SLICE_RETENTION_S
             for name in _os.listdir(root):
                 p = _os.path.join(root, name)
                 try:

@@ -17,6 +17,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, functions as F
 from sparkplans.materialize import materialize, materialize_lazy, release
 
+# pagerank() broadcasts the |V|-row rank frame each iteration at or
+# below this many nodes and takes the shuffle path above it (see the
+# memory envelope in pagerank's docstring).
+_PAGERANK_BROADCAST_NODES = 8_000_000
+
 # Last pagerank() run decomposition (diagnostics for scale harnesses,
 # same pattern as dedup.last_auto_decision): which path ran
 # (broadcast/shuffle), graph size, and the driver-side wall split
@@ -68,7 +73,7 @@ def pagerank(
     re-pays the exchange, probe-verified on Spark 4.1.2).
 
     * **Broadcast-ranks path** (default whenever |V| <=
-      ``spark.sparkplans.pagerankBroadcastNodes``, default 8M): the
+      ``_PAGERANK_BROADCAST_NODES``, 8M): the
       src-layout corpus re-partitions to **dst** once (the only
       second corpus exchange, small-graph runs only; the src copy is
       released immediately).  Each iteration then runs with ZERO
@@ -115,11 +120,10 @@ def pagerank(
     iteration here is eagerly materialized (localCheckpoint) and the
     previous ``ranks`` local is rebound, so at most a couple of
     iterations' blocks are live between GC cycles (<~0.5 GiB at the
-    default; executors additionally keep one block each).  Size the
-    threshold to your executor memory: on small-executor clusters set
-    ``spark.sparkplans.pagerankBroadcastNodes`` to ~1-2M (~30 MiB per
-    broadcast); above the threshold the shuffle path costs one extra
-    exchange per iteration but holds no |V|-row broadcast at all.
+    default; executors additionally keep one block each).  Above the
+    threshold the shuffle path costs one extra exchange per iteration
+    but holds no |V|-row broadcast at all; ``last_run_stats`` reports
+    the threshold as ``broadcast_limit``.
     * ranks carry the static ``outdeg`` column, so dangling mass is a
       conditional sum over the rank frame — and that scalar RIDES THE
       MATERIALIZATION ACTION every iteration already pays, as an
@@ -156,9 +160,7 @@ def pagerank(
     t_start = _time.perf_counter()
     spark = edges.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    bcast_limit = int(
-        spark.conf.get("spark.sparkplans.pagerankBroadcastNodes", str(8_000_000))
-    )
+    bcast_limit = _PAGERANK_BROADCAST_NODES
     # Edge prologue, ONE corpus exchange (round-9 rework; was three —
     # distinct on (src,dst), join-with-outdeg on src, re-layout on the
     # iteration key): hash-partition the raw pairs by src once, dedup

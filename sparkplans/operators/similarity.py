@@ -32,8 +32,8 @@ from sparkplans.materialize import materialize, plan_size_bytes
 # above it, one BLAS matmul per triangle cell (sf10: >75 min of
 # per-pair codegen fold -> 38.8 s).  4 MiB of compressed parquet
 # (~sf0.5 of the embeddings table) is where the pair count crosses
-# ~10M and the matmul starts winning.
-BLAS_MIN_BYTES_KEY = "spark.sparkplans.blasMinBytes"
+# ~10M and the matmul starts winning.  Callers that know better pass
+# ``engine=`` explicitly.
 _BLAS_MIN_BYTES = 4 << 20
 
 
@@ -705,10 +705,9 @@ def triangle_pair_scores(
       round trip costs ~2.6 s the fold doesn't.  ``engine="auto"``
       (default) picks by the Catalyst size estimate of ``corpus``
       (or ``size_hint`` when the caller holds a better number, e.g.
-      the pre-materialize estimate) against
-      ``spark.sparkplans.blasMinBytes`` (default 4 MiB); an
-      unavailable estimate reads as huge, choosing BLAS — the engine
-      that survives scale.  Both engines round cosines to 6 dp BEFORE
+      the pre-materialize estimate) against ``_BLAS_MIN_BYTES``
+      (4 MiB); an unavailable estimate reads as huge, choosing BLAS —
+      the engine that survives scale.  Both engines round cosines to 6 dp BEFORE
       thresholding (as does the DuckDB oracle), absorbing
       summation-order ulps, and produce identical pair sets.
 
@@ -717,14 +716,7 @@ def triangle_pair_scores(
     ``row_chunk x |B|`` doubles regardless of cell size."""
     if engine == "auto":
         est = size_hint if size_hint is not None else plan_size_bytes(corpus)
-        try:
-            limit = int(
-                corpus.sparkSession.conf.get(BLAS_MIN_BYTES_KEY, None)
-                or _BLAS_MIN_BYTES
-            )
-        except Exception:
-            limit = _BLAS_MIN_BYTES
-        engine = "fold" if est is not None and est < limit else "blas"
+        engine = "fold" if est is not None and est < _BLAS_MIN_BYTES else "blas"
     c = (
         corpus.withColumn("__n", l2_norm(vec_col))
         .filter(F.col("__n") > 0)
@@ -978,8 +970,11 @@ def semdedup(
     # job materializes it with no sibling-stage race — one fewer
     # synchronous driver job per call.
     dup_of = materialize(dup_of, eager=False)
+    # Shuffled-hash, building the slim side (at most one row per
+    # assigned id): without the hint Spark plans a sort-merge join and
+    # sorts both inputs.
     out = (
-        assigned.join(dup_of, id_col, "left")
+        assigned.join(dup_of.hint("shuffle_hash"), id_col, "left")
         .withColumn("kept", F.col("dup_of").isNull())
         .select(id_col, "cid", vec_col, "kept", "dup_of")
     )

@@ -576,6 +576,14 @@ def tdigest_rollup(
         raise ValueError("tdigest_rollup requires non-empty fine_cols")
     coarse_names = list(coarse)
     _td_check_group_cols(fine_cols + coarse_names)
+    # withColumn would silently replace a same-named fine key, and
+    # the fold would then group at the wrong grain.
+    clash = set(coarse_names) & set(fine_cols)
+    if clash:
+        raise ValueError(
+            f"tdigest_rollup coarse key(s) {sorted(clash)} collide with "
+            "fine_cols; give the coarse keys their own names"
+        )
     part, fine_cols, _state_schema, _keyed = _td_partials(
         df, col, fine_cols, delta, chunk_rows
     )

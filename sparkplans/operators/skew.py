@@ -69,19 +69,9 @@ def salted_join(
     # often still under the threshold), the salt is dead weight AND
     # the driver pays a num_salts-times-larger broadcast build
     # (measured round 9: 2.4M-row exploded broadcast cost ~2 s/run at
-    # sf0.1).  Shuffled-hash by default (no sort; build side is the
-    # salted dim slice per partition, bounded by construction);
-    # ``spark.sparkplans.saltedJoinHint=merge`` falls back to
-    # sort-merge, ``none`` restores planner choice.
-    try:
-        hint = facts.sparkSession.conf.get(
-            "spark.sparkplans.saltedJoinHint", "shuffle_hash"
-        )
-    except Exception:
-        hint = "shuffle_hash"
-    if hint and hint.lower() != "none":
-        d = d.hint(hint)
-    return f.join(d, on + ["__salt"], how).drop("__salt")
+    # sf0.1).  Shuffled-hash: no sort, and the build side is the
+    # salted dim slice per partition, bounded by construction.
+    return f.join(d.hint("shuffle_hash"), on + ["__salt"], how).drop("__salt")
 
 
 def skew_report(df, key: str):

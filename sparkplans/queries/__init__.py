@@ -388,9 +388,12 @@ def q_left_join_agg(spark, sf_dir):
     )
 
 
+# A full outer join cannot broadcast; the hint builds the 25-row
+# nation side instead of sorting both inputs (DuckDB reads it as a
+# comment).
 _shared_sql(
     "full_outer_join",
-    "SELECT n_nationkey, n_name, s_suppkey, s_name "
+    "SELECT /*+ SHUFFLE_HASH(nation) */ n_nationkey, n_name, s_suppkey, s_name "
     "FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey",
 )
 

@@ -348,7 +348,7 @@ def q_ssjoin_near_dups(spark, sf_dir):
     bit-identical pairs, ~1/slices peak shuffle footprint — for
     data-dominated SFs where the lossless candidate shuffle would
     exhaust local scratch.  ``auto`` sizes the count from the measured
-    candidate volume against spark.sparkplans.ssjoinSliceBytes."""
+    candidate volume against an 8 GiB per-slice scratch budget."""
     import os
 
     from sparkplans.operators.dedup import prefix_filter_pairs

@@ -22,6 +22,10 @@ from pyspark.sql.window import Window
 from sparkplans.functions import cosine_similarity, token_count
 from sparkplans.queries import _t, _t_cpu, register
 
+# Estimated probe-matrix size at or below which q_semantic_decontamination
+# broadcasts the probes; above it the probe-blocked cogroup runs.
+_DECONTAM_PROBE_BROADCAST_BYTES = 64 << 20
+
 
 # ---------------------------------------------------------------------
 # Linear quality classifier over hashed unigram features
@@ -487,14 +491,13 @@ def q_semantic_decontamination(spark, sf_dir):
     set).  A cheap aggregate (count + dim over the label-9 slice,
     filter pushed to the scan) estimates the probe-matrix size first:
 
-    * **<= spark.sparkplans.decontamProbeBroadcastBytes (64 MiB
-      default): broadcast-BLAS.** The probe matrix is bounded model
-      state (like IVF centroids), collected once, L2-normalized, and
-      shipped as a **broadcast variable** (torrent-distributed once
-      per executor — no longer closure state serialized into every
-      task, the other half of the r5 flag); each corpus partition
-      scores all probes as chunked BLAS matmuls in ``mapInPandas`` —
-      ZERO exchanges.
+    * **<= _DECONTAM_PROBE_BROADCAST_BYTES (64 MiB): broadcast-BLAS.**
+      The probe matrix is bounded model state (like IVF centroids),
+      collected once, L2-normalized, and shipped as a **broadcast
+      variable** (torrent-distributed once per executor — no longer
+      closure state serialized into every task, the other half of
+      the r5 flag); each corpus partition scores all probes as
+      chunked BLAS matmuls in ``mapInPandas`` — ZERO exchanges.
     * **above the threshold: probe-blocked cogroup** (`_decontam_
       blocked`) — probes never touch the driver.  The r5 verdict
       sketched falling back to the LSH-bucketed candidate join, but
@@ -525,13 +528,8 @@ def q_semantic_decontamination(spark, sf_dir):
         # zero rows, so the empty frame is the contract
         return spark.createDataFrame([], out_schema)
     est_bytes = n_probes * dim * 8
-    limit = int(
-        spark.conf.get(
-            "spark.sparkplans.decontamProbeBroadcastBytes", str(64 << 20)
-        )
-    )
     corpus = e.filter(F.col("label") != 9).select("vec_id", "embedding")
-    if est_bytes > limit:
+    if est_bytes > _DECONTAM_PROBE_BROADCAST_BYTES:
         return _decontam_blocked(spark, corpus, probes, n_probes, dim)
 
     P = np.stack(

@@ -17,6 +17,10 @@ from pyspark.sql.window import Window
 
 from sparkplans.queries import _rowcount, _shared_sql, _t, _t_cpu, register
 
+# lineitem row count at which q_weighted_median_price switches from the
+# single-window plan to the two-phase bucket plan.
+_MEDIAN_TWO_PHASE_ROWS = 20_000_000
+
 
 # ---------------------------------------------------------------------
 # OHLC candlestick bars (hypertable first/last aggregates)
@@ -158,8 +162,8 @@ def q_weighted_median_price(spark, sf_dir):
     aggregations instead of a 3-task global sort.
 
     Size-adaptive (same pattern as the triangle core's fold-vs-BLAS
-    switch): below ``spark.sparkplans.medianTwoPhaseRows`` (default
-    20M, read from parquet footers — zero jobs) the naive single-
+    switch): below ``_MEDIAN_TWO_PHASE_ROWS`` (20M, read from
+    parquet footers — zero jobs) the naive single-
     window plan wins on fixed cost (sf0.1: 0.98 s vs 1.9 s for six
     stages); above it the 3-task sort is the bottleneck (sf10 77 →
     8.6 s, sf30 539 → 34 s two-phase).  Both plans are exact and
@@ -169,10 +173,7 @@ def q_weighted_median_price(spark, sf_dir):
         F.col("l_extendedprice").alias("v"),
         F.col("l_quantity").cast("decimal(18,2)").alias("wt"),
     )
-    threshold = int(
-        spark.conf.get("spark.sparkplans.medianTwoPhaseRows", str(20_000_000))
-    )
-    if _rowcount(sf_dir, "lineitem") < threshold:
+    if _rowcount(sf_dir, "lineitem") < _MEDIAN_TWO_PHASE_ROWS:
         win_n = Window.partitionBy("l_returnflag").orderBy("v")
         win_t = Window.partitionBy("l_returnflag")
         c = w.withColumn("cum", F.sum("wt").over(win_n)).withColumn(

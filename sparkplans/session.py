@@ -6,10 +6,11 @@ The reference exposes configuration as first-class queryable state
 knobs like ``target_partitions``, ``repartition_joins``,
 ``prefer_existing_sort`` (``tests/opt_parallel_execution.rs:17-23``).
 
-Spark equivalents are set here once, at session build time, plus a
-small dict of *engine-level* flags that our own planning layer (not
-Catalyst) consults — e.g. ``prefer_existing_sort`` drives sort
-elision in :mod:`sparkplans.engine`.
+Spark equivalents are set here once, at session build time; the one
+*engine-level* flag, ``prefer_existing_sort``, is read by our own
+planning layer (not Catalyst) to drive sort elision in
+:mod:`sparkplans.engine`.  Join strategy is never a session-wide
+switch: a join that needs a particular strategy carries a hint.
 
 Scale note: these defaults are written for a real cluster.  AQE is on
 (runtime re-planning, skew-join splitting, partition coalescing),
@@ -21,10 +22,11 @@ automatically.  Tests run the same code on ``local[N]``.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field, asdict
-from typing import Any
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+
+from sparkplans.materialize import DIR_KEY, RELIABLE_FLAG
 
 
 def _default_parallelism() -> int:
@@ -47,8 +49,11 @@ class EngineOptions:
     ``target_partitions``          ``spark.sql.shuffle.partitions`` +
                                    ``spark.default.parallelism``
     ``batch_size``                 ``spark.sql.parquet.columnarReaderBatchSize``
-    ``repartition_joins``          engine flag (join planning) + AQE
-    ``repartition_aggregations``   engine flag + AQE coalescing
+    ``repartition_joins``          no field: AQE (``adaptive``) re-plans
+                                   joins; bucketed tables keep their
+                                   layout
+    ``repartition_aggregations``   no field: AQE partition coalescing
+                                   (``adaptive``)
     ``repartition_file_scans``     ``spark.sql.files.maxPartitionBytes``
                                    split behaviour (off -> huge split)
     ``prefer_existing_sort``       engine flag: sort-elision layer
@@ -58,8 +63,6 @@ class EngineOptions:
 
     target_partitions: int = field(default_factory=_default_parallelism)
     batch_size: int = 8192
-    repartition_joins: bool = True
-    repartition_aggregations: bool = True
     repartition_file_scans: bool = True
     prefer_existing_sort: bool = True
     collect_statistics: bool = True
@@ -89,20 +92,6 @@ class EngineOptions:
             # prune the probe-side scan at runtime.
             "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
             "spark.sql.optimizer.dynamicPartitionPruning.enabled": "true",
-            # Allow the planner to pick shuffled-hash join when its size
-            # conditions hold (guide §3.1: no sort, often faster than
-            # sort-merge when one side is moderately small per
-            # partition).  Measured round 9: the many-to-many
-            # co-purchase self-join runs 4.5x faster as SHJ than SMJ
-            # (group buffering), and mid-plan joins whose inputs follow
-            # a checkpoint (no stats -> no broadcast) stop paying two
-            # sorts.  The planner's own guard (build side under
-            # autoBroadcastJoinThreshold x shuffle partitions, and 3x
-            # smaller than probe) keeps the build per partition
-            # bounded, so this is scale-safe: joins too big for the
-            # guard still get sort-merge.  Explicit hints (merge_join)
-            # still win over this preference.
-            "spark.sql.join.preferSortMergeJoin": "false",
             # Let AQE convert a planned sort-merge join to shuffled
             # hash at runtime when every post-shuffle partition is
             # small (real sizes, not estimates; default 0 = never).
@@ -114,9 +103,9 @@ class EngineOptions:
             "spark.sql.execution.arrow.pyspark.enabled": "true",
         }
         if self.reliable_checkpoints:
-            conf["spark.sparkplans.reliableCheckpoints"] = "true"
+            conf[RELIABLE_FLAG] = "true"
         if self.checkpoint_dir:
-            conf["spark.sparkplans.checkpointDir"] = self.checkpoint_dir
+            conf[DIR_KEY] = self.checkpoint_dir
         if not self.repartition_file_scans:
             # Do not split files into byte-range partitions: one file,
             # one partition (preserves declared per-file sort order;
@@ -125,13 +114,6 @@ class EngineOptions:
             conf["spark.sql.files.openCostInBytes"] = str(1 << 40)
         conf.update(self.extra_conf)
         return conf
-
-    def engine_flags(self) -> dict[str, Any]:
-        return {
-            "prefer_existing_sort": self.prefer_existing_sort,
-            "repartition_joins": self.repartition_joins,
-            "repartition_aggregations": self.repartition_aggregations,
-        }
 
 
 def configure_session(spark: SparkSession, options: EngineOptions | None = None) -> SparkSession:

@@ -1088,14 +1088,15 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(edges, iterations=3).count() == 0
 
 
-def test_pagerank_shuffle_path_parity(spark):
+def test_pagerank_shuffle_path_parity(spark, monkeypatch):
     """The |V|-above-threshold SHUFFLE path (src-partitioned edges,
     shuffled ranks join, dangling fold on that branch) produces the
     same ranks as the default broadcast path and the closed form.
 
     All the other graph tests use tiny graphs, so without forcing
-    ``pagerankBroadcastNodes=0`` this branch would never execute
+    ``_PAGERANK_BROADCAST_NODES=0`` this branch would never execute
     (ADVICE r5: unpinned branch)."""
+    from sparkplans.operators import graph
     from sparkplans.operators.graph import pagerank
 
     # richer graph than the closed-form test: a hub, a cycle, two
@@ -1106,16 +1107,12 @@ def test_pagerank_shuffle_path_parity(spark):
     ]
     edges = spark.createDataFrame(edge_list, "src long, dst long")
 
-    prev = spark.conf.get("spark.sparkplans.pagerankBroadcastNodes", None)
-    try:
-        spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
+    with monkeypatch.context() as mp:
+        mp.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
         shuffled = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
-        else:
-            spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", prev)
+        assert graph.last_run_stats["path"] == "shuffle"
     bcast = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
+    assert graph.last_run_stats["path"] == "broadcast"
 
     assert set(shuffled) == set(bcast)
     for v in bcast:
@@ -1558,11 +1555,11 @@ def test_prefix_filter_sliced_identical_pairs(spark, tmp_path):
     assert got == want, (len(got), len(want))
 
 
-def test_prefix_filter_auto_slices(spark, tmp_path):
+def test_prefix_filter_auto_slices(spark, tmp_path, monkeypatch):
     """slices='auto' sizes the slicing from the measured candidate
-    volume vs the spark.sparkplans.ssjoinSliceBytes budget: a tiny
-    budget forces a multi-slice run (same pairs), the default budget
-    resolves to a single-job plan (same pairs)."""
+    volume vs the _SSJOIN_SLICE_BYTES budget: a tiny budget forces a
+    multi-slice run (same pairs), the default budget resolves to a
+    single-job plan (same pairs)."""
     import random
 
     from sparkplans.operators.dedup import prefix_filter_pairs
@@ -1582,8 +1579,8 @@ def test_prefix_filter_auto_slices(spark, tmp_path):
     )
     assert want
 
-    spark.conf.set("spark.sparkplans.ssjoinSliceBytes", "50000")
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_SSJOIN_SLICE_BYTES", 50000)
         got_forced = sorted(
             (r.id_a, r.id_b, r.jaccard)
             for r in prefix_filter_pairs(
@@ -1591,8 +1588,6 @@ def test_prefix_filter_auto_slices(spark, tmp_path):
                 slice_dir=str(tmp_path / "auto"),
             ).collect()
         )
-    finally:
-        spark.conf.unset("spark.sparkplans.ssjoinSliceBytes")
     assert got_forced == want
 
     got_default = sorted(
@@ -1603,14 +1598,15 @@ def test_prefix_filter_auto_slices(spark, tmp_path):
 
 
 def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
-    """When ssjoinMaxSlices clamps the auto slice count below what the
-    ssjoinSliceBytes budget wants, the breach must be LOUD: a warning
-    fires and last_auto_decision records cap_bound + the projected
-    per-slice scratch overage — on a real cluster with small
-    executor-local disks a silent clamp is exactly the failure the
-    budget knob exists to prevent."""
+    """When _SSJOIN_MAX_SLICES clamps the auto slice count below what
+    the _SSJOIN_SLICE_BYTES budget wants, the breach must be LOUD: a
+    warning fires (telling the caller to pass an explicit slices=N
+    with slice_range) and last_auto_decision records cap_bound + the
+    projected per-slice scratch overage — on a real cluster with
+    small executor-local disks a silent clamp is exactly the failure
+    the budget exists to prevent."""
     import random
     import warnings
 
@@ -1629,9 +1625,9 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
         for r in prefix_filter_pairs(df, threshold=0.4).collect()
     )
 
-    spark.conf.set("spark.sparkplans.ssjoinSliceBytes", "5000")
-    spark.conf.set("spark.sparkplans.ssjoinMaxSlices", "2")
-    try:
+    monkeypatch.setattr(dedup, "_SSJOIN_SLICE_BYTES", 5000)
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "_SSJOIN_MAX_SLICES", 2)
         with warnings.catch_warnings(record=True) as caught:
             warnings.simplefilter("always")
             got = sorted(
@@ -1653,30 +1649,24 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
         )
         assert d["budget_breach_bytes"] > 0
         msgs = [str(w.message) for w in caught]
-        assert any("ssjoinMaxSlices" in m and "exceeds" in m for m in msgs), msgs
+        advice = f"explicit slices={d['slices_wanted']} and run it via slice_range"
+        assert any(advice in m and "exceeds" in m for m in msgs), msgs
 
-        # unclamped control on the same data: no breach recorded
-        with warnings.catch_warnings(record=True) as caught2:
-            warnings.simplefilter("always")
-            spark.conf.unset("spark.sparkplans.ssjoinMaxSlices")
-            got2 = sorted(
-                (r.id_a, r.id_b, r.jaccard)
-                for r in prefix_filter_pairs(
-                    df, threshold=0.4, slices="auto",
-                    slice_dir=str(tmp_path / "uncap"),
-                ).collect()
-            )
-        assert got2 == want
-        d2 = dedup.last_auto_decision
-        assert d2["cap_bound"] is False
-        assert d2["budget_breach_bytes"] == 0
-        assert not any("ssjoinMaxSlices" in str(w.message) for w in caught2)
-    finally:
-        spark.conf.unset("spark.sparkplans.ssjoinSliceBytes")
-        try:
-            spark.conf.unset("spark.sparkplans.ssjoinMaxSlices")
-        except Exception:
-            pass
+    # unclamped control on the same data: no breach recorded
+    with warnings.catch_warnings(record=True) as caught2:
+        warnings.simplefilter("always")
+        got2 = sorted(
+            (r.id_a, r.id_b, r.jaccard)
+            for r in prefix_filter_pairs(
+                df, threshold=0.4, slices="auto",
+                slice_dir=str(tmp_path / "uncap"),
+            ).collect()
+        )
+    assert got2 == want
+    d2 = dedup.last_auto_decision
+    assert d2["cap_bound"] is False
+    assert d2["budget_breach_bytes"] == 0
+    assert not any("slice_range" in str(w.message) for w in caught2)
 
 
 def test_prefix_filter_slice_range_partitions_the_result(spark, tmp_path):
@@ -1774,7 +1764,7 @@ def test_prefix_filter_reused_slice_dir_no_stale_merge(spark, tmp_path):
 
 def test_prefix_filter_slice_dir_retention_prunes_old_runs(spark, tmp_path):
     """With a caller-supplied slice_dir, run= subdirs older than
-    spark.sparkplans.ssjoinSliceRetentionSec are pruned on entry so
+    _SSJOIN_SLICE_RETENTION_S (one day) are pruned on entry so
     repeated runs don't accumulate unbounded scratch on the shared
     store (ADVICE r5); YOUNG run= dirs (a concurrent session's live
     run) are never swept."""

@@ -552,7 +552,7 @@ def test_aqe_skew_join_split_fires(spark):
                 spark.conf.set(k, v)
 
 
-def test_pagerank_iteration_no_corpus_exchange_or_sort(spark):
+def test_pagerank_iteration_no_corpus_exchange_or_sort(spark, monkeypatch):
     """The per-iteration plan contract behind the shuffle path's 100x
     story (the reference's never-repartition-pre-partitioned-data
     rule, docs/7_cli_read_plans_aggregation.md:100-160): the static
@@ -575,9 +575,10 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark):
     # 20M-node graph would — otherwise the ranks join broadcasts and
     # the corpus-side assertion is vacuous
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
     try:
-        graph.pagerank(edges, iterations=2).count()
+        with monkeypatch.context() as mp:
+            mp.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
+            graph.pagerank(edges, iterations=2).count()
         st = graph.last_run_stats
         assert st["path"] == "shuffle"
         exchanges, sorts = st["iteration_exchanges"], st["iteration_sorts"]
@@ -591,7 +592,6 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark):
         assert len(sorts) <= 2, sorts
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-        spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
 
     # broadcast path: zero live exchanges per iteration (the docstring
     # claim, now actually true — localCheckpoint used to erase the

@@ -93,18 +93,14 @@ def test_pagerank_under_reliable_mode_same_result(spark, reliable):
     assert abs(sum(rel.values()) - 1.0) < 1e-9
 
 
-def test_adaptive_storage_level_picks_by_size(spark):
+def test_adaptive_storage_level_picks_by_size(spark, monkeypatch):
     """Adaptive materialize storage (VERDICT r3 item 1): small frames
     get deserialized memory (fast re-reads — the sf0.1 bench cost of
-    always-serialized was 1.8-2.4x on materialize-heavy queries),
+    always-serialized was 1.8-2.4x on materialize-heavy queries), and
     frames above the estimate threshold get the serialized level that
-    kept sf10 from OOMing, and an explicit conf always wins."""
-    from sparkplans.materialize import (
-        ADAPTIVE_BYTES_KEY,
-        STORAGE_KEY,
-        plan_size_bytes,
-        storage_level_key,
-    )
+    kept sf10 from OOMing."""
+    from sparkplans import materialize as M
+    from sparkplans.materialize import plan_size_bytes, storage_level_key
 
     df = spark.range(1000).withColumn("x", F.col("id") * 2)
     est = plan_size_bytes(df)
@@ -112,11 +108,9 @@ def test_adaptive_storage_level_picks_by_size(spark):
     assert storage_level_key(df) == "memory_deser"
 
     # shrink the threshold below the frame's estimate -> serialized
-    spark.conf.set(ADAPTIVE_BYTES_KEY, "1")
-    try:
+    with monkeypatch.context() as mp:
+        mp.setattr(M, "_ADAPTIVE_DEFAULT_BYTES", 1)
         assert storage_level_key(df) == "memory_ser"
-    finally:
-        spark.conf.unset(ADAPTIVE_BYTES_KEY)
 
     # row-multiplying plans (join/explode) shrink the threshold 64x:
     # Catalyst can't see their output multiplicity, so the estimate
@@ -132,31 +126,11 @@ def test_adaptive_storage_level_picks_by_size(spark):
             F.explode("a")
         )
     )
-    spark.conf.set(ADAPTIVE_BYTES_KEY, str((64 << 20)))
-    try:
-        assert storage_level_key(joined) == "memory_deser"  # tiny est
-        spark.conf.set(ADAPTIVE_BYTES_KEY, str(plan_size_bytes(joined) * 63))
-        # est > limit/64 -> serialized even though est < limit
-        assert storage_level_key(joined) == "memory_ser"
-    finally:
-        spark.conf.unset(ADAPTIVE_BYTES_KEY)
-
-    # explicit level overrides adaptivity in both directions
-    for forced in ("memory_ser", "disk", "memory_deser"):
-        spark.conf.set(STORAGE_KEY, forced)
-        try:
-            assert storage_level_key(df) == forced
-        finally:
-            spark.conf.unset(STORAGE_KEY)
-
-    # an explicit-but-invalid level (e.g. a typo) must fail loudly,
-    # not silently fall through to adaptive behavior
-    spark.conf.set(STORAGE_KEY, "memory-deser")
-    try:
-        with pytest.raises(ValueError, match="memory-deser"):
-            storage_level_key(df)
-    finally:
-        spark.conf.unset(STORAGE_KEY)
+    assert M._ADAPTIVE_DEFAULT_BYTES == 64 << 20
+    assert storage_level_key(joined) == "memory_deser"  # tiny est
+    monkeypatch.setattr(M, "_ADAPTIVE_DEFAULT_BYTES", plan_size_bytes(joined) * 63)
+    # est > limit/64 -> serialized even though est < limit
+    assert storage_level_key(joined) == "memory_ser"
 
 
 def test_engine_options_carry_the_flag():
@@ -168,6 +142,28 @@ def test_engine_options_carry_the_flag():
     assert conf[RELIABLE_FLAG] == "true"
     assert conf[DIR_KEY] == "/tmp/x"
     assert RELIABLE_FLAG not in EngineOptions().to_spark_conf()
+
+
+def test_package_reads_only_deployment_knobs():
+    """Ratchet: the only ``spark.sparkplans.*`` conf keys the package
+    knows are the two deployment settings (checkpoint durability and
+    location); every tuning threshold is a module constant, and no
+    join strategy rides a session-wide switch.  A new knob has to be
+    argued by editing this set."""
+    import ast
+    import pathlib
+    import re
+
+    import sparkplans
+    from sparkplans.session import EngineOptions
+
+    keys = set()
+    for path in pathlib.Path(sparkplans.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                keys.update(re.findall(r"spark\.sparkplans\.(\w+)", node.value))
+    assert keys == {"reliableCheckpoints", "checkpointDir"}, keys
+    assert "spark.sql.join.preferSortMergeJoin" not in EngineOptions().to_spark_conf()
 
 
 def test_observed_timeout_is_loud():

@@ -83,8 +83,8 @@ def test_scheduler_job_budget(spark, name):
     )
 
 
-def test_scheduler_job_budget_pagerank_shuffle_path(spark):
-    """The SHUFFLE pagerank path (|V| above pagerankBroadcastNodes —
+def test_scheduler_job_budget_pagerank_shuffle_path(spark, monkeypatch):
+    """The SHUFFLE pagerank path (|V| above _PAGERANK_BROADCAST_NODES —
     the plan at sf100-class graphs) gets its own job ratchet: it
     legitimately pays the one-time src re-layout plus a ranks-side
     shuffle per iteration over the broadcast shape (measured 52 at
@@ -99,19 +99,16 @@ def test_scheduler_job_budget_pagerank_shuffle_path(spark):
     from sparkplans import plans
 
     fn = Q.REGISTRY["pagerank_copurchase"].fn
-    spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
-    try:
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        assert (graph.last_run_stats or {}).get("path") == "shuffle"
-        # static plan contract matches the broadcast shape: the
-        # returned frame reads the final checkpoint, zero exchanges
-        assert plans.num_exchanges(df) == 0
-        before = next_job_id()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        used = next_job_id() - before
-    finally:
-        spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
+    monkeypatch.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
+    df = fn(spark, SF_DIR)
+    df.write.format("noop").mode("overwrite").save()
+    assert (graph.last_run_stats or {}).get("path") == "shuffle"
+    # static plan contract matches the broadcast shape: the
+    # returned frame reads the final checkpoint, zero exchanges
+    assert plans.num_exchanges(df) == 0
+    before = next_job_id()
+    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    used = next_job_id() - before
     assert used <= 34, (
         f"pagerank shuffle path: {used} scheduler jobs > budget 34 "
         "(measured 28 after the round-10 lazy iteration chain; was 52) "

@@ -141,14 +141,14 @@ def test_roc_auc_matches_numpy_rank_form(spark):
     assert 0.0 <= r.auc <= 1.0
 
 
-def test_decontamination_auto_routes_large_probe_off_driver(spark):
+def test_decontamination_auto_routes_large_probe_off_driver(spark, monkeypatch):
     """The r5 verdict flagged semantic_decontamination's unconditional
     driver collect of a corpus-proportional probe slice.  The route is
-    now automatic: above spark.sparkplans.decontamProbeBroadcastBytes
-    the probe set stays distributed and the plan switches to the
+    now automatic: above _DECONTAM_PROBE_BROADCAST_BYTES the probe set stays distributed and the plan switches to the
     exact probe-blocked cogroup (FlatMapCoGroupsInPandas + final max
     exchange); below it the broadcast-BLAS mapInPandas plan runs.
     Both routes must produce identical rows and stay oracle-green."""
+    from sparkplans.queries import mlprep
     from tests.oracle_harness import duck_connection, compare
 
     name = "semantic_decontamination"
@@ -163,16 +163,13 @@ def test_decontamination_auto_routes_large_probe_off_driver(spark):
     assert "FlatMapCoGroupsInPandas" not in plan_str()
     default_rows = sorted(map(tuple, spec.fn(spark, SF_DIR).collect()))
 
-    spark.conf.set("spark.sparkplans.decontamProbeBroadcastBytes", "1")
-    try:
-        # planted "large" probe set: the estimate now exceeds the
-        # (1-byte) threshold, so the route must flip off the driver
-        assert "FlatMapCoGroupsInPandas" in plan_str()
-        blocked_rows = sorted(map(tuple, spec.fn(spark, SF_DIR).collect()))
-        assert blocked_rows == default_rows
-        con = duck_connection(SF_DIR)
-        r = compare(spark, con, spec.fn, spec.oracle, SF_DIR)
-        con.close()
-        assert r["rows_match"] and r["schema_match"] and r["hash_match"], r
-    finally:
-        spark.conf.unset("spark.sparkplans.decontamProbeBroadcastBytes")
+    monkeypatch.setattr(mlprep, "_DECONTAM_PROBE_BROADCAST_BYTES", 1)
+    # planted "large" probe set: the estimate now exceeds the
+    # (1-byte) threshold, so the route must flip off the driver
+    assert "FlatMapCoGroupsInPandas" in plan_str()
+    blocked_rows = sorted(map(tuple, spec.fn(spark, SF_DIR).collect()))
+    assert blocked_rows == default_rows
+    con = duck_connection(SF_DIR)
+    r = compare(spark, con, spec.fn, spec.oracle, SF_DIR)
+    con.close()
+    assert r["rows_match"] and r["schema_match"] and r["hash_match"], r

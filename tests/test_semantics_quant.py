@@ -426,20 +426,18 @@ def test_psi_degenerate_extent_single_row(spark, tmp_path):
     assert row[0]["n_bins"] == 0
 
 
-def test_weighted_median_adaptive_paths_identical(spark):
+def test_weighted_median_adaptive_paths_identical(spark, monkeypatch):
     """The size-adaptive switch (naive window below
-    spark.sparkplans.medianTwoPhaseRows, two-phase bucket plan above)
-    must be invisible in the result: force each path at the same SF
-    and require identical rows."""
+    _MEDIAN_TWO_PHASE_ROWS, two-phase bucket plan above) must be
+    invisible in the result: force each path at the same SF and
+    require identical rows."""
     import sparkplans.queries as Q
+    from sparkplans.queries import quant
 
     fn = Q.REGISTRY["weighted_median_price"].fn
-    key = "spark.sparkplans.medianTwoPhaseRows"
-    try:
-        spark.conf.set(key, str(10**12))  # force naive window path
-        naive = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-        spark.conf.set(key, "1")  # force two-phase bucket path
-        two_phase = sorted(map(tuple, fn(spark, SF_DIR).collect()))
-    finally:
-        spark.conf.unset(key)
+    key = "_MEDIAN_TWO_PHASE_ROWS"
+    monkeypatch.setattr(quant, key, 10**12)  # force naive window path
+    naive = sorted(map(tuple, fn(spark, SF_DIR).collect()))
+    monkeypatch.setattr(quant, key, 1)  # force two-phase bucket path
+    two_phase = sorted(map(tuple, fn(spark, SF_DIR).collect()))
     assert naive == two_phase and len(naive) == 3

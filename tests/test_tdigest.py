@@ -264,3 +264,21 @@ def test_rollup_fused_bit_identical(spark):
         )
 
     assert canon(fused) == canon(unfused)
+
+
+def test_rollup_coarse_key_named_like_fine_key_rejected(spark):
+    """A coarse key named like a fine_cols entry would replace that
+    fine key through withColumn and fold at the wrong grain — the
+    rollup must reject it instead."""
+    import pytest
+
+    from sparkplans.operators.sketches import tdigest_rollup
+
+    df = _stream(spark, 100).select(
+        (F.col("id") % 14).cast("int").alias("day"), "x"
+    )
+    with pytest.raises(ValueError, match=r"coarse key\(s\) \['day'\] collide"):
+        tdigest_rollup(
+            df, "x", fine_cols=["day"],
+            coarse={"day": (F.col("day") % 7).cast("int")}, delta=DELTA,
+        )
