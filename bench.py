@@ -35,7 +35,10 @@ and absorbed one).
 The driver's stdout capture truncates long lines (BENCH_r06 recorded
 ``parsed: null`` on the 85-query map), so the printed line inlines
 only the calibration queries + top-20 slowest; the FULL per-query
-map is written to ``BENCH_full.json`` (committed per round).
+map, with every rep's wall, is written to a per-run file
+``BENCH_full_c<cpus>_<UTC timestamp>.json`` (committed per round) that
+a later run cannot overwrite; ``$SPARK_GRAFT_BENCH_FULL`` names the
+file instead.
 """
 
 from __future__ import annotations
@@ -296,11 +299,13 @@ def main() -> None:
             except OSError:
                 return None, None
 
+    rep_walls: dict[str, list[float]] = {}
+
     def _min_of(name: str, reps: int = 3) -> float:
         fn = Q.REGISTRY[name].fn
         # min of N runs: steady-state throughput, not JVM codegen
         # warmup or GC noise (run-to-run variance measured ~25%)
-        best = float("inf")
+        walls: list[float] = []
         runqs: list = []
         l1_first: float | None = None
         for r in range(reps):
@@ -310,9 +315,22 @@ def main() -> None:
             runqs.append(runq)
             t0 = time.perf_counter()
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
+            walls.append(round(time.perf_counter() - t0, 3))
         query_load[name] = {"load1m": l1_first, "runq": runqs}
-        return round(best, 3)
+        rep_walls[name] = walls
+        return min(walls)
+
+    # Idle runnable-task count: the median runq, sampled before any
+    # load.  /proc/loadavg counts the whole machine, so on a shared
+    # host the spike floor must sit above this standing demand, which
+    # no fixed count can.
+    idle_samples = []
+    for _ in range(10):
+        runq = _loadavg_sample()[1]
+        if runq is not None:
+            idle_samples.append(runq)
+        time.sleep(0.02)
+    idle_runq = sorted(idle_samples)[len(idle_samples) // 2] if idle_samples else 0
 
     # ---- calibration block (fixed, BEFORE the slate) ----
     cpu_vec, cpu_par, cpu_py = _cpu_calibration()
@@ -381,9 +399,10 @@ def main() -> None:
         # never fire (the driver's contended r9 run had cpu_par 3.2x
         # yet spike_queries=[]).  The absolute floor catches that
         # case: the sample is taken at a query boundary where the
-        # bench's own executor threads are parked, so a runnable
-        # count of cpus//4+ on EVERY rep is external demand.
-        abs_floor = max(4, cpus // 4)
+        # bench's own executor threads are mostly parked, so a
+        # runnable count of max(4, cpus//4) above the idle sample
+        # (the host's own standing demand) on EVERY rep is external.
+        abs_floor = idle_runq + max(4, cpus // 4)
         spike_queries = sorted(
             n for n, q in minrunq.items() if q > med + margin or q > abs_floor
         )
@@ -395,9 +414,9 @@ def main() -> None:
 
     # Full per-query map -> sibling artifact (the driver's stdout
     # capture truncates long lines); printed line stays small.
-    full_path = os.environ.get(
-        "SPARK_GRAFT_BENCH_FULL",
-        os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_full.json"),
+    full_path = os.environ.get("SPARK_GRAFT_BENCH_FULL") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)),
+        f"BENCH_full_c{cpus}_{time.strftime('%Y%m%dT%H%M%SZ', time.gmtime())}.json",
     )
     full = {
         "metric": "headline_queries_total_runtime",
@@ -411,6 +430,8 @@ def main() -> None:
         "contended": contended,
         "load": load,
         "query_load": query_load,
+        "idle_runq": idle_runq,
+        "rep_walls": rep_walls,
         "spike_queries": spike_queries,
         "reps": 3,
         "reps_anchor": reps_anchor,
@@ -433,7 +454,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 # top-20 slowest + the scan anchor; full 85-query map
-                # in BENCH_full.json
+                # in the full map file ("full")
                 "queries": top,
                 "sf": sf,
                 "n_queries": len(timings),
@@ -455,7 +476,7 @@ def main() -> None:
                 # queries whose every rep started under a runnable-
                 # task spike (min(runq) > slate median + cpus/2) —
                 # exclude these from cross-round per-query ratios;
-                # full per-query samples live in BENCH_full.json
+                # full per-query samples live in the full map file
                 "spike_queries": spike_queries,
                 "reps": 3,
                 "reps_anchor": reps_anchor,

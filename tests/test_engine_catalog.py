@@ -303,6 +303,144 @@ def test_fan_out_small_file_yes_many_files_no(spark, tmp_path):
     assert same is multi  # not even a new plan node
 
 
+def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch):
+    """sources.load_table infers a table's parquet schema once and
+    re-reads it with the schema passed in: a warm load launches no
+    Spark job.  The memo is keyed on the directory listing (a rewrite
+    is re-inferred) and on the session's inference confs; a
+    partitioned directory always goes through inference."""
+    import itertools
+    import os
+    import shutil
+
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    from sparkplans import sources
+    from tests.conftest import SF_DIR
+
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs_of(fn):
+        group = f"schema-memo-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    sf = str(tmp_path / "sf")
+    table = f"{sf}/t.parquet"
+    spark.range(20).selectExpr("id", "id * 2 AS v").coalesce(2).write.parquet(table)
+    first, _ = jobs_of(lambda: sources.load_table(spark, sf, "t"))
+    second, jobs = jobs_of(lambda: sources.load_table(spark, sf, "t"))
+    assert jobs == 0
+    assert second.schema == first.schema
+    assert sorted(second.collect()) == sorted(first.collect())
+
+    # rewritten with an extra column: the new listing is re-inferred
+    spark.range(5).selectExpr("id", "id * 2 AS v", "id * 3 AS w").write.mode(
+        "overwrite"
+    ).parquet(table)
+    rewritten = sources.load_table(spark, sf, "t")
+    assert rewritten.columns == ["id", "v", "w"]
+    assert sorted(r.w for r in rewritten.collect()) == [0, 3, 6, 9, 12]
+
+    # nanosAsLong is part of the key: each setting gets its own entry,
+    # typed as that setting infers it
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    ev_sf = str(tmp_path / "ev")
+    ev_path = f"{ev_sf}/events.parquet"
+    os.makedirs(ev_sf)
+    shutil.copy(f"{SF_DIR}/events.parquet", ev_path)
+    monkeypatch.setattr(sources, "_ensure_nanos_conf", lambda spark: None)
+    try:
+        for flag in ("true", "false"):
+            spark.conf.set(nanos, flag)
+            raw = spark.read.parquet(ev_path).schema["ts"].dataType
+            want = TimestampNTZType() if raw == LongType() else raw
+            events, jobs = jobs_of(lambda: sources.load_table(spark, ev_sf, "events"))
+            assert jobs >= 1, flag
+            assert events.schema["ts"].dataType == want, flag
+    finally:
+        spark.conf.set(nanos, "true")
+
+    # a partitioned directory (key=value/ subdirectories) is not memoized
+    spark.range(10).selectExpr("id", "id % 2 AS key").write.partitionBy(
+        "key"
+    ).parquet(f"{sf}/p.parquet")
+    for _ in range(2):
+        parted, jobs = jobs_of(lambda: sources.load_table(spark, sf, "p"))
+        assert jobs >= 1
+    assert sorted(parted.columns) == ["id", "key"]
+
+
+def test_schema_memo_concurrent_readers(tmp_path, monkeypatch):
+    """The process-wide schema memo is shared by concurrent sessions:
+    under many threads and a tiny bound it never outgrows the bound
+    and never hands a table another table's schema."""
+    import os
+    import sys
+    import threading
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from sparkplans import sources
+
+    def schema_of(path):
+        return StructType([StructField(os.path.basename(path), LongType())])
+
+    class FakeReader:
+        def __init__(self, schema=None):
+            self._schema = schema
+
+        def schema(self, s):
+            return FakeReader(s)
+
+        def parquet(self, path):
+            return SimpleNamespace(schema=self._schema or schema_of(path))
+
+    fake = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key, default=None: "false"),
+        read=FakeReader(),
+    )
+    paths = []
+    for i in range(40):
+        p = tmp_path / f"t{i}.parquet"
+        p.write_bytes(b"x")
+        paths.append(str(p))
+    bound = 8
+    monkeypatch.setattr(sources, "_SCHEMA_MEMO_ENTRIES", bound)
+    monkeypatch.setattr(sources, "_schema_memo", OrderedDict())
+    errors = []
+
+    def reader(seed):
+        try:
+            for k in range(300):
+                path = paths[(seed * 7 + k) % len(paths)]
+                assert sources._read_parquet(fake, path).schema == schema_of(path)
+                with sources._schema_memo_lock:
+                    assert len(sources._schema_memo) <= bound
+        except BaseException as e:  # noqa: BLE001 - surfaced below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=reader, args=(s,)) for s in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors[0]
+
+
 def test_orc_external_table_roundtrip(eng, spark, tmp_path):
     """ORC is a first-class external-table format: same catalog path
     (WITH ORDER metadata, temp-view registration) as parquet."""

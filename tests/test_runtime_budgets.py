@@ -83,6 +83,37 @@ def test_scheduler_job_budget(spark, name):
     )
 
 
+def test_warm_rerun_compiles_no_class(spark):
+    """The session's codegen cache holds a repeated query set whose
+    generated classes outnumber Spark's default 100 entries (about 138
+    here): the second run compiles nothing.  At 100 entries every warm
+    run recompiled them all."""
+    names = [
+        "pagerank_copurchase",
+        "tdigest_price_quantiles",
+        "tdigest_weekly_rollup",
+        "dsir_importance_weights",
+    ]
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def compiles() -> int:
+        return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+    def run_all() -> None:
+        for name in names:
+            Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+
+    run_all()
+    before = compiles()
+    run_all()
+    assert compiles() == before, (
+        f"warm rerun compiled {compiles() - before} classes: the codegen "
+        "cache evicts between runs (spark.sql.codegen.cache.maxEntries)"
+    )
+
+
 def test_scheduler_job_budget_pagerank_shuffle_path(spark, monkeypatch):
     """The SHUFFLE pagerank path (|V| above _PAGERANK_BROADCAST_NODES —
     the plan at sf100-class graphs) gets its own job ratchet: it
