@@ -97,10 +97,9 @@ extra.update(json.loads(os.environ.get("SPARK_GRAFT_EXTRA_CONF", "{}")))
 opts = EngineOptions(
     target_partitions=cpus,
     # executor python workers resolve sparkplans/ by module reference
-    # when unpickling Arrow-UDF closures — ship the path explicitly
-    # (in local mode the worker inherits the driver's sys.path; in
-    # local-cluster it does NOT: this line is itself part of the
-    # process-boundary evidence)
+    # when unpickling Arrow-UDF closures.  build_session ships the
+    # package root itself on local and local-cluster masters; the
+    # spark:// masters of daemon_cluster_proof.py need it from here
     extra_conf=extra,
 )
 spark = build_session(opts, app_name="cluster-proof", master=master)

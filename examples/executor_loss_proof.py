@@ -55,7 +55,6 @@ from sparkplans.materialize import DIR_KEY, RELIABLE_FLAG, materialize
 from pyspark.sql import functions as F
 
 extra = {
-    "spark.executorEnv.PYTHONPATH": repo,
     # fail fast instead of retrying the dead fetch for minutes
     "spark.task.maxFailures": "2",
     "spark.stage.maxConsecutiveAttempts": "2",

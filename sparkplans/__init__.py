@@ -19,24 +19,33 @@ Public surface::
     eng.explain(df, mode="analyze")      # plan inspection surface
 """
 
-from sparkplans.session import EngineOptions, build_session, configure_session
-from sparkplans.ordering import SortKey, normalize_sort_keys, ordering_satisfies
-from sparkplans.catalog import Catalog, TableSpec
-from sparkplans.engine import Engine, OrderedFrame
-from sparkplans import plans
+import importlib
 
-__all__ = [
-    "Engine",
-    "EngineOptions",
-    "OrderedFrame",
-    "Catalog",
-    "TableSpec",
-    "SortKey",
-    "normalize_sort_keys",
-    "ordering_satisfies",
-    "build_session",
-    "configure_session",
-    "plans",
-]
+# Public name -> defining submodule, imported on first access (PEP 562):
+# ``python -m sparkplans.worker_daemon`` runs this file first and must
+# choose which pyspark to load before anything imports it.  ``plans``
+# is the submodule itself.
+_EXPORTS = {
+    "Engine": "engine",
+    "OrderedFrame": "engine",
+    "EngineOptions": "session",
+    "build_session": "session",
+    "configure_session": "session",
+    "Catalog": "catalog",
+    "TableSpec": "catalog",
+    "SortKey": "ordering",
+    "normalize_sort_keys": "ordering",
+    "ordering_satisfies": "ordering",
+    "plans": "plans",
+}
+
+__all__ = list(_EXPORTS)
 
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name not in _EXPORTS:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    module = importlib.import_module(f"{__name__}.{_EXPORTS[name]}")
+    return module if name == _EXPORTS[name] else getattr(module, name)

@@ -144,6 +144,10 @@ class Catalog:
                 f"(have {df.columns})"
             )
         df.createOrReplaceTempView(name)
+        # Infer once, at CREATE time: later reads pass the schema in
+        # and launch no inference job.
+        if spec.schema is None:
+            spec.schema = df.schema
         return spec
 
     def create_table(
@@ -290,13 +294,10 @@ class Catalog:
 
         spec = self._tables[name]
         files = self.prune_files(name, col, lo, hi)
-        spec2 = spec
-        if spec.schema is None:
-            spec2 = TableSpec(**{**spec.__dict__, "schema": self._reader(spec).parquet(spec.files[0]).schema if spec.fmt == "parquet" else self._read_path(spec, spec.files[0]).schema})
         if not files:
-            df = self.spark.createDataFrame([], spec2.schema)
-        elif spec.partition_per_file or len(files) < len(spec2.files):
-            dfs = [self._read_path(spec2, f) for f in files]
+            df = self.spark.createDataFrame([], spec.schema)
+        elif spec.partition_per_file or len(files) < len(spec.files):
+            dfs = [self._read_path(spec, f) for f in files]
             df = reduce(lambda a, b: a.unionByName(b), dfs)
         else:
             df = self.read(name)

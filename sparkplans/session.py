@@ -31,6 +31,28 @@ pass is 211 MB against 201 MB.  It is a *static* conf: only
 already-running session (the ``__spark_entry__`` path, handed a
 session built elsewhere) cannot, and that session keeps whatever
 cache size it was started with.
+
+Python workers: on ``local`` and ``local-cluster`` masters
+:func:`build_session` sets ``spark.python.daemon.module`` to
+:mod:`sparkplans.worker_daemon` and puts the package root first on
+``spark.executorEnv.PYTHONPATH``.  Spark puts ``pyspark.zip``, the
+py4j zip and the ``spark-core`` jar ahead of site-packages on every
+worker's path, and every Python task calls
+``importlib.invalidate_caches()``, which makes each cached
+``zipimporter`` re-read its whole archive (1328 entries for
+``pyspark.zip``); a zip also holds no bytecode, so each daemon
+compiles pyspark from source.  The daemon module switches the workers
+to the installed pyspark only when it is the same release: equal
+``version.py`` and every shipped ``.py`` file CRC-identical to the
+archive's, py4j likewise; on any mismatch Spark's own path runs.
+Measured on four cores (``local[4]``, one session each way, warm
+stages over 4 rows, median of 6): a ``mapInPandas`` stage 0.43 s ->
+0.20 s and an ``rdd.map`` stage 0.31 s -> 0.13 s, against 0.21-0.25 s
+for a JVM aggregate; the session's first plain-RDD job 1.31 s ->
+0.51 s.  Other masters keep Spark's daemon, since their workers may
+not see this host's package or site-packages.  Both keys are static:
+:func:`configure_session` cannot apply them, so a session built
+elsewhere (the ``__spark_entry__`` path) keeps the zip path.
 """
 
 from __future__ import annotations
@@ -44,6 +66,9 @@ from sparkplans.materialize import DIR_KEY, RELIABLE_FLAG
 
 # Generated-class cache entries (static conf; see the module docstring).
 _CODEGEN_CACHE_ENTRIES = 4096
+# The directory that holds the ``sparkplans`` package: Python workers
+# must find ``sparkplans.worker_daemon`` from any working directory.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_parallelism() -> int:
@@ -147,6 +172,23 @@ def configure_session(spark: SparkSession, options: EngineOptions | None = None)
     return spark
 
 
+def _worker_daemon_conf(master: str, pythonpath: str | None = None) -> dict[str, str]:
+    """Static worker confs that run Python workers on the installed
+    pyspark (see the module docstring): only for ``local`` and
+    ``local-cluster`` masters, whose executors share this host's
+    package root.  *pythonpath* is any ``spark.executorEnv.PYTHONPATH``
+    already asked for; the package root goes in front of it."""
+    if not master.startswith("local"):
+        return {}
+    paths = [_PACKAGE_ROOT] + [
+        p for p in (pythonpath or "").split(os.pathsep) if p and p != _PACKAGE_ROOT
+    ]
+    return {
+        "spark.python.daemon.module": "sparkplans.worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(paths),
+    }
+
+
 def build_session(
     options: EngineOptions | None = None,
     app_name: str = "sparkplans",
@@ -156,8 +198,10 @@ def build_session(
     master = master or os.environ.get(
         "SPARK_GRAFT_MASTER", f"local[{_default_parallelism()}]"
     )
+    conf = options.to_spark_conf()
+    conf.update(_worker_daemon_conf(master, conf.get("spark.executorEnv.PYTHONPATH")))
     builder = SparkSession.builder.appName(app_name).master(master)
-    for k, v in options.to_spark_conf().items():
+    for k, v in conf.items():
         builder = builder.config(k, v)
     builder = builder.config("spark.ui.enabled", "false")
     builder = builder.config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))

@@ -1,6 +1,8 @@
 """Catalog + order-aware engine tests over reference-shaped fixtures
 (mirrors tests/setup_tables.rs registration + golden behaviour)."""
 
+import itertools
+
 import duckdb
 import pytest
 
@@ -303,13 +305,27 @@ def test_fan_out_small_file_yes_many_files_no(spark, tmp_path):
     assert same is multi  # not even a new plan node
 
 
+_JOB_GROUPS = itertools.count()
+
+
+def _jobs_of(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-of-{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch):
     """sources.load_table infers a table's parquet schema once and
     re-reads it with the schema passed in: a warm load launches no
     Spark job.  The memo is keyed on the directory listing (a rewrite
     is re-inferred) and on the session's inference confs; a
     partitioned directory always goes through inference."""
-    import itertools
     import os
     import shutil
 
@@ -318,23 +334,11 @@ def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch):
     from sparkplans import sources
     from tests.conftest import SF_DIR
 
-    sc = spark.sparkContext
-    groups = itertools.count()
-
-    def jobs_of(fn):
-        group = f"schema-memo-{next(groups)}"
-        sc.setJobGroup(group, group)
-        try:
-            out = fn()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
     sf = str(tmp_path / "sf")
     table = f"{sf}/t.parquet"
     spark.range(20).selectExpr("id", "id * 2 AS v").coalesce(2).write.parquet(table)
-    first, _ = jobs_of(lambda: sources.load_table(spark, sf, "t"))
-    second, jobs = jobs_of(lambda: sources.load_table(spark, sf, "t"))
+    first, _ = _jobs_of(spark, lambda: sources.load_table(spark, sf, "t"))
+    second, jobs = _jobs_of(spark, lambda: sources.load_table(spark, sf, "t"))
     assert jobs == 0
     assert second.schema == first.schema
     assert sorted(second.collect()) == sorted(first.collect())
@@ -360,7 +364,7 @@ def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch):
             spark.conf.set(nanos, flag)
             raw = spark.read.parquet(ev_path).schema["ts"].dataType
             want = TimestampNTZType() if raw == LongType() else raw
-            events, jobs = jobs_of(lambda: sources.load_table(spark, ev_sf, "events"))
+            events, jobs = _jobs_of(spark, lambda: sources.load_table(spark, ev_sf, "events"))
             assert jobs >= 1, flag
             assert events.schema["ts"].dataType == want, flag
     finally:
@@ -371,7 +375,7 @@ def test_load_table_infers_schema_once(spark, tmp_path, monkeypatch):
         "key"
     ).parquet(f"{sf}/p.parquet")
     for _ in range(2):
-        parted, jobs = jobs_of(lambda: sources.load_table(spark, sf, "p"))
+        parted, jobs = _jobs_of(spark, lambda: sources.load_table(spark, sf, "p"))
         assert jobs >= 1
     assert sorted(parted.columns) == ["id", "key"]
 
@@ -543,3 +547,37 @@ def test_target_partitions_rejects_declared_order(eng, fixture_dirs):
             "dim_bad", fixture_dirs["dim"], format="parquet",
             with_order=["env"], target_partitions=4,
         )
+
+
+def test_external_table_schema_inferred_once(eng, spark, tmp_path):
+    """``write_sorted(register_as=...)`` registers a table with no
+    declared schema.  The catalog infers it once, at CREATE time, and
+    records it on the TableSpec: later ``engine.table`` and
+    ``read_range`` calls pass it in and launch no Spark job.  Each of
+    them used to run one inference job, every time."""
+    from pyspark.sql import functions as F
+
+    from sparkplans import sinks
+
+    path = str(tmp_path / "ranged")
+    src = spark.range(300).selectExpr("id", "id % 7 AS v")
+    spec = sinks.write_sorted(
+        src, path, order_by=["id"], num_files=3, catalog=eng.catalog, register_as="ranged"
+    )
+    assert spec.schema is not None and spec.schema.names == ["id", "v"]
+    try:
+        for _ in range(2):
+            frame, jobs = _jobs_of(spark, lambda: eng.table("ranged").df)
+            assert jobs == 0
+            assert frame.schema == spec.schema
+            pruned, jobs = _jobs_of(spark, lambda: eng.read_range("ranged", "id", 120, 140).df)
+            assert jobs == 0
+        assert sorted(r.id for r in pruned.collect()) == list(range(120, 141))
+        assert sorted(eng.table("ranged").df.collect()) == sorted(src.collect())
+        empty, jobs = _jobs_of(spark, lambda: eng.read_range("ranged", "id", -9, -1).df)
+        assert jobs == 0 and empty.schema == spec.schema
+        assert eng.read_range("ranged", "id", 0, 10).df.agg(F.sum("v")).first()[0] == sum(
+            i % 7 for i in range(11)
+        )
+    finally:
+        eng.catalog.drop("ranged")

@@ -37,6 +37,34 @@ SLATE = [
 ]
 
 
+def test_local_cluster_python_udf_smoke():
+    """Default-lane smoke of the heavy cluster gate: one Python-UDF
+    query hash-identical on ``local[2]`` and ``local-cluster[2,1,1024]``.
+    The cluster's executors are separate JVMs whose working directory
+    is Spark's work dir, not the repo, so their Python workers can
+    start ``sparkplans.worker_daemon`` only from the package root that
+    ``build_session`` puts on ``spark.executorEnv.PYTHONPATH``; if they
+    cannot, the query fails."""
+    proc = subprocess.run(
+        [
+            sys.executable,
+            os.path.join(REPO, "examples", "cluster_proof.py"),
+            "/root/testdata/sf0.001",
+            "local-cluster[2,1,1024]",
+            "pca_whitening",
+        ],
+        capture_output=True,
+        text=True,
+        timeout=600,
+        env=dict(os.environ, SPARK_GRAFT_CPUS="2"),
+        cwd=REPO,
+    )
+    assert proc.returncode == 0, (
+        f"cluster smoke failed:\n{proc.stdout[-3000:]}\n{proc.stderr[-2000:]}"
+    )
+    assert "ok   pca_whitening" in proc.stdout, proc.stdout[-3000:]
+
+
 @pytest.mark.heavy
 def test_local_cluster_hash_identical():
     env = dict(os.environ, SPARK_GRAFT_CPUS="4")
