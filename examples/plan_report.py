@@ -43,17 +43,14 @@ def main() -> None:
         "",
         f"Generated by `examples/plan_report.py` at `{sf_dir}` "
         "(pre-AQE physical plans; broadcasts are not exchanges).",
-        "Exchange budgets are enforced by `tests/test_shuffle_budgets.py`;",
-        "`python_stages` is 0 everywhere by the no-Python-hot-path gate",
-        "(`test_no_python_in_any_query_hot_path`), except that gate's",
-        "python-by-design allowlist — the media codec pipelines",
-        "(`multimodal_*`, `video_shot_boundaries`, `audio_vad_segments`),",
-        "the `tdigest_*` sketch builds (a sketch IS per-partition",
-        "imperative state; counts are static plan-text appearances —",
-        "ReuseExchange collapses the duplicated digest subtrees at",
-        "runtime), `ffd_sequence_packing` (sequential bin-packing",
-        "decisions), and the matmul-batched scorers",
-        "(`embedding_near_dups`, `semantic_decontamination`).",
+        "Each query declares its exchange budget where it is registered",
+        "(`exchanges=` in `sparkplans/queries/`, checked by",
+        "`tests/test_shuffle_budgets.py`).  `python` counts Python exec",
+        "nodes in the plan text (a Python stage inside a materialized cut",
+        "is not visible); it is 0 by the no-Python-hot-path gate except",
+        "for the queries registered `python=True`: "
+        + ", ".join(f"`{n}`" for n in sorted(Q.REGISTRY) if Q.REGISTRY[n].python)
+        + ".",
         "",
         "| query | exchanges | broadcasts | sorts | python | join strategies |",
         "|---|---|---|---|---|---|",

@@ -189,7 +189,9 @@ def materialize_lazy(df: DataFrame) -> DataFrame:
     materialization action itself: an ``observe()`` metric collected
     right after (pagerank, connected_components), a wall-clock probe
     timing the materialization, or a ``release()`` of a superseded
-    frame that must not be dropped before its replacement is built.
+    frame that the deferred final stage still reads.  (Building a lazy
+    cut already runs its shuffle and broadcast stages under AQE, so a
+    frame read only through those is dead once the cut is built.)
     Under ``spark.sparkplans.reliableCheckpoints=true`` this is
     equivalent to eager: a lazy reliable checkpoint would recompute
     its whole lineage a second time to write the checkpoint files

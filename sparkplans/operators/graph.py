@@ -114,13 +114,15 @@ def pagerank(
 
     Memory envelope of the broadcast default (8M nodes): a rank frame
     is (long node, double rank) ~= 16 B/row + row overhead, so one
-    broadcast is ~128-200 MiB serialized at the threshold.  Broadcast
-    blocks from finished iterations are reclaimed by Spark's
-    ContextCleaner once the driver GCs the plan references — each
-    iteration here is eagerly materialized (localCheckpoint) and the
-    previous ``ranks`` local is rebound, so at most a couple of
-    iterations' blocks are live between GC cycles (<~0.5 GiB at the
-    default; executors additionally keep one block each).  Above the
+    broadcast is ~128-200 MiB serialized at the threshold.  Rank cuts
+    are released by the operator: each superseded cut is unpersisted
+    as soon as the next iteration's cut is built, eager or lazy, so at
+    most two cuts hold blocks at once and the call leaves only the
+    returned one.  Broadcast blocks are not: Spark's ContextCleaner
+    reclaims a finished iteration's once the driver GCs its plan
+    references, so a couple of iterations' broadcasts can be live
+    between GC cycles (<~0.5 GiB at the default; executors
+    additionally keep one block each).  Above the
     threshold the shuffle path costs one extra exchange per iteration
     but holds no |V|-row broadcast at all; ``last_run_stats`` reports
     the threshold as ``broadcast_limit``.
@@ -136,7 +138,7 @@ def pagerank(
       scheduler jobs per iteration, the dominant cost on a busy
       driver (per-job overhead ~0.1 s at sf0.1 on a loaded host).
     * superseded rank frames are released as soon as the next
-      iteration materializes (slim |V|-row frames, but 10 iterations
+      iteration's cut is built (slim |V|-row frames, but 10 iterations
       × 8M nodes would otherwise hold ~2 GiB of dead cache).
     """
     # The raw edge derivation (often the single most expensive stage
@@ -290,7 +292,6 @@ def pagerank(
     iteration_secs: list[float] = []
     iter_exchanges: list[str] | None = None
     iter_sorts: list[str] | None = None
-    stale: list[DataFrame] = []
     for i in range(iterations):
         t_iter = _time.perf_counter()
         rank_side = ranks.select("node", "rank")
@@ -331,14 +332,11 @@ def pagerank(
         if no_dangling:
             last = i == iterations - 1
             # last iteration EAGER: it executes the deferred chain
-            # while the corpus caches are still alive; the superseded
-            # frames' blocks (written incrementally by each next
-            # iteration's first-consumer job) are then released in one
-            # sweep below.  materialize_lazy (not eager=False) so a
-            # reliable-checkpoint session keeps its eager barrier —
-            # a lazy reliable checkpoint replays its lineage twice.
+            # while the corpus caches are still alive.
+            # materialize_lazy (not eager=False) so a reliable-
+            # checkpoint session keeps its eager barrier — a lazy
+            # reliable checkpoint replays its lineage twice.
             ranks = materialize(update) if last else materialize_lazy(update)
-            stale.append(prev)
         else:
             # the dangling mass rides the checkpoint action as an
             # observed metric (CollectMetrics accumulates while the
@@ -363,10 +361,12 @@ def pagerank(
                 dm = ranks.filter(F.col("outdeg").isNull()).agg(
                     F.coalesce(F.sum("rank"), F.lit(0.0))
                 ).collect()[0][0]
-            release(prev)  # 10 iterations of dead |V|-row cache add up
-        iteration_secs.append(round(_time.perf_counter() - t_iter, 3))
-    for prev in stale:
+        # 10 iterations of dead |V|-row cache add up.  prev is dead even
+        # behind a lazy cut: building one runs its broadcast/shuffle
+        # stages (AQE materializes query stages before the final RDD
+        # exists), and those are prev's only reads
         release(prev)
+        iteration_secs.append(round(_time.perf_counter() - t_iter, 3))
     last_run_stats = {
         "path": "broadcast" if use_bcast else "shuffle",
         "n_nodes": n_total,
@@ -490,11 +490,13 @@ def label_propagation(
                 }
             except Exception:
                 pass
+        prev = labels
         labels = (
             materialize(update)
             if i == iterations - 1
             else materialize_lazy(update)
         )
+        release(prev)  # read only by the new cut's exchange (see pagerank)
     # labels is a self-contained checkpoint; the corpus cache entry
     # would otherwise outlive the call (CacheManager holds it)
     release(e)

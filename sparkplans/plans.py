@@ -237,15 +237,23 @@ def num_reused_exchanges(df: DataFrame) -> int:
     return max(pre, post)
 
 
+# Every concrete Python exec node of Spark 4.1 (sql/execution/python):
+# scalar UDFs and UDTFs, grouped/window aggregate UDFs, map/group/
+# cogroup functions over pandas or Arrow batches, and stateful groups.
+_PYTHON_NODES = re.compile(
+    r"\b(?:BatchEvalPython|ArrowEvalPython)(?:UDTF)?\b"
+    r"|\bArrow(?:Aggregate|Window)Python\b"
+    r"|\b(?:MapIn|FlatMapGroupsIn|FlatMapCoGroupsIn)(?:Pandas|Arrow)\b"
+    r"|\bFlatMapGroupsInPandasWithState\b"
+    r"|\bTransformWithStateInPySpark\b"
+)
+
+
 def num_python_stages(df: DataFrame) -> int:
-    """Count stages that leave the JVM (row-at-a-time or Arrow-batched
-    Python).  0 for every registered query's hot path — the global
-    gate in tests/test_plan_properties.py."""
-    plan = _plan_for_matching(df)
-    return sum(
-        len(re.findall(marker, plan))
-        for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow")
-    )
+    """Count plan nodes that leave the JVM (row-at-a-time or
+    Arrow-batched Python).  0 for every registered query not declared
+    ``python=True`` — the global gate in tests/test_plan_properties.py."""
+    return len(_PYTHON_NODES.findall(_plan_for_matching(df)))
 
 
 def audit(df: DataFrame) -> dict:

@@ -63,29 +63,54 @@ from sparkplans.materialize import materialize, materialize_lazy
 
 @dataclass
 class QuerySpec:
+    """One registered query and its whole plan contract, declared where
+    the query is registered (tests/test_shuffle_budgets.py,
+    tests/test_runtime_budgets.py and the no-Python gate in
+    tests/test_plan_properties.py loop over ``REGISTRY`` and read it).
+
+    ``exchanges`` is the ratcheted maximum of EXECUTED shuffle exchanges
+    in the pre-AQE physical plan at sf0.001 (``plans.num_exchanges``:
+    broadcasts excluded, canonically-identical exchanges counted once).
+    ``jobs`` caps the scheduler jobs of one warm run, for the iterative
+    queries whose job count (plan shape x iteration count, not data
+    size) is the cost that matters.  ``python`` marks a query whose plan
+    leaves the JVM by design; any other query with a Python stage fails
+    the gate.  Each is a ratchet: lowering one is an optimization,
+    raising one must be argued beside it."""
+
     fn: Callable[[SparkSession, str], DataFrame]
     oracle: str | None  # DuckDB SQL, None => rows-only check
+    exchanges: int
+    jobs: int | None = None
+    python: bool = False
 
 
 REGISTRY: dict[str, QuerySpec] = {}
 
 
-def register(name: str, oracle: str | None):
+def register(
+    name: str,
+    oracle: str | None,
+    *,
+    exchanges: int,
+    jobs: int | None = None,
+    python: bool = False,
+):
     def deco(fn):
-        REGISTRY[name] = QuerySpec(fn, oracle)
+        REGISTRY[name] = QuerySpec(fn, oracle, exchanges, jobs, python)
         return fn
 
     return deco
 
 
-def _shared_sql(name: str, sql: str) -> None:
+def _shared_sql(name: str, sql: str, *, exchanges: int) -> None:
     """Register a query whose Spark and DuckDB text are identical."""
 
     def fn(spark: SparkSession, sf_dir: str, _sql=sql) -> DataFrame:
         _register_needed_views(spark, sf_dir, _sql)
         return spark.sql(_sql)
 
-    REGISTRY[name] = QuerySpec(fn, sql)
+    REGISTRY[name] = QuerySpec(fn, sql, exchanges)
 
 
 _ALL_TABLES = (
@@ -165,6 +190,7 @@ def _t_cpu(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 @register(
     "scan_order",
     "SELECT n_nationkey, n_name, n_regionkey FROM nation ORDER BY n_nationkey",
+    exchanges=1,
 )
 def q_scan_order(spark, sf_dir):
     """Full scan + ORDER BY (docs/4 sort cases).  Tiny table; at scale
@@ -178,6 +204,7 @@ def q_scan_order(spark, sf_dir):
     "filter_pushdown",
     "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice FROM lineitem "
     "WHERE l_quantity > 45 AND l_returnflag = 'R'",
+    exchanges=0,
 )
 def q_filter_pushdown(spark, sf_dir):
     """Predicate reaches the parquet scan (PushedFilters) — the
@@ -191,6 +218,7 @@ def q_filter_pushdown(spark, sf_dir):
 @register(
     "projection_pushdown",
     "SELECT o_orderkey, o_totalprice FROM orders",
+    exchanges=0,
 )
 def q_projection_pushdown(spark, sf_dir):
     """Column pruning: ReadSchema shows only two columns
@@ -202,6 +230,7 @@ def q_projection_pushdown(spark, sf_dir):
     "topk",
     "SELECT o_orderkey, o_custkey, o_totalprice FROM orders "
     "ORDER BY o_totalprice DESC, o_orderkey LIMIT 10",
+    exchanges=0,
 )
 def q_topk(spark, sf_dir):
     """ORDER BY + LIMIT fuses into TakeOrderedAndProject — no global
@@ -223,6 +252,7 @@ def q_topk(spark, sf_dir):
 @register(
     "agg_count_star",
     "SELECT o_orderstatus, count(*) AS cnt FROM orders GROUP BY o_orderstatus",
+    exchanges=1,
 )
 def q_agg_count_star(spark, sf_dir):
     """Single group-by count (docs/7:4-12); partial+final two-phase
@@ -252,12 +282,14 @@ _shared_sql(
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
+    exchanges=2,
 )
 
 _shared_sql(
     "distinct_agg",
     "SELECT l_returnflag, count(DISTINCT l_partkey) AS distinct_parts, "
     "count(DISTINCT l_suppkey) AS distinct_supps FROM lineitem GROUP BY l_returnflag",
+    exchanges=2,
 )
 
 _shared_sql(
@@ -265,6 +297,7 @@ _shared_sql(
     "SELECT l_returnflag, l_linestatus, count(*) AS cnt, "
     "CAST(sum(CAST(l_quantity AS DECIMAL(8,2))) AS DOUBLE) AS sum_qty "
     "FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)",
+    exchanges=1,
 )
 
 _shared_sql(
@@ -272,12 +305,14 @@ _shared_sql(
     "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt, "
     "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price "
     "FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)",
+    exchanges=1,
 )
 
 _shared_sql(
     "grouping_sets_agg",
     "SELECT o_orderstatus, o_orderpriority, count(*) AS cnt "
     "FROM orders GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())",
+    exchanges=1,
 )
 
 _shared_sql(
@@ -287,6 +322,7 @@ _shared_sql(
     "CAST(sum(CASE WHEN l_discount > 0.05 THEN CAST(l_extendedprice AS DECIMAL(18,2)) ELSE CAST(0 AS DECIMAL(18,2)) END) AS DOUBLE) AS discounted_price, "
     "count(*) FILTER (WHERE l_tax > 0.04) AS high_tax_rows "
     "FROM lineitem GROUP BY l_linestatus",
+    exchanges=1,
 )
 
 
@@ -300,6 +336,7 @@ _shared_sql(
     "SELECT s_name, count(*) AS cnt, CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS revenue "
     "FROM lineitem JOIN supplier ON l_suppkey = s_suppkey "
     "GROUP BY s_name",
+    exchanges=1,
 )
 def q_broadcast_join_agg(spark, sf_dir):
     """Small dim broadcast — the reference's CollectLeft hash join
@@ -322,6 +359,7 @@ def q_broadcast_join_agg(spark, sf_dir):
     "SELECT o_orderkey, o_totalprice, l_linenumber, l_quantity "
     "FROM orders JOIN lineitem ON o_orderkey = l_orderkey "
     "WHERE o_totalprice > 400000",
+    exchanges=2,
 )
 def q_merge_join(spark, sf_dir):
     """Sort-merge join via hint — the reference's 'More Advanced Join'
@@ -339,6 +377,7 @@ def q_merge_join(spark, sf_dir):
     "SELECT c_custkey, c_name, o_orderkey, o_totalprice "
     "FROM customer JOIN orders ON c_custkey = o_custkey "
     "WHERE o_orderstatus = 'F'",
+    exchanges=2,
 )
 def q_shuffle_hash_join(spark, sf_dir):
     """Partitioned hash join via hint — the reference's TODO
@@ -364,6 +403,7 @@ _shared_sql(
       AND l_shipdate > TIMESTAMP '1998-01-01 00:00:00'
       AND l_shipdate <> TIMESTAMP '1998-06-01 00:00:00'
     """,
+    exchanges=0,
 )
 
 @register(
@@ -372,6 +412,7 @@ _shared_sql(
     "CAST(coalesce(sum(CAST(o_totalprice AS DECIMAL(18,2))), 0) AS DOUBLE) AS total_spent "
     "FROM customer LEFT JOIN orders ON c_custkey = o_custkey "
     "GROUP BY c_custkey",
+    exchanges=1,
 )
 def q_left_join_agg(spark, sf_dir):
     """Left outer join keeping customers without orders (inheritance
@@ -395,12 +436,14 @@ _shared_sql(
     "full_outer_join",
     "SELECT /*+ SHUFFLE_HASH(nation) */ n_nationkey, n_name, s_suppkey, s_name "
     "FROM nation FULL OUTER JOIN supplier ON n_nationkey = s_nationkey",
+    exchanges=2,
 )
 
 @register(
     "semi_join",
     "SELECT c_custkey, c_name FROM customer c WHERE EXISTS "
     "(SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)",
+    exchanges=0,
 )
 def q_semi_join(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
@@ -416,6 +459,7 @@ def q_semi_join(spark, sf_dir):
     "SELECT c_custkey, c_name FROM customer c WHERE NOT EXISTS "
     "(SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey "
     "AND o.o_orderpriority = '1-URGENT')",
+    exchanges=0,
 )
 def q_anti_join(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
@@ -426,6 +470,7 @@ def q_anti_join(spark, sf_dir):
 _shared_sql(
     "cross_join_small",
     "SELECT r_name, n_name FROM region CROSS JOIN nation WHERE n_regionkey = 0",
+    exchanges=0,
 )
 
 
@@ -437,24 +482,28 @@ _shared_sql(
     "union_distinct",
     "SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000 "
     "UNION SELECT o_custkey AS k FROM orders WHERE o_totalprice > 300000",
+    exchanges=1,
 )
 
 _shared_sql(
     "union_all",
     "SELECT c_custkey AS k FROM customer WHERE c_acctbal > 9000 "
     "UNION ALL SELECT o_custkey AS k FROM orders WHERE o_totalprice > 400000",
+    exchanges=0,
 )
 
 _shared_sql(
     "intersect_op",
     "SELECT c_custkey AS k FROM customer WHERE c_acctbal > 5000 "
     "INTERSECT SELECT o_custkey AS k FROM orders WHERE o_totalprice > 200000",
+    exchanges=1,
 )
 
 _shared_sql(
     "except_op",
     "SELECT c_custkey AS k FROM customer "
     "EXCEPT SELECT o_custkey AS k FROM orders WHERE o_orderpriority = '1-URGENT'",
+    exchanges=1,
 )
 
 
@@ -468,6 +517,7 @@ _shared_sql(
     "SELECT * FROM (SELECT o_custkey, o_orderkey, o_totalprice, "
     "row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn "
     "FROM orders) t WHERE rn <= 3",
+    exchanges=1,
 )
 def q_window_rank(spark, sf_dir):
     """Top-3 orders per customer via row_number — one hash exchange on
@@ -485,6 +535,7 @@ def q_window_rank(spark, sf_dir):
     "SELECT user_id, ts, value, "
     "value - lag(value) OVER (PARTITION BY user_id ORDER BY ts) AS delta "
     "FROM events",
+    exchanges=1,
 )
 def q_window_lag(spark, sf_dir):
     """Per-user time-series delta via lag — the bread-and-butter
@@ -511,6 +562,7 @@ def q_window_lag(spark, sf_dir):
     "FROM events e JOIN customer c ON e.user_id = c.c_custkey "
     "WHERE c.c_mktsegment = 'BUILDING' "
     "GROUP BY e.user_id, time_bin, c.c_mktsegment",
+    exchanges=1,
 )
 def q_flagship_datebin(spark, sf_dir):
     """dim ⋈ fact + date_bin + grouped max: broadcast the dim, bucket
@@ -531,6 +583,7 @@ def q_flagship_datebin(spark, sf_dir):
     "SELECT time_bucket(INTERVAL '5 minutes', ts) AS bin, event_type, "
     "count(*) AS cnt, CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value "
     "FROM events GROUP BY bin, event_type",
+    exchanges=1,
 )
 def q_datebin_5min(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
@@ -553,6 +606,7 @@ def q_datebin_5min(spark, sf_dir):
     FROM events, (SELECT unnest([0, 1]) AS off) o
     GROUP BY win_start, event_type
     """,
+    exchanges=1,
 )
 def q_sliding_window_counts(spark, sf_dir):
     """Sliding windows in batch: 10-minute windows every 5 minutes via
@@ -592,6 +646,7 @@ def q_sliding_window_counts(spark, sf_dir):
     ORDER BY cnt DESC, tok
     LIMIT 20
     """,
+    exchanges=2,
 )
 def q_heavy_hitters_tokens(spark, sf_dir):
     """Corpus-wide top-20 tokens: explode is pipelined (no shuffle),
@@ -620,6 +675,7 @@ _shared_sql(
     WHERE EXISTS (SELECT 1 FROM orders o
                   WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 250000)
     """,
+    exchanges=0,
 )
 
 
@@ -631,6 +687,7 @@ _shared_sql(
     WHERE NOT EXISTS (SELECT 1 FROM orders o
                       WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 300000)
     """,
+    exchanges=0,
 )
 
 
@@ -639,6 +696,9 @@ _shared_sql(
     "SELECT event_type, count(DISTINCT user_id) AS exact_users, "
     "TRUE AS within_tol "
     "FROM events GROUP BY event_type",
+    # tolerance-encoded oracle computes exact countDistinct beside the
+    # sketch: Spark's distinct-agg expansion adds the second exchange
+    exchanges=2,
 )
 def q_approx_distinct_users(spark, sf_dir):
     """HyperLogLog++ distinct-user counts per event type — the sketch
@@ -672,6 +732,7 @@ def q_approx_distinct_users(spark, sf_dir):
     FROM (SELECT DISTINCT event_type FROM events) t
     CROSS JOIN (SELECT unnest([0.25, 0.5, 0.75, 0.95]) AS q) q
     """,
+    exchanges=1,
 )
 def q_approx_value_quantiles(spark, sf_dir):
     """Greenwald-Khanna quantile sketch over event values: mergeable
@@ -715,6 +776,7 @@ def q_approx_value_quantiles(spark, sf_dir):
     "min(value) AS min_value, max(value) AS max_value, "
     "CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / count(*) AS avg_value "
     "FROM events GROUP BY bin, event_type",
+    exchanges=2,
 )
 def q_hypertable_rollup(spark, sf_dir):
     """Hypertable rollup cascade (operators/rollup): the 1-hour level
@@ -741,6 +803,7 @@ _shared_sql(
     "SELECT c_custkey, upper(c_name) AS uname, substr(c_name, 1, 8) AS prefix, "
     "length(c_name) AS name_len, concat(c_mktsegment, ':', c_name) AS tagged "
     "FROM customer",
+    exchanges=0,
 )
 
 _shared_sql(
@@ -751,6 +814,7 @@ _shared_sql(
     "CAST(ceil(l_quantity) AS BIGINT) AS qty_ceil, "
     "CAST(floor(l_extendedprice / 1000) AS BIGINT) AS price_k "
     "FROM lineitem",
+    exchanges=0,
 )
 
 _shared_sql(
@@ -758,6 +822,7 @@ _shared_sql(
     "SELECT year(o_orderdate) AS y, month(o_orderdate) AS m, count(*) AS cnt, "
     "CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total "
     "FROM orders GROUP BY year(o_orderdate), month(o_orderdate)",
+    exchanges=1,
 )
 
 
@@ -781,6 +846,7 @@ _shared_sql(
     ORDER BY revenue DESC, o_orderkey
     LIMIT 10
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -800,6 +866,7 @@ _shared_sql(
     GROUP BY n_name
     ORDER BY revenue DESC, n_name
     """,
+    exchanges=2,
 )
 
 
@@ -817,6 +884,9 @@ _shared_sql(
       AND c_mktsegment = 'BUILDING'
     GROUP BY o_orderpriority, l_returnflag
     """,
+    # smart partitioned hash join: both big sides shuffle on orderkey,
+    # then the group-by; the co-bucketed twin (test_bucketing) is 0
+    exchanges=3,
 )
 def q_multi_fact_join(spark, sf_dir):
     """Multi-fact headline (reference docs/9_what_next.md:4-6: "more
@@ -868,6 +938,7 @@ def q_multi_fact_join(spark, sf_dir):
     "SELECT md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint, "
     "min(doc_id) AS keep_id, count(*) AS n_copies "
     "FROM documents GROUP BY fingerprint",
+    exchanges=1,
 )
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup: hash-groupBy on a normalized fingerprint, keep the
@@ -885,6 +956,7 @@ def q_dedup_exact(spark, sf_dir):
     "doc_fingerprints",
     "SELECT doc_id, md5(lower(regexp_replace(trim(text), '\\s+', ' ', 'g'))) AS fingerprint "
     "FROM documents",
+    exchanges=0,
 )
 def q_doc_fingerprints(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -897,6 +969,7 @@ def q_doc_fingerprints(spark, sf_dir):
     "round(avg(n_chars), 4) AS avg_chars, "
     "round(avg(len(regexp_split_to_array(trim(text), '\\s+'))), 4) AS avg_tokens "
     "FROM documents GROUP BY lang",
+    exchanges=1,
 )
 def q_text_stats(spark, sf_dir):
     """Token counting + per-language profile, all JVM-side."""
@@ -913,6 +986,7 @@ def q_text_stats(spark, sf_dir):
     "SELECT doc_id, len(regexp_extract_all(text, "
     "'''(?:s|t|re|ve|m|ll|d)| ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\\s'']+')) AS bpe_tokens "
     "FROM documents",
+    exchanges=0,
 )
 def q_bpe_token_counts(spark, sf_dir):
     """BPE-ish pre-tokenizer counts per document (functions.text.
@@ -928,6 +1002,7 @@ def q_bpe_token_counts(spark, sf_dir):
     "SELECT doc_id, len(list_distinct(list_transform("
     "range(1, greatest(len(text) - 2, 0) + 1), i -> substr(text, i, 3)))) AS n_distinct_trigrams "
     "FROM documents",
+    exchanges=0,
 )
 def q_ngram_distinct(spark, sf_dir):
     """Distinct character-trigram count per document — the shingle
@@ -948,6 +1023,7 @@ def q_ngram_distinct(spark, sf_dir):
     "embedding_norms",
     "SELECT vec_id, label, round(sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])), 6) AS norm "
     "FROM embeddings",
+    exchanges=0,
 )
 def q_embedding_norms(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
@@ -967,6 +1043,7 @@ def q_embedding_norms(spark, sf_dir):
     ORDER BY cos_sim DESC, e.vec_id
     LIMIT 10
     """,
+    exchanges=0,
 )
 def q_knn_brute(spark, sf_dir):
     """Brute-force cosine top-k for one probe vector: broadcast the
@@ -1001,7 +1078,7 @@ FROM documents
 """
 
 
-@register("quality_scores", _QUALITY_ORACLE)
+@register("quality_scores", _QUALITY_ORACLE, exchanges=1)
 def q_quality_scores(spark, sf_dir):
     d = _t_cpu(spark, sf_dir, "documents")
     return d.select("doc_id", "lang", quality_score("text").alias("quality"))
@@ -1017,6 +1094,7 @@ _shared_sql(
                 AS DOUBLE) AS rolling_10m
     FROM events
     """,
+    exchanges=1,
 )
 
 
@@ -1026,6 +1104,7 @@ _shared_sql(
     "round(quantile_cont(value, 0.5), 6) AS p50, "
     "round(quantile_cont(value, 0.9), 6) AS p90 "
     "FROM events GROUP BY event_type",
+    exchanges=1,
 )
 def q_percentile_exact(spark, sf_dir):
     """Exact interpolated percentiles (Spark ``percentile`` == DuckDB
@@ -1044,6 +1123,7 @@ def q_percentile_exact(spark, sf_dir):
     "array_to_string(list_sort(list(DISTINCT event_type)), ',') AS types, "
     "len(list(DISTINCT event_type)) AS n_types "
     "FROM events GROUP BY user_id",
+    exchanges=1,
 )
 def q_array_agg_ops(spark, sf_dir):
     """Array aggregation surface: collect_set -> sorted array (DuckDB
@@ -1067,6 +1147,7 @@ _shared_sql(
            CAST(sum(n_chars) AS BIGINT) AS total_chars
     FROM documents GROUP BY bucket_lo
     """,
+    exchanges=1,
 )
 
 
@@ -1085,6 +1166,7 @@ _shared_sql(
     ) s
     GROUP BY user_id, session_id
     """,
+    exchanges=1,
 )
 def q_session_window_agg(spark, sf_dir):
     """Native ``session_window`` sessionization — Spark's built-in
@@ -1115,6 +1197,7 @@ _shared_sql(
     FROM orders
     WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey)
     """,
+    exchanges=1,
 )
 
 
@@ -1131,6 +1214,7 @@ PII_PATTERN = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z][A-Za-z]+|[0-9]{3}-[0-
     "CAST(sum(len(text) - len(regexp_replace(text, "
     f"'{PII_PATTERN}', '[PII]', 'g'))) AS BIGINT) AS chars_delta "
     "FROM documents GROUP BY lang",
+    exchanges=1,
 )
 def q_pii_redaction_stats(spark, sf_dir):
     """PII scrubbing stage: per-language counts of documents with
@@ -1162,6 +1246,8 @@ def q_pii_redaction_stats(spark, sf_dir):
            round(CAST(grp_n AS DOUBLE) / n, 6) AS pop_share
     FROM qi CROSS JOIN tot
     """,
+    # quasi-identifier groupBy + 1-row total agg (broadcast back)
+    exchanges=2,
 )
 def q_k_anonymity_audit(spark, sf_dir):
     """k-anonymity audit over quasi-identifiers — the privacy
@@ -1195,6 +1281,7 @@ def q_k_anonymity_audit(spark, sf_dir):
     "SELECT lang, CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT "
     "% 100 < 90 THEN 'train' ELSE 'test' END AS split, count(*) AS n_docs "
     "FROM documents GROUP BY lang, split",
+    exchanges=1,
 )
 def q_train_test_split(spark, sf_dir):
     """Reproducible train/test split: assignment = md5(id) mod 100 —
@@ -1214,6 +1301,7 @@ def q_train_test_split(spark, sf_dir):
     "SELECT o_custkey, o_totalprice AS best_price, o_orderkey AS best_order "
     "FROM orders QUALIFY row_number() OVER (PARTITION BY o_custkey "
     "ORDER BY o_totalprice DESC, o_orderkey DESC) = 1",
+    exchanges=1,
 )
 def q_argmax_struct(spark, sf_dir):
     """Arg-max via struct ordering: max(struct(price, key)) compares
@@ -1249,7 +1337,7 @@ FROM s
 """
 
 
-@register("user_value_trend", _TREND_ORACLE)
+@register("user_value_trend", _TREND_ORACLE, exchanges=1)
 def q_user_value_trend(spark, sf_dir):
     """Per-user least-squares slope of value over time — closed form
     from exact DECIMAL moment sums (deterministic across engines; the
@@ -1312,7 +1400,7 @@ GROUP BY lang
 """
 
 
-@register("curation_pipeline", _CURATION_ORACLE)
+@register("curation_pipeline", _CURATION_ORACLE, exchanges=2)
 def q_curation_pipeline(spark, sf_dir):
     """End-to-end training-data curation: exact dedup (fingerprint
     groupBy, lowest id wins) -> quality gate -> per-language token
@@ -1366,7 +1454,7 @@ _MINHASH_ORACLE = """
 """
 
 
-@register("minhash_signatures", _MINHASH_ORACLE)
+@register("minhash_signatures", _MINHASH_ORACLE, exchanges=2)
 def q_minhash_signatures(spark, sf_dir):
     """MinHash signature stage (8 perms, word-trigram shingles):
     explode -> one shuffle on (doc, perm).  Cross-engine-deterministic
@@ -1408,7 +1496,7 @@ _LSH_ORACLE = f"""
 """
 
 
-@register("lsh_candidates", _LSH_ORACLE)
+@register("lsh_candidates", _LSH_ORACLE, exchanges=4)
 def q_lsh_candidates(spark, sf_dir):
     """LSH banding stage (8 perms, 4 bands of 2): wide-signature path
     — banding is a projection, the bucket self-join shuffles only
@@ -1439,7 +1527,7 @@ _SIMHASH_ORACLE = """
 """
 
 
-@register("simhash_fingerprints", _SIMHASH_ORACLE)
+@register("simhash_fingerprints", _SIMHASH_ORACLE, exchanges=2)
 def q_simhash_fingerprints(spark, sf_dir):
     """32-bit SimHash per document; near-dups differ in few bits
     (compare with bit_count(a ^ b))."""
@@ -1489,7 +1577,9 @@ _NEAR_DUP_ORACLE = """
 """
 
 
-@register("near_dup_pairs", _NEAR_DUP_ORACLE)
+# exchanges: candidates localCheckpointed; verify = semi-filter +
+# set-array jaccard (was 10 with the exploded equi-join formulation)
+@register("near_dup_pairs", _NEAR_DUP_ORACLE, exchanges=6)
 def q_near_dup_pairs(spark, sf_dir):
     """Full MinHash-LSH near-dup pipeline (16 perms, 8 bands,
     Jaccard >= 0.5) — now with a FULL exact oracle: the banding is
@@ -1520,7 +1610,12 @@ _CC_ORACLE = f"""
 """
 
 
-@register("dedup_clusters", _CC_ORACLE)
+# exchanges: 1 = the RETURNED plan assembles labels from the converged
+# star edge set (nodes left-join min-agg over the checkpoint); the
+# large-star/small-star rounds shuffle during construction (bounded:
+# 4/round x O(log^2 n) rounds, diameter-independent)
+# jobs: measured 36 (was 59 in round 9)
+@register("dedup_clusters", _CC_ORACLE, exchanges=1, jobs=46)
 def q_dedup_clusters(spark, sf_dir):
     """Candidate pairs -> connected components: every doc in a
     near-dup cluster labeled with the cluster's min doc id (the
@@ -1567,7 +1662,8 @@ _CLUSTER_REP_ORACLE = f"""
 """
 
 
-@register("cluster_representatives", _CLUSTER_REP_ORACLE)
+# exchanges: star-edge label assembly (1) + doc join-back + election agg
+@register("cluster_representatives", _CLUSTER_REP_ORACLE, exchanges=3)
 def q_cluster_representatives(spark, sf_dir):
     """Keep-best-in-cluster dedup policy: after near-dup clustering
     (same LSH pipeline as `dedup_clusters`), each cluster elects the
@@ -1618,6 +1714,7 @@ def q_cluster_representatives(spark, sf_dir):
     ASOF LEFT JOIN (SELECT user_id, ts, value AS view_value FROM events WHERE event_type = 'view') b
       ON a.user_id = b.user_id AND b.ts <= a.ts
     """,
+    exchanges=1,
 )
 def q_asof_join_events(spark, sf_dir):
     """As-of join (latest view before each purchase, per user) —
@@ -1653,6 +1750,7 @@ _shared_sql(
     ) s
     GROUP BY user_id, session_id
     """,
+    exchanges=1,
 )
 
 
@@ -1700,6 +1798,12 @@ _COS_SQL = (
     ) t
     WHERE cos_sim >= 0.35
     """,
+    exchanges=2,
+    # per-cell pair scoring is one BLAS matmul per triangle cell;
+    # the codegen'd per-pair fold it replaced cost 5.8 µs/pair and
+    # pinned 32 cores for an hour at sf10's ~930M candidate pairs
+    # (same matmul-heavy exception as fit_pca's moment pass)
+    python=True,
 )
 def q_embedding_near_dups(spark, sf_dir):
     """Embedding cosine near-dup pairs within LSH buckets.  FULL exact
@@ -1734,6 +1838,7 @@ def q_embedding_near_dups(spark, sf_dir):
       PARTITION BY probe_id ORDER BY cos_sim DESC, vec_id
     ) <= 10
     """,
+    exchanges=3,
 )
 def q_lsh_ann_topk(spark, sf_dir):
     """Hyperplane-LSH approximate top-k.  FULL exact oracle (upgraded
@@ -1788,6 +1893,7 @@ def _ann_invariant_wrap(spark, sf_dir, topk: DataFrame, k: int) -> DataFrame:
     "ivf_ann_topk",
     "SELECT vec_id AS probe_id, TRUE AS self_hit, TRUE AS n_ok, "
     "TRUE AS cos_exact_ok FROM embeddings WHERE vec_id < 5",
+    exchanges=4,  # r6: projection assignment dropped one exchange
 )
 def q_ivf_ann_topk(spark, sf_dir):
     """IVF ANN scale path: deterministic k-means coarse quantizer, then
@@ -1813,6 +1919,15 @@ def q_ivf_ann_topk(spark, sf_dir):
 @register(
     "semantic_dedup",
     "SELECT vec_id, TRUE AS policy_ok, TRUE AS dup_of_ok FROM embeddings",
+    # the operator's pairwise scan + min-agg run ONCE (assigned and
+    # dup_of are both checkpointed inside it); the audit re-derives
+    # pairs from the ASSIGNED checkpoint directly (round 9 — the old
+    # res-based audit re-joined the corpus to dup_of first, paying
+    # exchange+sort pairs for columns the triangle never read), so
+    # what remains is the audit's own fold join + min-agg + the final
+    # slim join
+    exchanges=3,
+    jobs=18,  # measured 14 (was 20 in round 9)
 )
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup (Abbas et al. 2023): k-means clusters over embeddings,
@@ -1898,12 +2013,14 @@ _shared_sql(
     "scalar_subquery",
     "SELECT o_orderkey, o_totalprice FROM orders "
     "WHERE o_totalprice > (SELECT avg(o_totalprice) * 1.5 FROM orders)",
+    exchanges=2,
 )
 
 _shared_sql(
     "in_subquery",
     "SELECT o_orderkey, o_custkey FROM orders "
     "WHERE o_custkey IN (SELECT c_custkey FROM customer WHERE c_acctbal > 8000)",
+    exchanges=0,
 )
 
 _shared_sql(
@@ -1912,6 +2029,7 @@ _shared_sql(
     "SELECT s_suppkey, s_name, s_acctbal FROM supplier s "
     "WHERE s_acctbal = (SELECT max(s2.s_acctbal) FROM supplier s2 "
     "                   WHERE s2.s_nationkey = s.s_nationkey)",
+    exchanges=1,
 )
 
 _shared_sql(
@@ -1927,6 +2045,7 @@ _shared_sql(
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -1940,6 +2059,7 @@ _shared_sql(
       AND l.l_quantity < (SELECT 0.2 * avg(l2.l_quantity) FROM lineitem l2
                           WHERE l2.l_partkey = l.l_partkey)
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -1953,6 +2073,7 @@ _shared_sql(
         OR (p_brand = 'Brand#17' AND p_size BETWEEN 1 AND 25 AND l_quantity BETWEEN 10 AND 30)
         OR (p_brand = 'Brand#4'  AND p_size BETWEEN 1 AND 35 AND l_quantity BETWEEN 20 AND 40))
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -1968,6 +2089,7 @@ _shared_sql(
       AND l_shipdate >= TIMESTAMP '1997-01-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1997-07-01 00:00:00'
     """,
+    exchanges=1,
 )
 
 
@@ -1979,12 +2101,14 @@ _shared_sql(
     "like_patterns",
     "SELECT p_partkey, p_name, p_type FROM part "
     "WHERE p_name LIKE '%red%' OR (p_name LIKE 'small%' AND p_type LIKE 'ECON%')",
+    exchanges=0,
 )
 
 _shared_sql(
     "regexp_extract_ids",
     "SELECT c_custkey, CAST(regexp_extract(c_name, '([0-9]+)', 1) AS BIGINT) AS name_num "
     "FROM customer",
+    exchanges=0,
 )
 
 _shared_sql(
@@ -1996,12 +2120,14 @@ _shared_sql(
            nullif(c_acctbal, 0.0) AS acctbal_nz
     FROM customer LEFT JOIN orders ON c_custkey = o_custkey AND o_totalprice > 450000
     """,
+    exchanges=0,
 )
 
 _shared_sql(
     "between_and_in_list",
     "SELECT l_orderkey, l_quantity, l_returnflag FROM lineitem "
     "WHERE l_quantity BETWEEN 10 AND 12 AND l_returnflag IN ('A', 'N')",
+    exchanges=0,
 )
 
 
@@ -2010,6 +2136,7 @@ _shared_sql(
     "SELECT event_type, count(*) AS cnt, "
     "CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k "
     "FROM events GROUP BY event_type",
+    exchanges=1,
 )
 def q_json_extract_agg(spark, sf_dir):
     """JSON path extraction from a string column (get_json_object —
@@ -2025,6 +2152,7 @@ def q_json_extract_agg(spark, sf_dir):
     "variant_extract",
     "SELECT event_id, CAST(json_extract(props, '$.k') AS BIGINT) AS k "
     "FROM events WHERE CAST(json_extract(props, '$.k') AS BIGINT) > 50",
+    exchanges=0,
 )
 def q_variant_extract(spark, sf_dir):
     """Semi-structured columns as first-class VARIANT (Spark 4):
@@ -2051,6 +2179,7 @@ def q_variant_extract(spark, sf_dir):
            CAST(sum(CASE WHEN o_orderstatus = 'P' THEN CAST(o_totalprice AS DECIMAL(18,2)) END) AS DOUBLE) AS P
     FROM orders GROUP BY o_orderpriority
     """,
+    exchanges=2,
 )
 def q_pivot_status(spark, sf_dir):
     """DataFrame pivot (explicit value list => single-pass, no extra
@@ -2072,6 +2201,7 @@ def q_pivot_status(spark, sf_dir):
     UNION ALL
     SELECT l_orderkey, l_linenumber, 'tax' AS metric, l_tax AS val FROM lineitem
     """,
+    exchanges=0,
 )
 def q_unpivot_metrics(spark, sf_dir):
     """unpivot/melt: wide numeric columns -> (metric, val) long form."""
@@ -2119,6 +2249,7 @@ _LANG_MARKERS = {
                 ELSE 'zh' END AS predicted_lang
     FROM scores
     """,
+    exchanges=0,
 )
 def q_lang_id_heuristic(spark, sf_dir):
     """Stopword-marker language ID, fully JVM-side (array filter +
@@ -2156,6 +2287,7 @@ _shared_sql(
            dense_rank() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS order_seq
     FROM orders
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -2172,6 +2304,7 @@ _shared_sql(
       GROUP BY n_name, s_name
     ) t WHERE rnk <= 2
     """,
+    exchanges=2,
 )
 
 
@@ -2196,6 +2329,7 @@ _shared_sql(
       AND l_discount BETWEEN 0.04 AND 0.06
       AND l_quantity < 24
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -2218,6 +2352,7 @@ _shared_sql(
     GROUP BY n1.n_name, n2.n_name, year(l_shipdate)
     ORDER BY supp_nation, cust_nation, l_year
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -2247,6 +2382,7 @@ _shared_sql(
     GROUP BY o_year
     ORDER BY o_year
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -2270,6 +2406,7 @@ _shared_sql(
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -2290,6 +2427,7 @@ _shared_sql(
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -2306,6 +2444,7 @@ _shared_sql(
     GROUP BY year(l_shipdate)
     ORDER BY ship_year
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -2320,6 +2459,7 @@ _shared_sql(
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
+    exchanges=3,
 )
 
 _shared_sql(
@@ -2340,6 +2480,7 @@ _shared_sql(
       AND total_revenue = (SELECT max(total_revenue) FROM revenue)
     ORDER BY s_suppkey
     """,
+    exchanges=4,
 )
 
 _shared_sql(
@@ -2358,6 +2499,7 @@ _shared_sql(
     ORDER BY o_totalprice DESC, o_orderkey
     LIMIT 20
     """,
+    exchanges=3,
 )
 
 _shared_sql(
@@ -2379,6 +2521,7 @@ _shared_sql(
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
     LIMIT 20
     """,
+    exchanges=4,
 )
 
 _shared_sql(
@@ -2401,6 +2544,7 @@ _shared_sql(
       AND s_nationkey = n_nationkey
     ORDER BY s_name
     """,
+    exchanges=5,
 )
 
 _shared_sql(
@@ -2420,6 +2564,7 @@ _shared_sql(
     ORDER BY value DESC, n_name, l_partkey
     LIMIT 50
     """,
+    exchanges=3,
 )
 
 _shared_sql(
@@ -2435,6 +2580,7 @@ _shared_sql(
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     LIMIT 40
     """,
+    exchanges=2,
 )
 
 _shared_sql(
@@ -2462,6 +2608,7 @@ _shared_sql(
     ORDER BY numwait DESC, s_name
     LIMIT 20
     """,
+    exchanges=1,
 )
 
 _shared_sql(
@@ -2483,6 +2630,7 @@ _shared_sql(
     GROUP BY n_name
     ORDER BY cntrycode
     """,
+    exchanges=4,
 )
 
 _shared_sql(
@@ -2509,6 +2657,8 @@ _shared_sql(
     )
     SELECT node, min(depth) AS hops FROM reach GROUP BY node
     """,
+    # dimension-sized UnionLoop recursion + final min-agg
+    exchanges=1,
 )
 
 
@@ -2531,6 +2681,7 @@ _shared_sql(
                  x -> abs(CAST(x AS DOUBLE)))), 6) AS max_abs
     FROM embeddings
     """,
+    exchanges=0,
 )
 def q_higher_order_funcs(spark, sf_dir):
     """Higher-order array functions (SURVEY §2.8 inheritance scope):
@@ -2573,6 +2724,8 @@ def q_higher_order_funcs(spark, sf_dir):
     ORDER BY tfidf DESC, tok
     LIMIT 20
     """,
+    # fan_out + tf + per-token stats + single-row corpus count
+    exchanges=4,
 )
 def q_tfidf_top_terms(spark, sf_dir):
     """Corpus TF-IDF vocabulary profile: collection frequency weighted
@@ -2621,6 +2774,7 @@ def q_tfidf_top_terms(spark, sf_dir):
       FROM documents)
     WHERE rn <= 10
     """,
+    exchanges=1,
 )
 def q_quota_sample_per_lang(spark, sf_dir):
     """Deterministic per-language quota sampling — the data-mixing
@@ -2655,6 +2809,8 @@ def q_quota_sample_per_lang(spark, sf_dir):
                unnest(regexp_split_to_array(lower(trim(text)), '\\s+')) AS u(tok))
     GROUP BY doc_id
     """,
+    # fan_out + distinct-agg expand (2 keyed shuffles)
+    exchanges=3,
 )
 def q_repetition_ratio(spark, sf_dir):
     """Distinct-token ratio per document — the Gopher-style repetition
@@ -2700,6 +2856,9 @@ def q_repetition_ratio(spark, sf_dir):
     WHERE a.split = 'test'
     GROUP BY a.doc_id
     """,
+    # fan_out x2 (test/train gram subtrees) + train distinct + per-doc
+    # verdict agg + gram join
+    exchanges=5,
 )
 def q_decontamination_ngrams(spark, sf_dir):
     """Train/test decontamination by token 8-gram overlap — the
@@ -2752,6 +2911,9 @@ def q_decontamination_ngrams(spark, sf_dir):
     FROM toks JOIN freq USING (tok), total
     GROUP BY doc_id
     """,
+    # vocab localCheckpointed (the persisted-table stand-in): corpus
+    # tokenized twice, not three times; total is a vocab rollup
+    exchanges=3,
 )
 def q_unigram_logprob_scores(spark, sf_dir):
     """Per-document mean token log-probability under the corpus's own
@@ -2820,6 +2982,9 @@ def q_unigram_logprob_scores(spark, sf_dir):
     FROM tb JOIN lam USING (b)
     GROUP BY doc_id
     """,
+    # (doc,bucket) count shuffle; 64-row stats/total/lambda stay small
+    # and broadcast back; final per-doc agg
+    exchanges=4,
 )
 def q_dsir_importance_weights(spark, sf_dir):
     """DSIR (Xie et al. 2023, arXiv:2302.03169): data selection via
@@ -2896,6 +3061,7 @@ def q_dsir_importance_weights(spark, sf_dir):
     FROM c
     GROUP BY lang, seq_idx
     """,
+    exchanges=1,
 )
 def q_sequence_packing(spark, sf_dir):
     """Concat-and-chunk sequence packing: documents are laid out in a
@@ -2938,6 +3104,7 @@ def q_sequence_packing(spark, sf_dir):
     FROM embeddings, unnest(range(0, len(embedding))) AS u(pos)
     WHERE vec_id < 100
     """,
+    exchanges=0,
 )
 def q_posexplode_vectors(spark, sf_dir):
     """Ordinal array explode (posexplode): unpivot array<float> to
@@ -2960,6 +3127,7 @@ def q_posexplode_vectors(spark, sf_dir):
            bit_xor(user_id) AS bxor
     FROM events GROUP BY event_type
     """,
+    exchanges=1,
 )
 def q_bitwise_agg(spark, sf_dir):
     """Bitwise aggregates (bit_and/bit_or/bit_xor) — exact integer
@@ -2992,6 +3160,7 @@ def q_bitwise_agg(spark, sf_dir):
                  / (n - 1)), 6) AS stddev_samp
     FROM m
     """,
+    exchanges=1,
 )
 def q_stats_moments(spark, sf_dir):
     """Variance/stddev from exact DECIMAL moment sums — the same
@@ -3025,6 +3194,8 @@ def q_stats_moments(spark, sf_dir):
     SELECT user_id, event_type AS etype, count(*) AS cnt
     FROM events GROUP BY user_id, event_type
     """,
+    # per-(user,type) counts then per-user map assembly
+    exchanges=2,
 )
 def q_map_roundtrip(spark, sf_dir):
     """MapType round-trip: per-user (event_type -> count) built with
@@ -3053,6 +3224,8 @@ def q_map_roundtrip(spark, sf_dir):
            CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
     FROM events GROUP BY event_type
     """,
+    # (key,salt) spread stage + tiny per-key merge stage — by design
+    exchanges=2,
 )
 def q_salted_agg(spark, sf_dir):
     """Salted two-stage aggregation — the deterministic fallback for
@@ -3091,6 +3264,9 @@ def q_salted_agg(spark, sf_dir):
     FROM f JOIN orders ON k = o_orderkey
     GROUP BY o_orderpriority
     """,
+    # salted fact shuffle on (k, salt) + replicated dim shuffle + agg
+    # partial/final (at test scale the dim side broadcasts => 1)
+    exchanges=4,
 )
 def q_skewed_join_salted(spark, sf_dir):
     """Planted-skew fact-fact join, salted — the join twin of
@@ -3154,6 +3330,7 @@ def q_skewed_join_salted(spark, sf_dir):
     FROM embeddings, unnest(range(0, len(embedding))) AS u(pos)
     GROUP BY label, pos
     """,
+    exchanges=1,
 )
 def q_label_centroids(spark, sf_dir):
     """Per-label embedding centroids in exploded form (label, dim,
@@ -3194,6 +3371,8 @@ def q_label_centroids(spark, sf_dir):
              AS full_funnel
     FROM firsts
     """,
+    # per-user pivot + single-row rollup
+    exchanges=2,
 )
 def q_event_funnel(spark, sf_dir):
     """Conversion funnel (view -> click -> purchase) via conditional
@@ -3243,6 +3422,8 @@ def q_event_funnel(spark, sf_dir):
     FROM activity
     GROUP BY cohort_day, day_offset
     """,
+    # first-seen agg + join-back + distinct-user expand
+    exchanges=3,
 )
 def q_cohort_retention(spark, sf_dir):
     """Cohort retention: users bucketed by first-seen day, activity
@@ -3293,6 +3474,8 @@ def q_cohort_retention(spark, sf_dir):
              AS pass_all
     FROM sig
     """,
+    # fan_out + single-row rollup
+    exchanges=2,
 )
 def q_gopher_quality_rules(spark, sf_dir):
     """Gopher-style rule-based quality gate (length bounds, mean word

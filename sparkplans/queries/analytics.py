@@ -31,6 +31,8 @@ from sparkplans.materialize import materialize, materialize_lazy
     SELECT day, count(DISTINCT user_id) AS active_7d
     FROM tgt GROUP BY day
     """,
+    # (user,day) distinct + the distinct-agg pair on the exploded grid
+    exchanges=3,
 )
 def q_rolling_active_users_7d(spark, sf_dir):
     """Trailing-7-day distinct active users per day.  The classic
@@ -63,6 +65,8 @@ _shared_sql(
     WHERE p.event_type = 'purchase'
     GROUP BY p.event_id
     """,
+    # user-keyed self-join; band predicate rides the hash join
+    exchanges=1,
 )
 # Attribution band join: clicks in the 24h window before each
 # purchase, same user.  The user_id equi-key keeps this a hash join
@@ -80,6 +84,7 @@ _shared_sql(
            round(quantile_cont(value, 0.9), 6) AS p90
     FROM events GROUP BY event_type
     """,
+    exchanges=1,
 )
 def q_exact_value_percentiles(spark, sf_dir):
     """Exact linear-interpolated percentiles per event type (Spark
@@ -109,6 +114,8 @@ _shared_sql(
              AS revenue_share
     FROM n
     """,
+    # orders-side agg + one-row OVER() total; dims broadcast
+    exchanges=2,
 )
 # Percent-of-total contribution: revenue accumulates in DECIMAL (sum
 # order irrelevant => bit-identical across engines), the share divides
@@ -130,6 +137,8 @@ _shared_sql(
     SELECT bow_sig, count(*) AS n_docs, min(doc_id) AS keeper_doc
     FROM sig GROUP BY bow_sig HAVING count(*) > 1
     """,
+    # fan_out + fingerprint-keyed agg (32-byte keys, not text)
+    exchanges=2,
 )
 def q_bow_duplicate_groups(spark, sf_dir):
     """Bag-of-words duplicate blocking: md5 over the *sorted* token
@@ -167,6 +176,8 @@ def q_bow_duplicate_groups(spark, sf_dir):
              AS ewma10
     FROM lv WHERE rn = 1
     """,
+    # one user-keyed window partitioning shared by frame + rank
+    exchanges=1,
 )
 def q_ewma_user_value(spark, sf_dir):
     """Per-user EWMA (alpha=0.2) over the last 10 events — the
@@ -212,6 +223,8 @@ _shared_sql(
                  / (CAST(k AS DOUBLE) * CAST(n AS DOUBLE)), 6) AS mix_weight
     FROM c, t
     """,
+    # lang census + one-row totals rollup + broadcast-back
+    exchanges=3,
 )
 # Dataset-mixture reweighting: per-language resampling weight that
 # would equalize the language mix (weight = target_share /
@@ -228,6 +241,9 @@ _shared_sql(
            TRUE AS within_tol
     FROM events GROUP BY bin, event_type
     """,
+    # sketch agg + exact countDistinct (2 exchanges, distinct
+    # expansion) for the tolerance oracle; same-key join adds none
+    exchanges=3,
 )
 def q_hll_daily_users(spark, sf_dir):
     """Persistable distinct-user sketches per (day, event_type) with
@@ -280,7 +296,7 @@ _PROFILE_ORACLE = "\nUNION ALL\n".join(
 )
 
 
-@register("orders_profile", _PROFILE_ORACLE)
+@register("orders_profile", _PROFILE_ORACLE, exchanges=2)
 def q_orders_profile(spark, sf_dir):
     """Exact single-pass column profile of `orders` via
     operators/profile (nulls, distinct cardinality, numeric ranges) —
@@ -334,41 +350,20 @@ FROM ver WHERE CAST(inter AS DOUBLE) / (na + nb - inter) >= 0.5
 """
 
 
-@register("ssjoin_near_dups", _SSJOIN_ORACLE)
+# exchanges: ranked-shingle arrays are checkpointed (shingle-df join +
+# per-doc agg happen before the cut); the visible plan is the prefix
+# self-join (broadcast at this scale) + candidate dedup
+@register("ssjoin_near_dups", _SSJOIN_ORACLE, exchanges=1)
 def q_ssjoin_near_dups(spark, sf_dir):
     """Exact near-duplicate pairs (shingle-Jaccard >= 0.5) via
     dedup.prefix_filter_pairs — the lossless SSJoin counterpart to
     the MinHash/LSH probabilistic path (`near_dup_pairs`): prefix
     filtering on rarity-ordered shingles guarantees no false
     negatives, so this is the ground-truth recall audit for the
-    sketch-based dedup operators.
-
-    ``SPARK_GRAFT_SSJOIN_SLICES`` (default 1; an integer or ``auto``)
-    runs the exact join in disk-bounded sequential slices —
-    bit-identical pairs, ~1/slices peak shuffle footprint — for
-    data-dominated SFs where the lossless candidate shuffle would
-    exhaust local scratch.  ``auto`` sizes the count from the measured
-    candidate volume against an 8 GiB per-slice scratch budget."""
-    import os
-
+    sketch-based dedup operators."""
     from sparkplans.operators.dedup import prefix_filter_pairs
 
-    sl = os.environ.get("SPARK_GRAFT_SSJOIN_SLICES", "1").strip().lower()
-    if sl == "auto":
-        slices = "auto"
-    else:
-        try:
-            slices = int(sl)
-        except ValueError as exc:
-            raise ValueError(
-                "SPARK_GRAFT_SSJOIN_SLICES must be a positive integer or "
-                f"'auto', got {sl!r}"
-            ) from exc
-    return prefix_filter_pairs(
-        _t_cpu(spark, sf_dir, "documents"),
-        threshold=0.5,
-        slices=slices,
-    )
+    return prefix_filter_pairs(_t_cpu(spark, sf_dir, "documents"), threshold=0.5)
 
 
 _WSAMPLE_ORACLE = """
@@ -390,7 +385,8 @@ SELECT doc_id, lang, n_chars FROM r WHERE rn <= 5
 """
 
 
-@register("weighted_doc_sample", _WSAMPLE_ORACLE)
+# exchanges: one lang-keyed rank window (+ tiny final exchange)
+@register("weighted_doc_sample", _WSAMPLE_ORACLE, exchanges=2)
 def q_weighted_doc_sample(spark, sf_dir):
     """Per-language weighted sample (5 docs each, weight = n_chars)
     via operators/sampling.weighted_sample — Efraimidis–Spirakis keys
@@ -425,7 +421,10 @@ SELECT (SELECT count(*) FROM e) AS n_edges,
 """
 
 
-@register("copurchase_triangles", _TRIANGLE_ORACLE)
+# exchanges: triple join over the checkpointed (thresholded) edge list +
+# two count rollups; the lineitem self-join shuffles happen once, before
+# the checkpoint cut
+@register("copurchase_triangles", _TRIANGLE_ORACLE, exchanges=6)
 def q_copurchase_triangles(spark, sf_dir):
     """Triangle census of the part co-purchase graph (pairs sharing
     >= 2 orders) via operators/graph.triangle_count — the clustering
@@ -481,6 +480,9 @@ _shared_sql(
       WHERE n_days > 1
     ) WHERE abs(z_score) > 2
     """,
+    # (type,day) grid agg + per-type stats rollup + the grid-side
+    # re-shuffle under the stats join; all post-aggregate row counts
+    exchanges=3,
 )
 
 
@@ -505,6 +507,8 @@ _shared_sql(
       ON date_trunc('month', o_orderdate) = CAST(m AS TIMESTAMP)
     GROUP BY m
     """,
+    # ~80-row recursive spine broadcasts; one keyed agg on the fact
+    exchanges=1,
 )
 
 
@@ -524,6 +528,9 @@ _shared_sql(
       WHERE c_nationkey = n.n_nationkey
       ORDER BY c_acctbal DESC, c_name LIMIT 3) c
     """,
+    # LATERAL decorrelated into a ranking window (one keyed shuffle)
+    # + broadcast join with nation
+    exchanges=1,
 )
 
 
@@ -560,7 +567,9 @@ WITH s AS (
 )
 
 
-@register("lineitem_corr_matrix", _CORR_ORACLE)
+# exchanges: all 14 co-moments in one partial+final pass of DECIMAL
+# states
+@register("lineitem_corr_matrix", _CORR_ORACLE, exchanges=1)
 def q_lineitem_corr_matrix(spark, sf_dir):
     """Pairwise Pearson correlation matrix over the lineitem numeric
     columns in ONE aggregation pass: all co-moments accumulate as
@@ -647,7 +656,11 @@ LEFT JOIN (SELECT DISTINCT c_custkey FROM customer) c
 """
 
 
-@register("orders_quality_gate", _QUALITY_GATE_ORACLE)
+# exchanges: one Expand+countDistinct pass for the column-local checks
+# (2 single-partition state hops), one dedup of the FK reference keys,
+# one final-agg hop after the broadcast join; all constant-size states
+# or dimension keys — no fact data shuffles
+@register("orders_quality_gate", _QUALITY_GATE_ORACLE, exchanges=4)
 def q_orders_quality_gate(spark, sf_dir):
     """Declarative data-quality gate on `orders` via
     operators/expectations: not-null, uniqueness, accepted values,
@@ -699,7 +712,9 @@ SELECT o_orderkey, change_type FROM j WHERE change_type IS NOT NULL
 """
 
 
-@register("orders_snapshot_diff", _DIFF_ORACLE)
+# exchanges: one full-outer sort-merge join: each side shuffles on the
+# key once; bucketed snapshots would bring this to 0
+@register("orders_snapshot_diff", _DIFF_ORACLE, exchanges=2)
 def q_orders_snapshot_diff(spark, sf_dir):
     """CDC change-set derivation via operators/diff.table_diff: a
     deterministic 'yesterday vs today' pair is built from `orders`
@@ -798,7 +813,11 @@ SELECT node, round(rank, 10) AS rank FROM r{iters}
 """
 
 
-@register("pagerank_copurchase", _pagerank_oracle_sql())
+# exchanges: per-iteration lineage is cut by localCheckpoint; the
+# returned frame reads the final checkpoint (iteration shuffles are
+# keyed aggregates counted per pass, not accumulated in the plan)
+# jobs: measured 22 (was 40 in round 9): one job per lazy iteration
+@register("pagerank_copurchase", _pagerank_oracle_sql(), exchanges=0, jobs=26)
 def q_pagerank_copurchase(spark, sf_dir):
     """PageRank over the part co-purchase graph (parts sharing an
     order, both directions) — the iterative-algorithm showcase
@@ -827,6 +846,8 @@ def q_pagerank_copurchase(spark, sf_dir):
       WHERE a.l_partkey <> b.l_partkey
     ) nodes
     """,
+    # single-row theorem agg over checkpointed ranks
+    exchanges=1,
 )
 def q_pagerank_invariants(spark, sf_dir):
     """Theorem companion to `pagerank_copurchase` (which since round 6
@@ -872,7 +893,10 @@ FROM comp
 """
 
 
-@register("label_propagation_communities", _LPA_ORACLE)
+# exchanges: invariant join of two iterative outputs (labels ⋈ comp ⋈
+# comp): both sides are node-sized at 100 TB so neither broadcasts; the
+# iterations themselves are behind localCheckpoint cuts
+@register("label_propagation_communities", _LPA_ORACLE, exchanges=8)
 def q_label_propagation_communities(spark, sf_dir):
     """Community detection on the part co-purchase graph (pairs
     sharing >= 2 orders) via operators/graph.label_propagation — the
@@ -958,6 +982,8 @@ def q_label_propagation_communities(spark, sf_dir):
            sim AS cos_sim
     FROM r WHERE rn = 1
     """,
+    # probes broadcast; ONE map-side-combined argmax shuffle
+    exchanges=1,
 )
 def q_hard_negatives_per_probe(spark, sf_dir):
     """Hard-negative mining (contrastive-training data prep): for
@@ -1025,6 +1051,9 @@ def q_hard_negatives_per_probe(spark, sf_dir):
            hot_keys_100x
     FROM t CROSS JOIN h
     """,
+    # ONE corpus shuffle into the checkpointed (key,cnt) frame; the 3
+    # rollup branches shuffle slim checkpoint scans only
+    exchanges=3,
 )
 def q_key_skew_report(spark, sf_dir):
     """Shuffle-key skew diagnostic (`operators/skew.skew_report`) —
@@ -1063,6 +1092,9 @@ def q_key_skew_report(spark, sf_dir):
            round(st[1] + 3 * st[2], 6) AS forecast3
     FROM f
     """,
+    # same shape as ewma_user_value: one user-keyed window shuffle,
+    # fold is a JVM lambda over a <=12-element array
+    exchanges=1,
 )
 def q_holt_trend_forecast(spark, sf_dir):
     """Holt double-exponential smoothing (level + trend, alpha=0.4,

@@ -54,6 +54,8 @@ _DECONTAM_PROBE_BROADCAST_BYTES = 64 << 20
            CAST(round(1.0 / (1.0 + exp(-logit)), 6) >= 0.5 AS INT) AS keep
     FROM z
     """,
+    # fan_out exchange + one groupBy(doc_id)
+    exchanges=2,
 )
 def q_quality_classifier_scores(spark, sf_dir):
     """FastText-style linear quality classifier *inference* at corpus
@@ -121,6 +123,8 @@ def q_quality_classifier_scores(spark, sf_dir):
     FROM w CROSS JOIN tot
     ORDER BY source
     """,
+    # checkpointed 20-row mixing table: 1-row total agg + final sort
+    exchanges=2,
 )
 def q_temperature_mixture_weights(spark, sf_dir):
     """Temperature-scaled sampling weights per source (the multinomial
@@ -212,6 +216,9 @@ def q_temperature_mixture_weights(spark, sf_dir):
     FROM db JOIN lp ON db.prev = lp.prev AND db.cur = lp.cur
     GROUP BY doc_id
     """,
+    # bigram rollup from checkpointed per-doc counts + scoring join
+    # re-shuffle + final per-doc agg (LM tables broadcast)
+    exchanges=3,
 )
 def q_bigram_lm_scores(spark, sf_dir):
     """Interpolated bigram language-model scoring — the step up from
@@ -343,6 +350,9 @@ def q_bigram_lm_scores(spark, sf_dir):
            round(CAST(u2 AS DOUBLE) / (2.0 * npos * nneg), 6) AS auc
     FROM t
     """,
+    # groupBy(distinct score) + bucket-partitioned prefix window;
+    # final 1-row agg folds into the window exchange
+    exchanges=2,
 )
 def q_roc_auc_cosine(spark, sf_dir):
     """Exact distributed ROC-AUC of a retrieval scorer (cosine to a
@@ -471,6 +481,14 @@ def q_roc_auc_cosine(spark, sf_dir):
            CAST(max(s) >= 0.35 AS INT) AS contaminated
     FROM sims GROUP BY vec_id
     """,
+    # broadcast-BLAS route: fan_out round-robin + mapInPandas scores
+    # per partition — one exchange (the blocked large-probe route pays
+    # cogroup + final max, tested separately)
+    exchanges=1,
+    # probes are collected model state; each corpus partition
+    # scores all of them as chunked matmuls — zero exchanges,
+    # replacing the 3.6B-pair codegen fold at sf10
+    python=True,
 )
 def q_semantic_decontamination(spark, sf_dir):
     """Embedding-space decontamination: flag training vectors whose
@@ -688,6 +706,9 @@ def _decontam_blocked(spark, corpus, probes, n_probes, dim):
                         WHEN s >= -3.404 THEN 'middle'
                         ELSE 'tail' END
     """,
+    # doc-token shuffle feeds vocab rollup + per-doc scoring + final
+    # (lang,bucket) rollup; LM table broadcasts back
+    exchanges=5,
 )
 def q_ccnet_perplexity_buckets(spark, sf_dir):
     """CCNet's head/middle/tail split (Wenzek et al. 2020): score each
@@ -795,6 +816,9 @@ def q_ccnet_perplexity_buckets(spark, sf_dir):
     FROM alloc
     ORDER BY source
     """,
+    # checkpointed per-source counts: 1-row budget agg, bounded
+    # water-fill window, level agg, final sort
+    exchanges=4,
 )
 def q_token_budget_epochs(spark, sf_dir):
     """Data-constrained epoch allocation (Muennighoff et al. 2022,
@@ -900,6 +924,9 @@ def q_token_budget_epochs(spark, sf_dir):
     FROM firsts f LEFT JOIN seen s USING (fingerprint)
     WHERE s.fingerprint IS NULL
     """,
+    # firsts agg + (bloom-hit sliver) anti-join + union branch; the
+    # bloom probe itself is a zero-exchange projection
+    exchanges=3,
 )
 def q_bloom_prefilter_dedup(spark, sf_dir):
     """Incremental exact dedup with a Bloom prefilter
@@ -979,6 +1006,8 @@ def q_bloom_prefilter_dedup(spark, sf_dir):
     WHERE a.split = 'test'
     GROUP BY a.doc_id
     """,
+    # same shape as decontamination_ngrams — the probe adds no exchange
+    exchanges=5,
 )
 def q_bloom_decontamination(spark, sf_dir):
     """Train/test 8-gram decontamination through a broadcast Bloom
@@ -1069,6 +1098,9 @@ def q_bloom_decontamination(spark, sf_dir):
       LIMIT 20
     )
     """,
+    # sketch build agg + exact top-20 agg (one checkpointed tokenize
+    # pass feeds both); estimate side is broadcast-joined
+    exchanges=3,
 )
 def q_cms_token_counts(spark, sf_dir):
     """Count-Min Sketch (`operators/sketches.cms_build`) point queries
@@ -1135,6 +1167,9 @@ def q_cms_token_counts(spark, sf_dir):
            min(q1) AS q1, min(q2) AS q2, min(q3) AS q3
     FROM binned GROUP BY event_type, bin
     """,
+    # boundary agg + final (type,bin) agg; binning is a broadcast-join
+    # projection
+    exchanges=2,
 )
 def q_equi_depth_bins(spark, sf_dir):
     """Equi-depth (quantile) feature binning — Spark MLlib's
@@ -1197,6 +1232,8 @@ def q_equi_depth_bins(spark, sf_dir):
                            AS DOUBLE) / (n - 1) END, 6) AS loo_mean
     FROM oc JOIN s USING (c_mktsegment)
     """,
+    # segment-stats agg; dim join + encode join-back both broadcast
+    exchanges=1,
 )
 def q_target_encoding_loo(spark, sf_dir):
     """Leave-one-out target encoding of a categorical feature — the
@@ -1258,6 +1295,13 @@ def q_target_encoding_loo(spark, sf_dir):
            TRUE AS underfull_le_parts
     FROM tok WHERE nt <= 256
     """,
+    # packed frame is materialized (the pack shuffle runs once inside
+    # it); the 4 counted are the distinct-agg expansion (2) + the
+    # groupBy(seq_id) loads + the 1-row bin_stats agg
+    exchanges=4,
+    # bin packing is sequential decision logic — the numpy FFD
+    # inside applyInPandas is the idiomatic Spark plan for it
+    python=True,
 )
 def q_ffd_sequence_packing(spark, sf_dir):
     """FFD sequence packing for LLM pre-training (operators/packing) —
@@ -1335,6 +1379,10 @@ def q_ffd_sequence_packing(spark, sf_dir):
       FROM tok t JOIN rates r USING (source))
     WHERE n_copies >= 1
     """,
+    # groupBy(source) runs once behind the 20-row checkpoint; the one
+    # counted exchange is the 1-row max over it — selection itself is
+    # a broadcast-join projection over the scan, zero corpus shuffles
+    exchanges=1,
 )
 def q_mixture_epoch_sample(spark, sf_dir):
     """Deterministic mixture sampling with epochs — the step AFTER
@@ -1432,6 +1480,9 @@ def q_mixture_epoch_sample(spark, sf_dir):
            md5(array_to_string(chunk, ' ')) AS chunk_md5
     FROM c
     """,
+    # split -> explode(sequence) -> slice -> md5: pure pipelined
+    # projection+generate, whole-stage codegen end to end
+    exchanges=0,
 )
 def q_oversized_doc_split(spark, sf_dir):
     """Oversized-document splitting (operators/packing
@@ -1475,6 +1526,9 @@ def q_oversized_doc_split(spark, sf_dir):
                                    ORDER BY hv, doc_id) AS BIGINT) AS pos
     FROM h
     """,
+    # one hash shuffle onto the shard key; row_number sorts inside
+    # each shard's partition (never a global window)
+    exchanges=1,
 )
 def q_training_shard_order(spark, sf_dir):
     """Deterministic epoch shuffle — the last pipeline stage before a
@@ -1517,6 +1571,11 @@ def q_training_shard_order(spark, sf_dir):
     "pca_whitening",
     "SELECT CAST(range AS INT) AS comp, TRUE AS mean_ok, TRUE AS var_ok, "
     "TRUE AS ortho_ok FROM range(16) ORDER BY comp",
+    # returned plan: 16-row driver-local invariant grid + its sort;
+    # the moment passes shuffle during construction (2 skinny
+    # explode-sum exchanges, d^2-row payloads)
+    exchanges=1,
+    jobs=12,  # measured 10
 )
 def q_pca_whitening(spark, sf_dir):
     """PCA-whitened embeddings (operators/pca.py): distributed moment
@@ -1574,6 +1633,9 @@ def q_pca_whitening(spark, sf_dir):
                 AS DECIMAL(38, 12)) AS psi_term
     FROM c, t ORDER BY bin
     """,
+    # bin-count agg (materialized 10-row table) + final bin sort; the
+    # totals/min-max branches are 1-row broadcasts
+    exchanges=2,
 )
 def q_feature_drift_psi(spark, sf_dir):
     """Population Stability Index between the `view` (reference) and
@@ -1658,6 +1720,9 @@ def q_feature_drift_psi(spark, sf_dir):
            count(DISTINCT fp) AS n_groups
     FROM a GROUP BY split ORDER BY split
     """,
+    # Spark's distinct-agg expansion on (split, fp): two exchanges of
+    # pre-aggregated rows; fingerprint+bucket are scan-side projection
+    exchanges=2,
 )
 def q_leakage_safe_split(spark, sf_dir):
     """Train/val/test assignment that can never leak a duplicate
@@ -1749,7 +1814,9 @@ FROM a
 """
 
 
-@register("ndcg_at_k", _NDCG_ORACLE)
+# exchanges: salted two-phase top-k: (probe,salt) window + probe window;
+# the final agg reuses the probe partitioning
+@register("ndcg_at_k", _NDCG_ORACLE, exchanges=2)
 def q_ndcg_at_k(spark, sf_dir):
     """nDCG@10 retrieval evaluation: for each probe vector, rank the
     corpus by cosine, mark results sharing the probe's label as
@@ -1843,7 +1910,10 @@ FROM terms
 """
 
 
-@register("mutual_information_features", _MI_ORACLE)
+# exchanges: marginals/total/final all re-aggregate the checkpointed
+# 15-row cell table — tiny shuffles; the one corpus shuffle is the
+# checkpointed (x,y) groupBy
+@register("mutual_information_features", _MI_ORACLE, exchanges=4)
 def q_mutual_information_features(spark, sf_dir):
     """Mutual information between two categorical features
     (order priority x order status) — the feature-selection /
@@ -1929,7 +1999,9 @@ FROM s
 """
 
 
-@register("zipf_fit_tokens", _ZIPF_ORACLE)
+# exchanges: vocab-sized count groupBy; top-500 is TakeOrdered and the
+# rank window runs over exactly 500 rows
+@register("zipf_fit_tokens", _ZIPF_ORACLE, exchanges=1)
 def q_zipf_fit_tokens(spark, sf_dir):
     """Zipf's-law fit over the corpus token distribution: OLS slope of
     ln(frequency) on ln(rank) for the top-500 tokens — the corpus-
@@ -1996,7 +2068,8 @@ FROM b GROUP BY bin ORDER BY bin
 """
 
 
-@register("calibration_bins", _CALIB_ORACLE)
+# exchanges: scan-side score projection, 10-key groupBy + ORDER BY bin
+@register("calibration_bins", _CALIB_ORACLE, exchanges=2)
 def q_calibration_bins(spark, sf_dir):
     """Model-calibration reliability table: a deterministic logistic
     score over order value, bucketed into 10 equal-width probability

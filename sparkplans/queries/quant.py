@@ -44,6 +44,9 @@ _shared_sql(
            count(*) AS n_obs
     FROM r GROUP BY event_type, day
     """,
+    # both bar-local windows and the OHLC aggregate share one
+    # (event_type, day) shuffle (+ tiny final hop)
+    exchanges=2,
 )
 # TimescaleDB's first()/last() time-bucketed OHLC as one pass: rank
 # within the bar from both ends ((ts, event_id) is a total order, so
@@ -77,6 +80,9 @@ _shared_sql(
     FROM g GROUP BY user_id, grp
     HAVING count(*) >= 3
     """,
+    # one user-keyed shuffle shared by the island window and the
+    # streak rollup (+ distinct pre-agg hop)
+    exchanges=2,
 )
 def q_activity_streaks(spark, sf_dir):
     """Longest-run detection (gaps-and-islands): a user's consecutive
@@ -130,6 +136,12 @@ def q_activity_streaks(spark, sf_dir):
     FROM c WHERE 2 * cum >= tot
     GROUP BY l_returnflag
     """,
+    # was 1 with the naive flag-partitioned running window — which
+    # capped parallelism at |flags| = 3 (sf30: 7x wall for 3x data).
+    # The scalable two-phase plan pays 6 exchanges, but every one is
+    # either a combine-heavy aggregation of the corpus (1 pass) or an
+    # exchange of the bounded bucket/median-slice frames
+    exchanges=6,
 )
 def q_weighted_median_price(spark, sf_dir):
     """Weighted median = smallest value whose cumulative weight
@@ -243,6 +255,8 @@ _shared_sql(
              AS benford_expected
     FROM c
     """,
+    # 9-group digit count (map-side combined) + the 9-row OVER ()
+    exchanges=2,
 )
 # First-significant-digit distribution vs Benford's log10(1 + 1/d)
 # expectation — the standard bulk-data fraud/entry-error screen.
@@ -270,6 +284,9 @@ _shared_sql(
            round(max((peak - value) / peak), 6) AS max_rel_drawdown
     FROM s GROUP BY event_type
     """,
+    # running-peak window and the per-series rollup share one
+    # series-keyed shuffle
+    exchanges=1,
 )
 # The risk metric for any cumulative series: largest drop from a
 # running peak.  The running max is an exact pick (no float
@@ -300,6 +317,8 @@ _shared_sql(
                  / (CAST(max(n) AS DOUBLE) * max(tot)), 6) AS gini
     FROM r
     """,
+    # customer spend agg + the per-customer ranked windows
+    exchanges=2,
 )
 def q_revenue_gini(spark, sf_dir):
     """Gini coefficient of per-customer revenue — the inequality /
@@ -421,6 +440,9 @@ def q_revenue_gini(spark, sf_dir):
            CAST(count(*) AS BIGINT) AS n_bins
     FROM terms
     """,
+    # extent is driver model state; 10-row bin table checkpointed —
+    # corpus scanned twice (extent + binning), never re-inlined
+    exchanges=2,
 )
 def q_psi_value_drift(spark, sf_dir):
     """Population stability index between the first and second half of
@@ -516,6 +538,9 @@ def q_psi_value_drift(spark, sf_dir):
                          - CAST(cb AS DOUBLE) / tb)), 6) AS ks_stat
     FROM cum
     """,
+    # per-value grid checkpointed (corpus aggregates once); the CDF
+    # window + totals + final max run on |distinct lengths| rows
+    exchanges=2,
 )
 def q_ks_doc_length_drift(spark, sf_dir):
     """Two-sample Kolmogorov-Smirnov distance between two sources'
@@ -582,6 +607,8 @@ _shared_sql(
            round(CAST(tot AS DOUBLE) / (k * n), 6) AS class_weight
     FROM c CROSS JOIN t
     """,
+    # label census + the one-row totals branch (class-count rows)
+    exchanges=3,
 )
 # sklearn's `class_weight='balanced'` (total / (n_classes * n_label))
 # as one aggregation + a one-row totals broadcast — the loss-reweight
@@ -611,6 +638,8 @@ _shared_sql(
     FROM f WHERE fc IS NOT NULL
     GROUP BY event_type
     """,
+    # daily grid agg + the type-keyed lag window / WAPE rollup
+    exchanges=2,
 )
 # Forecast-quality backtest for the simplest seasonal model (predict
 # = same weekday last week), scored with WAPE — which, unlike MAPE,
@@ -639,6 +668,12 @@ _shared_sql(
     FROM (SELECT tok, count(*) AS c FROM toks GROUP BY tok) t, tot
     WHERE t.c > tot.n / 31.0
     """,
+    # exact-count agg (1) + distinct-heavy filter; sketch side broadcasts
+    # the stream-length scalar moved INTO the plan (broadcast 1-row
+    # sum over the token counts), so the exact agg appears twice in
+    # the pre-AQE tree (runtime dedupes via ReusedExchange) — was a
+    # separate driver count() + extra tokenize pass; 3.5x faster
+    exchanges=5,
 )
 def q_approx_topk_tokens(spark, sf_dir):
     """Bounded-memory heavy-hitter tokens via the Misra-Gries sketch
@@ -698,6 +733,8 @@ def q_approx_topk_tokens(spark, sf_dir):
            round(quantile_cont(value, 0.99), 6) AS p99
     FROM events GROUP BY event_type, CAST(ts AS DATE)
     """,
+    # one (series, day)-keyed exact-percentile aggregation
+    exchanges=1,
 )
 def q_daily_value_percentile_bands(spark, sf_dir):
     """p50/p95/p99 bands per series per day — the latency-dashboard
@@ -738,6 +775,8 @@ def q_daily_value_percentile_bands(spark, sf_dir):
            round(CAST(sum(bpe) AS DOUBLE) / sum(ws), 6) AS fertility
     FROM t GROUP BY lang
     """,
+    # fan_out hop + one lang-keyed two-phase aggregation
+    exchanges=2,
 )
 def q_tokenizer_fertility_by_lang(spark, sf_dir):
     """Tokenizer fertility (BPE-ish tokens per whitespace word) per
@@ -787,6 +826,8 @@ def q_tokenizer_fertility_by_lang(spark, sf_dir):
            round(quantile_cont(delta_s, 0.9), 6) AS p90_s
     FROM d
     """,
+    # user-keyed band join + per-click min + the one-row percentile
+    exchanges=2,
 )
 def q_time_to_convert_percentiles(spark, sf_dir):
     """Funnel timing: for each click that converts within 24h, the
@@ -855,6 +896,8 @@ _shared_sql(
                  * 1000000) / 1000000 AS corr7
     FROM w WHERE n = 7
     """,
+    # daily grid agg + the one-row-per-day global frame window
+    exchanges=2,
 )
 # Trailing 7-day Pearson correlation between two event series — the
 # co-movement diagnostic behind "did clicks decouple from purchases".
@@ -882,6 +925,8 @@ _shared_sql(
            CAST(sum(new_users) OVER (ORDER BY day) AS BIGINT) AS cum_users
     FROM d
     """,
+    # per-user first-seen agg + per-day rollup + day-ordered run
+    exchanges=3,
 )
 # Running COUNT(DISTINCT) over time without a quadratic self-join or
 # an ever-growing distinct state: each user contributes once at their
@@ -917,6 +962,9 @@ _shared_sql(
     JOIN sz na ON source_a = na.source
     JOIN sz nb ON source_b = nb.source
     """,
+    # (source, tok) dedup checkpointed once; visible plan: token
+    # self-join + pair agg + size joins (sources² rows)
+    exchanges=3,
 )
 def q_source_vocab_jaccard(spark, sf_dir):
     """Pairwise vocabulary Jaccard between document sources — the
@@ -991,6 +1039,8 @@ _shared_sql(
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
+    # both explicit frames share one user-keyed shuffle
+    exchanges=1,
 )
 # The navigation-function surface with explicit ROWS frames and a
 # named WINDOW clause — nth_value before its frame holds 2 rows is
@@ -1011,6 +1061,8 @@ _shared_sql(
            CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_v
     FROM events GROUP BY ALL
     """,
+    # one two-phase aggregation
+    exchanges=1,
 )
 # GROUP BY ALL resolves the non-aggregate select list as the grouping
 # key on both engines — one shared text, one two-phase aggregation,
@@ -1075,7 +1127,9 @@ SELECT * FROM ({finals})
 """
 
 
-@register("bpe_merge_table", _bpe_oracle_sql())
+# exchanges: training iterations run at call time (word-count shuffle +
+# tiny vocab aggs); the returned merge table is driver model state
+@register("bpe_merge_table", _bpe_oracle_sql(), exchanges=0)
 def q_bpe_merge_table(spark, sf_dir):
     """First 6 BPE merges learned from the documents corpus
     (`operators/bpe.bpe_train`): the tokenizer-construction step of a
@@ -1109,6 +1163,9 @@ def q_bpe_merge_table(spark, sf_dir):
            TRUE AS weight_monotone
     FROM (SELECT unnest(generate_series(1, 6)) AS r) t
     """,
+    # the lag() window over the 6-row driver-local merge table costs a
+    # single-partition exchange of 6 rows — bounded by num_merges
+    exchanges=1,
 )
 def q_bpe_invariants(spark, sf_dir):
     """Theorem companion to ``bpe_merge_table`` (which since round 6
@@ -1188,6 +1245,10 @@ def q_bpe_invariants(spark, sf_dir):
                  * 1000000) / 1000000 AS v_linear
     FROM x
     """,
+    # same shape as gap_fill_locf (see above): 2 per branch, fixed-N
+    # user_id repartitions keep the sf3 grid explode parallel
+    # (438s -> 1.5s); both IGNORE NULLS windows share one partitioning
+    exchanges=4,
 )
 def q_gap_fill_linear(spark, sf_dir):
     """Gap filling with linear interpolation between the neighboring
@@ -1298,6 +1359,8 @@ _shared_sql(
     SELECT event_type, bin, count(*) AS n
     FROM b GROUP BY event_type, bin
     """,
+    # per-type extent pre-agg (broadcast back) + the bin count
+    exchanges=1,
 )
 # 20-bin equi-width histogram per series — the profiling op behind
 # every "distribution changed?" dashboard.  Bin edges derive from the
@@ -1336,6 +1399,9 @@ _shared_sql(
     JOIN d ON o.dow = d.dow
     CROSS JOIN t
     """,
+    # contingency agg checkpointed (corpus aggregates once); marginal
+    # rollups + joins run on types×7 rows
+    exchanges=3,
 )
 def q_event_dow_chisq(spark, sf_dir):
     """Pearson chi-square contributions for the event-type × weekday
@@ -1404,6 +1470,13 @@ def q_event_dow_chisq(spark, sf_dir):
     JOIN item ib ON part_b = ib.l_partkey
     CROSS JOIN n
     """,
+    # ONE basket repartition shared via ReuseExchange by both
+    # self-join sides AND the item-support branch (identical not-null
+    # filtered subtrees), + item agg + pair agg + the n_orders
+    # countDistinct branch (its own column-pruned corpus exchange +
+    # SinglePartition).  5 EXECUTED exchanges; the textual plan
+    # repeats the shared one per consumer
+    exchanges=5,
 )
 def q_copurchase_rules(spark, sf_dir):
     """Apriori's pairwise step (support / confidence / lift): dedup to
@@ -1542,6 +1615,10 @@ def q_copurchase_rules(spark, sf_dir):
            coalesce(r.clean_text, '') AS clean_text
     FROM documents d LEFT JOIN rebuilt r USING (doc_id)
     """,
+    # +1 vs the window formulation, deliberately: keeper min-agg
+    # combines map-side and the seg join is AQE-skew-splittable,
+    # while a window rank over the segment key is neither
+    exchanges=5,
 )
 def q_segment_dedup(spark, sf_dir):
     """CCNet-style segment-level dedup over the corpus
@@ -1570,6 +1647,8 @@ def q_segment_dedup(spark, sf_dir):
       FROM documents
     ) t
     """,
+    # pure projection: split is a hash of the scanned id, zero shuffles
+    exchanges=0,
 )
 def q_stratified_split(spark, sf_dir):
     """Deterministic hash-based train/val/test assignment (80/10/10):
@@ -1604,6 +1683,8 @@ def q_stratified_split(spark, sf_dir):
     ) t
     QUALIFY shuffle_pos <= 100
     """,
+    # TakeOrdered + bounded 100-row rank: no full-corpus exchange
+    exchanges=0,
 )
 def q_training_order_shuffle(spark, sf_dir):
     """Deterministic global training-order shuffle: each document's
@@ -1649,6 +1730,8 @@ def q_training_order_shuffle(spark, sf_dir):
     SELECT doc_id, source, n_tokens, cum_tokens
     FROM c WHERE cum_tokens - n_tokens < 100
     """,
+    # one source-keyed window + fan_out repartition of the small scan
+    exchanges=2,
 )
 def q_token_budget_mixture(spark, sf_dir):
     """Token-budget mixture sampling — the curriculum-mixing step of a
@@ -1701,6 +1784,9 @@ def q_token_budget_mixture(spark, sf_dir):
     FROM firsts f LEFT JOIN seen s USING (fingerprint)
     WHERE s.fingerprint IS NULL
     """,
+    # batch first-keeper groupBy + index anti join (0 when bucketed —
+    # pinned in test_bucketing.py)
+    exchanges=2,
 )
 def q_incremental_dedup_batch(spark, sf_dir):
     """Incremental exact dedup (`operators/dedup.incremental_exact_
@@ -1739,6 +1825,9 @@ def q_incremental_dedup_batch(spark, sf_dir):
            round(avg(CASE WHEN i % 3 = 2 THEN v END), 6) AS mean_b
     FROM px GROUP BY doc_id
     """,
+    # fan_out repartition only; media decode is per-partition CPU
+    exchanges=1,
+    python=True,  # per-row media decode: Arrow-batched mapInPandas
 )
 def q_multimodal_ppm_features(spark, sf_dir):
     """Driver-checked MULTIMODAL round trip: for every document an
@@ -1810,6 +1899,8 @@ def q_multimodal_ppm_features(spark, sf_dir):
            round(sqrt(avg(CAST(v AS DOUBLE) * v)), 6) AS rms
     FROM s GROUP BY doc_id
     """,
+    exchanges=1,
+    python=True,  # per-row media decode: Arrow-batched mapInPandas
 )
 def q_multimodal_wav_features(spark, sf_dir):
     """Driver-checked AUDIO round trip (the PPM query's WAV twin):
@@ -1871,6 +1962,8 @@ def q_multimodal_wav_features(spark, sf_dir):
     FROM clips c CROSS JOIN generate_series(0, 6) AS t(f)
     WHERE t.f < c.n_frames
     """,
+    exchanges=1,
+    python=True,  # per-row media decode: Arrow-batched mapInPandas
 )
 def q_multimodal_video_frames(spark, sf_dir):
     """Driver-checked VIDEO round trip: each document becomes a real
@@ -1964,6 +2057,8 @@ def q_multimodal_video_frames(spark, sf_dir):
                 AS BIGINT) AS total_tokens
     FROM split GROUP BY lang, split
     """,
+    # segment-dedup core (5) + lang join + (lang,split) rollup
+    exchanges=7,
 )
 def q_curation_pipeline_v2(spark, sf_dir):
     """The full modern curation chain in one hash-checked composite:
@@ -2030,6 +2125,8 @@ def q_curation_pipeline_v2(spark, sf_dir):
              AS residual
     FROM tr t JOIN seas s USING (event_type, dow)
     """,
+    # daily agg + type window + dow agg + rejoin (daily-grid-sized)
+    exchanges=4,
 )
 def q_seasonal_decomposition(spark, sf_dir):
     """STL-lite seasonal decomposition of daily event volumes:
@@ -2113,6 +2210,8 @@ def q_seasonal_decomposition(spark, sf_dir):
       PARTITION BY event_type ORDER BY abs(s_scaled) DESC, day
     ) = 1
     """,
+    # daily agg + totals + type-keyed cusum/argmax windows
+    exchanges=3,
 )
 def q_cusum_changepoint(spark, sf_dir):
     """CUSUM changepoint detection on daily event volumes: the day
@@ -2183,6 +2282,8 @@ def q_cusum_changepoint(spark, sf_dir):
                  / (n * sxx - sx * sx), 6) AS intercept
     FROM s
     """,
+    # daily agg + type-keyed min-window/normal-equation agg
+    exchanges=2,
 )
 def q_daily_trend_slope(spark, sf_dir):
     """Per-series OLS trend: daily event counts regressed on the day
@@ -2251,6 +2352,7 @@ def q_daily_trend_slope(spark, sf_dir):
                         * (n * sbb - sb * sb)), 6) AS autocorr_lag1
     FROM s
     """,
+    exchanges=2,
 )
 def q_daily_autocorr_lag1(spark, sf_dir):
     """Lag-1 autocorrelation of daily volumes per series — the
@@ -2342,6 +2444,9 @@ def q_daily_autocorr_lag1(spark, sf_dir):
            coalesce(r.clean_text, '') AS clean_text
     FROM w LEFT JOIN reb r USING (doc_id)
     """,
+    # same skeleton as segment_dedup: span first-keeper agg, the
+    # two-sided join-back, per-doc collect_set, reassembly join
+    exchanges=5,
 )
 def q_substring_dedup_docs(spark, sf_dir):
     """Exact-substring dedup over the corpus
@@ -2403,6 +2508,9 @@ def q_substring_dedup_docs(spark, sf_dir):
              AS removed_frac
     FROM per_doc GROUP BY source
     """,
+    # substring_dedup_docs + the (doc -> source) dim join and the
+    # small source rollup
+    exchanges=7,
 )
 def q_span_contamination_by_source(spark, sf_dir):
     """Corpus-health rollup of exact-substring contamination: per
@@ -2491,6 +2599,8 @@ def q_span_contamination_by_source(spark, sf_dir):
            CAST(sum(n_kept) AS BIGINT) AS total_tokens
     FROM split GROUP BY lang, split
     """,
+    # substring_dedup_docs chain + lang dim join + final rollup
+    exchanges=7,
 )
 def q_curation_pipeline_v3(spark, sf_dir):
     """Curation composite with the ExactSubstr stage: repeated-span
@@ -2533,6 +2643,8 @@ def q_curation_pipeline_v3(spark, sf_dir):
            round(CAST(20 + doc_id % 30 AS DOUBLE), 6) AS luma_delta
     FROM documents
     """,
+    exchanges=1,
+    python=True,  # per-row media decode: Arrow-batched mapInPandas
 )
 def q_video_shot_boundaries(spark, sf_dir):
     """Driver-checked SHOT-BOUNDARY round trip: each document becomes
@@ -2591,6 +2703,8 @@ def q_video_shot_boundaries(spark, sf_dir):
            round(CAST(500 + doc_id % 100 AS DOUBLE), 6) AS peak_rms
     FROM documents
     """,
+    exchanges=1,
+    python=True,  # per-row media decode: Arrow-batched mapInPandas
 )
 def q_audio_vad_segments(spark, sf_dir):
     """Driver-checked VOICE-ACTIVITY round trip (the shot-boundary
@@ -2659,6 +2773,15 @@ _TD_QS = [0.01, 0.1, 0.25, 0.5, 0.75, 0.9, 0.99]
     GROUP BY 1
     ORDER BY week
     """,
+    # round-10 fused rollup: ONE fan-out of the shared (day, x) frame
+    # (build + audit probe read the same exchange), ONE state-row
+    # shuffle into the fused day->week fold (tdigest_rollup replaced
+    # build-then-merge's two), audit agg pair + final order
+    exchanges=5,
+    jobs=12,  # measured 9
+    # same sketch build, grouped per day then merged per week —
+    # the merge fold is also mapInPandas over KB digest rows
+    python=True,
 )
 def q_tdigest_weekly_rollup(spark, sf_dir):
     """The t-digest MERGEABILITY contract, end-to-end: per-DAY digests
@@ -2766,6 +2889,20 @@ def q_tdigest_weekly_rollup(spark, sf_dir):
     FROM (SELECT unnest({_TD_QS!r}) AS q), s
     ORDER BY q
     """,
+    # digest build (partials -> keyed merge), rank-audit agg, final
+    # order; the 7-row estimate/lossless sides ride broadcasts.
+    # 4 -> 7 in round 7: the corpus is no longer eagerly checkpointed
+    # between the build and audit passes (a single-column parquet
+    # re-scan measured CHEAPER than cache write+read at sf10), so the
+    # STATIC plan text now carries the digest subtree's merge exchange
+    # in each broadcast branch; at runtime ReuseExchange collapses
+    # them (executed plan shows 2 ReusedExchange; partials run once —
+    # sf10 wall dropped 45.9 -> 34.4 s with the change)
+    exchanges=7,
+    # t-digest build is bounded per-partition sketch state (the
+    # Misra-Gries pattern): mapInPandas partials + one KB-state
+    # merge; only digest states cross the wire
+    python=True,
 )
 def q_tdigest_price_quantiles(spark, sf_dir):
     """t-digest (`operators/sketches.tdigest_build`) over lineitem

@@ -42,6 +42,9 @@ _shared_sql(
     SELECT day, CAST(max(conc) AS BIGINT) AS max_concurrent
     FROM run GROUP BY day
     """,
+    # user-day span agg + the per-day sweep window + max-per-day
+    # rollup; all post-aggregate (2 rows per user-day)
+    exchanges=3,
 )
 # Classic sweep-line: each user's per-day activity span becomes a +1
 # at its start and a -1 at its end; the running sum ordered by time is
@@ -79,6 +82,9 @@ _shared_sql(
                  / CAST(sum(dur) AS DOUBLE), 6) AS twa
     FROM seg GROUP BY event_type
     """,
+    # one series-keyed shuffle shared by the lead() window and the
+    # final per-series rollup
+    exchanges=1,
 )
 def q_time_weighted_avg(spark, sf_dir):
     """Time-weighted average per series (TimescaleDB's ``time_weight``
@@ -135,6 +141,9 @@ def q_time_weighted_avg(spark, sf_dir):
                 ELSE round(d.abs_dev / (1.4826 * m.mad), 6) END AS robust_z
     FROM dev d JOIN mad m ON d.event_type = m.event_type
     """,
+    # daily grid checkpointed (corpus aggregates once); median/MAD
+    # branches run on types×days rows, both stat joins broadcast
+    exchanges=3,
 )
 def q_mad_outlier_days(spark, sf_dir):
     """Median/MAD robust z-scores for daily event volumes — the
@@ -197,6 +206,9 @@ _shared_sql(
     FROM p JOIN cum ON p.o_custkey = cum.o_custkey AND p.pr = cum.pr
     WHERE cum.prev_best IS NULL OR p.o_orderdate > cum.prev_best
     """,
+    # price-tier windows and the tier rollup all key on o_custkey —
+    # one hash shuffle reused (AQE), plus the tier-join hop
+    exchanges=2,
 )
 # Per-customer 2D skyline: keep an order iff no strictly cheaper
 # order from the same customer is at least as recent (minimize price,
@@ -252,6 +264,9 @@ _shared_sql(
     FROM lex l FULL OUTER JOIN sem s ON l.doc_id = s.vec_id
     ORDER BY rrf_score DESC, doc_id LIMIT 20
     """,
+    # token-overlap agg + two TakeOrdered top-100s; the 100-row rank
+    # windows and the fusion join are single-partition by size
+    exchanges=3,
 )
 def q_rrf_hybrid_retrieval(spark, sf_dir):
     """Reciprocal rank fusion (k=60) of a lexical signal (distinct
@@ -371,6 +386,9 @@ def q_rrf_hybrid_retrieval(spark, sf_dir):
                  6) AS cos_exact
     FROM topk
     """,
+    # codebook is driver-materialized literals (stats pass runs once,
+    # outside the plan); search is scan → TakeOrdered → 20-row rank
+    exchanges=2,
 )
 def q_sq_ann_topk(spark, sf_dir):
     """Scalar-quantized ANN search (`operators/similarity.sq_quantize`
@@ -426,6 +444,9 @@ def q_sq_ann_topk(spark, sf_dir):
     "pq_ann_topk",
     "SELECT vec_id AS probe_id, TRUE AS self_hit, TRUE AS n_ok, "
     "TRUE AS cos_exact_ok FROM embeddings WHERE vec_id < 3",
+    # encode pass runs before the localCheckpoint cut; visible plan is
+    # probe-LUT build + broadcast + per-probe rank windows
+    exchanges=5,
 )
 def q_pq_ann_topk(spark, sf_dir):
     """Product-quantized ANN (`operators/similarity.pq_build` /
@@ -499,6 +520,10 @@ def q_pq_ann_topk(spark, sf_dir):
      AND e.ts <= c.start_ts + INTERVAL 2 HOUR
     GROUP BY c.campaign_id
     """,
+    # bucketed range join: the (tiny) campaign side broadcasts at this
+    # scale, leaving only the per-campaign agg exchange; at corpus
+    # scale the stats would flip it to a shuffle on the bucket key
+    exchanges=1,
 )
 def q_campaign_window_counts(spark, sf_dir):
     """Global point-in-interval join with NO equi key: every sampled
@@ -549,6 +574,9 @@ def q_campaign_window_counts(spark, sf_dir):
     FROM camp c JOIN inc i
       ON c.c_start < i.i_end AND i.i_start < c.c_end
     """,
+    # both exploded interval sides broadcast-sized here; owner-bucket
+    # dedup adds NO exchange by design
+    exchanges=0,
 )
 def q_campaign_incident_overlap(spark, sf_dir):
     """Interval × interval overlap join with NO equi key ("which
@@ -635,6 +663,10 @@ def q_campaign_incident_overlap(spark, sf_dir):
     WINDOW w AS (ORDER BY dur_h
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
+    # 2-3 corpus exchanges (first-event aggs on user_id); the rest are
+    # single-partition windows/aggs over the span-bounded curve frame
+    # (≤1 row per duration-hour) — slim by construction
+    exchanges=9,
 )
 def q_kaplan_meier_conversion(spark, sf_dir):
     """Kaplan-Meier survival curve for signup→purchase conversion with

@@ -85,7 +85,7 @@ from __future__ import annotations
 from sparkplans.queries import QuerySpec, REGISTRY, _register_needed_views, _shared_sql
 
 
-def _partsupp_sql(name: str, body: str) -> None:
+def _partsupp_sql(name: str, body: str, *, exchanges: int) -> None:
     """Register a partsupp-joining query (q2/q9/q11/q16/q20).
 
     The ORACLE text always synthesizes partsupp through the shared
@@ -115,7 +115,7 @@ def _partsupp_sql(name: str, body: str) -> None:
             return spark.sql(_scan)
         return spark.sql(_cte)
 
-    REGISTRY[name] = QuerySpec(fn, cte_sql)
+    REGISTRY[name] = QuerySpec(fn, cte_sql, exchanges)
 
 # ---------------------------------------------------------------------
 # Shared derived-attribute SQL fragments (identical text both engines)
@@ -197,6 +197,13 @@ _partsupp_sql(
     ORDER BY s_acctbal DESC, n_name, s_name, p_partkey
     LIMIT 100
     """,
+    # partsupp is synthesized per use (CTE, not a table), so q2/q11/
+    # q16/q20 pay its DISTINCT shuffle once per reference; q2's
+    # correlated MIN re-derives it for the subquery side (Catalyst
+    # does not share CTE subtrees across a correlated boundary) —
+    # dimension-derived frames, so each exchange moves |part|-scale
+    # rows, never fact-scale
+    exchanges=10,
 )
 
 
@@ -217,6 +224,7 @@ _shared_sql(
     GROUP BY o_orderpriority
     ORDER BY o_orderpriority
     """,
+    exchanges=2,
 )
 
 
@@ -236,6 +244,7 @@ _shared_sql(
       AND l_discount BETWEEN 0.05 AND 0.07
       AND l_quantity < 24
     """,
+    exchanges=1,
 )
 
 
@@ -266,6 +275,7 @@ _shared_sql(
     GROUP BY supp_nation, cust_nation, l_year
     ORDER BY supp_nation, cust_nation, l_year
     """,
+    exchanges=2,
 )
 
 
@@ -301,6 +311,7 @@ _shared_sql(
     GROUP BY o_year
     ORDER BY o_year
     """,
+    exchanges=2,
 )
 
 
@@ -329,6 +340,7 @@ _partsupp_sql(
     GROUP BY nation, o_year
     ORDER BY nation, o_year DESC
     """,
+    exchanges=4,
 )
 
 
@@ -353,6 +365,7 @@ _shared_sql(
     ORDER BY revenue DESC, c_custkey
     LIMIT 20
     """,
+    exchanges=1,
 )
 
 
@@ -381,6 +394,7 @@ _partsupp_sql(
                 AND n_name = 'NATION_3')
     ORDER BY val DESC, ps_partkey
     """,
+    exchanges=7,
 )
 
 
@@ -409,6 +423,7 @@ _shared_sql(
     GROUP BY l_shipmode
     ORDER BY l_shipmode
     """,
+    exchanges=2,
 )
 
 
@@ -430,6 +445,7 @@ _shared_sql(
     GROUP BY c_count
     ORDER BY custdist DESC, c_count DESC
     """,
+    exchanges=3,
 )
 
 
@@ -449,6 +465,7 @@ _shared_sql(
       AND l_shipdate >= TIMESTAMP '1997-09-01 00:00:00'
       AND l_shipdate < TIMESTAMP '1997-10-01 00:00:00'
     """,
+    exchanges=1,
 )
 
 
@@ -472,6 +489,7 @@ _shared_sql(
       AND total_rev = (SELECT max(total_rev) FROM revenue0)
     ORDER BY s_suppkey
     """,
+    exchanges=4,
 )
 
 
@@ -494,6 +512,7 @@ _partsupp_sql(
     GROUP BY p_brand, p_type, p_size
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
+    exchanges=5,
 )
 
 
@@ -516,6 +535,7 @@ _shared_sql(
         FROM lineitem l2
         WHERE l2.l_partkey = p_partkey)
     """,
+    exchanges=2,
 )
 
 
@@ -540,6 +560,7 @@ _shared_sql(
     ORDER BY o_totalprice DESC, o_orderdate, o_orderkey
     LIMIT 100
     """,
+    exchanges=3,
 )
 
 
@@ -568,6 +589,7 @@ _shared_sql(
         OR {_q19_arm('Brand#23', 10, 10)}
         OR {_q19_arm('Brand#34', 15, 20)})
     """,
+    exchanges=1,
 )
 
 
@@ -596,6 +618,7 @@ _partsupp_sql(
       AND n_name = 'NATION_3'
     ORDER BY s_name
     """,
+    exchanges=6,
 )
 
 
@@ -627,6 +650,7 @@ _shared_sql(
     ORDER BY numwait DESC, s_name
     LIMIT 100
     """,
+    exchanges=1,
 )
 
 
@@ -670,4 +694,5 @@ _shared_sql(
     GROUP BY cntrycode
     ORDER BY cntrycode
     """,
+    exchanges=4,
 )

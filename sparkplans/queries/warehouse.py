@@ -37,6 +37,8 @@ _shared_sql(
     FROM seq WHERE prev_type IS NOT NULL
     GROUP BY prev_type, event_type
     """,
+    # user-keyed window + tiny (prev,next) rollup
+    exchanges=2,
 )
 # Markov transition counts (first-order sequential pattern mining).
 # One user-keyed shuffle for the window, one small keyed shuffle for
@@ -56,6 +58,7 @@ _shared_sql(
     FROM events
     WHERE event_type = 'signup'
     """,
+    exchanges=1,
 )
 # Slowly-changing-dimension type 2 build: each attribute observation
 # opens a validity interval closed by the next one (lead), latest row
@@ -77,6 +80,8 @@ _shared_sql(
     SELECT user_id, event_type AS mode_type, n AS n_events
     FROM r WHERE rn = 1
     """,
+    # per-(user,type) counts + user-keyed ranking window
+    exchanges=2,
 )
 # Deterministic per-user mode: explicit (count DESC, value ASC)
 # tie-break instead of engine-defined mode() so both engines agree.
@@ -97,6 +102,7 @@ _shared_sql(
     FROM customer WHERE c_acctbal > 9000
     GROUP BY c_nationkey
     """,
+    exchanges=1,
 )
 def q_listagg_customers(spark, sf_dir):
     """LISTAGG / string_agg analog: per-nation sorted name roster.
@@ -128,6 +134,8 @@ def q_listagg_customers(spark, sf_dir):
            round(ln(total) - CAST(s AS DOUBLE) / total, 6) AS entropy
     FROM agg
     """,
+    # fan_out + (doc,tok) counts + per-doc rollup
+    exchanges=3,
 )
 def q_token_entropy(spark, sf_dir):
     """Shannon entropy of each document's token distribution — a
@@ -176,6 +184,13 @@ def q_token_entropy(spark, sf_dir):
              AS v_filled
     FROM j
     """,
+    # 2 per branch: hourly pre-agg + explicit fixed-N user_id
+    # repartition on BOTH the range branch and the hourly branch (the
+    # explicit repartition keeps AQE from coalescing the tiny per-user
+    # agg to 1 partition, which serialized the 31M-row sf3 grid
+    # explode into a single task: 349s -> 2.2s).  Both exchanges carry
+    # only pre-aggregated rows; the exploded grid is never shuffled.
+    exchanges=4,
 )
 def q_gap_fill_locf(spark, sf_dir):
     """Time-series gap filling with last-observation-carried-forward:
@@ -260,6 +275,10 @@ _BM25_TERMS = ("join", "scan", "merge")
            round(CAST(sum(CAST(w AS DECIMAL(28,12))) AS DOUBLE), 6) AS bm25
     FROM s GROUP BY doc_id
     """,
+    # fan_out + per-doc wide agg, subtree repeated under the one-row
+    # stats rollup (2x2) + the rollup itself; AQE ReusedExchange
+    # collapses the repeat at runtime => 3 physical stages
+    exchanges=5,
 )
 def q_bm25_scores(spark, sf_dir):
     """BM25 (k1=1.2, b=0.75) relevance scores for a fixed query term
@@ -324,6 +343,8 @@ def q_bm25_scores(spark, sf_dir):
            array_to_string(list_sort(list(doc_id)), ',') AS postings
     FROM toks GROUP BY tok HAVING count(*) BETWEEN 2 AND 50
     """,
+    # fan_out + map-side-distinct expand + token-keyed postings agg
+    exchanges=3,
 )
 def q_inverted_index(spark, sf_dir):
     """Inverted-index construction: token -> sorted posting list of
@@ -364,6 +385,11 @@ def q_inverted_index(spark, sf_dir):
      AND abs(a.n_chars - b.n_chars) <= 8
     WHERE levenshtein(substr(a.text, 1, 48), substr(b.text, 1, 48)) <= 16
     """,
+    # fan_out + one (source,bucket) hash join + pair dedup
+    # was 3 with a dropDuplicates that shuffled the full candidate-pair
+    # stream (prefixes attached) — Omega(pairs) scratch, exhausted the
+    # disk at sf30; the owner-bucket rule dedups inside the join stage
+    exchanges=2,
 )
 def q_edit_distance_near_dups(spark, sf_dir):
     """Edit-distance near-duplicate pairs with band blocking: candidate
@@ -441,6 +467,8 @@ def q_edit_distance_near_dups(spark, sf_dir):
              AS chunk_md5
     FROM c
     """,
+    # chunking is codegen-only; fan_out is the only exchange
+    exchanges=1,
 )
 def q_doc_chunks(spark, sf_dir):
     """RAG-style sliding-window chunking: 32-token chunks on a
@@ -528,6 +556,10 @@ def q_doc_chunks(spark, sf_dir):
                 ELSE 'regular' END AS segment
     FROM s
     """,
+    # 0 = returned plan scores the checkpointed per-customer agg with
+    # literal quintile boundaries; the custkey shuffle runs once at
+    # checkpoint construction
+    exchanges=0,
 )
 def q_rfm_segments(spark, sf_dir):
     """RFM segmentation — the classic CRM scoring: each customer's

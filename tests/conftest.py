@@ -47,14 +47,14 @@ def engine(spark):
     return Engine(spark=spark)
 
 
-# Session-scoped frame memo shared by the whole-registry structural
-# gates (test_shuffle_budgets and test_plan_properties' no-python
-# gate): each builds a DataFrame for all ~258 registered queries, and
-# frame construction + executedPlan resolution costs ~0.45 s of
-# driver-side Catalyst work per query — paying it twice was ~2 min of
-# suite wall.  Frames are plan-only (never executed) and built under
-# the default session confs; a fresh pytest process rebuilds from the
-# current code, so the ratchets still test HEAD.
+# Session-scoped frame memo shared by the whole-registry plan sweeps
+# (test_shuffle_budgets, test_window_lint, the no-python gate), which
+# check the contract each query declares at its registration
+# (QuerySpec).  Building a frame + its executedPlan costs ~0.45 s of
+# driver-side Catalyst work per query, ~2 min of suite wall per extra
+# sweep.  Frames are never executed, so every sweep reads the same
+# pre-action plan, built under the default session confs; a fresh
+# pytest process rebuilds from the current code.
 _FRAME_MEMO: dict = {}
 
 

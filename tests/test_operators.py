@@ -1120,6 +1120,53 @@ def test_pagerank_shuffle_path_parity(spark, monkeypatch):
     assert abs(sum(shuffled.values()) - 1.0) < 1e-9
 
 
+def _persisted_ids(spark) -> set:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+@pytest.mark.parametrize(
+    "op, dangling, shuffle",
+    [
+        ("pagerank", False, False),
+        ("pagerank", False, True),
+        ("pagerank", True, False),
+        ("label_propagation", False, False),
+    ],
+)
+def test_iterative_cuts_released(spark, monkeypatch, op, dangling, shuffle):
+    """Each superseded lineage cut is released as soon as the next one
+    is built — lazy cuts included — so a call leaves only its returned
+    cut persisted, and while it runs at most the two corpus caches plus
+    two cuts (the live one and the one being built) hold blocks."""
+    from sparkplans.operators import graph
+
+    edge_list = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 1), (2, 4)]
+    if dangling:
+        edge_list.append((4, 5))
+    edges = spark.createDataFrame(edge_list, "src long, dst long")
+    if shuffle:
+        monkeypatch.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
+    baseline, peak = _persisted_ids(spark), []
+
+    def recorded(cut):
+        def wrapper(*args, **kwargs):
+            out = cut(*args, **kwargs)
+            peak.append(len(_persisted_ids(spark) - baseline))
+            return out
+
+        return wrapper
+
+    for cut in ("materialize", "materialize_lazy"):
+        monkeypatch.setattr(graph, cut, recorded(getattr(graph, cut)))
+    out = getattr(graph, op)(edges, iterations=6)
+    leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+    assert leaves.size() == 1
+    returned = leaves.head().rdd().id()
+    assert _persisted_ids(spark) - baseline == {returned}
+    assert max(peak) <= 4, peak
+    assert out.count() == (5 if dangling else 4)
+
+
 def test_materialize_release_frees_blocks(spark):
     """materialize.release drops a local checkpoint's storage blocks
     deterministically (no GC/ContextCleaner wait) — the lever that
@@ -1789,20 +1836,6 @@ def test_prefix_filter_slice_dir_retention_prunes_old_runs(spark, tmp_path):
     assert got is not None
     assert not os.path.exists(old), "week-old run dir should be pruned"
     assert os.path.exists(young), "fresh run dir must survive (live run)"
-
-
-def test_ssjoin_slices_env_rejects_garbage(spark, monkeypatch):
-    """A malformed SPARK_GRAFT_SSJOIN_SLICES must raise an error that
-    names the env var and its accepted forms, not a bare int() crash
-    mid-sweep."""
-    from sparkplans.queries import REGISTRY
-
-    monkeypatch.setenv("SPARK_GRAFT_SSJOIN_SLICES", "aut0")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_SSJOIN_SLICES"):
-        REGISTRY["ssjoin_near_dups"].fn(spark, SF_DIR)
-    # ' AUTO ' (whitespace / case) is accepted
-    monkeypatch.setenv("SPARK_GRAFT_SSJOIN_SLICES", " AUTO ")
-    assert REGISTRY["ssjoin_near_dups"].fn(spark, SF_DIR) is not None
 
 
 # -- Misra-Gries heavy hitters ----------------------------------------------

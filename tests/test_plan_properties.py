@@ -130,59 +130,39 @@ def test_limit0_schema_peek(spark, engine):
 
 def test_no_python_in_any_query_hot_path(spark, registry_frame):
     """Global structural gate: every registered query plans entirely
-    JVM-side — no row-at-a-time Python (BatchEvalPython) and no Arrow
-    Python stages (ArrowEvalPython/MapInPandas) outside the explicitly
-    Python-by-design operators.  Guards against a convenience UDF
-    sneaking into a hot path."""
-    import sparkplans.queries as Q
-    from sparkplans import plans as P
-    from tests.conftest import SF_DIR
-
-    # Python-BY-DESIGN queries: media codec pipelines are per-row
-    # binary decode — the one workload where Arrow-batched mapInPandas
-    # IS the idiomatic Spark plan (pyspark_guide: Pandas UDFs for
-    # unavoidable Python).  Anything else showing a Python stage is a
-    # regression.
-    python_by_design = {
-        "multimodal_ppm_features",
-        "multimodal_wav_features",
-        "multimodal_video_frames",
-        "video_shot_boundaries",
-        "audio_vad_segments",
-        # bin packing is sequential decision logic — the numpy FFD
-        # inside applyInPandas is the idiomatic Spark plan for it
-        "ffd_sequence_packing",
-        # per-cell pair scoring is one BLAS matmul per triangle cell;
-        # the codegen'd per-pair fold it replaced cost 5.8 µs/pair and
-        # pinned 32 cores for an hour at sf10's ~930M candidate pairs
-        # (same matmul-heavy exception as fit_pca's moment pass)
-        "embedding_near_dups",
-        # probes are collected model state; each corpus partition
-        # scores all of them as chunked matmuls — zero exchanges,
-        # replacing the 3.6B-pair codegen fold at sf10
-        "semantic_decontamination",
-        # t-digest build is bounded per-partition sketch state (the
-        # Misra-Gries pattern): mapInPandas partials + one KB-state
-        # merge; only digest states cross the wire
-        "tdigest_price_quantiles",
-        # same sketch build, grouped per day then merged per week —
-        # the merge fold is also mapInPandas over KB digest rows
-        "tdigest_weekly_rollup",
-    }
-    offenders = []
-    for name in sorted(Q.REGISTRY):
-        if name in python_by_design:
-            continue
-        df = registry_frame(name)
-        txt = P.physical_plan_str(df)
-        if (
-            "BatchEvalPython" in txt
-            or "ArrowEvalPython" in txt
-            or "MapInPandas" in txt
-            or "FlatMapGroupsInPandas" in txt
-        ):
-            offenders.append(name)
+    JVM-side — no Python exec node of any kind (plans.num_python_stages)
+    — unless it is registered ``python=True``, the Python-by-design
+    operators whose reason sits at their registration.  Guards against
+    a convenience UDF sneaking into a hot path."""
+    offenders = [
+        name
+        for name, spec in sorted(Q.REGISTRY.items())
+        if not spec.python and plans.num_python_stages(registry_frame(name))
+    ]
     assert offenders == [], f"Python stages found in: {offenders}"
+
+
+def test_python_stages_count_grouped_pandas_nodes(spark):
+    """Every Python exec node counts, not only the scalar and map ones:
+    grouped applyInPandas, cogrouped applyInPandas and a grouped-agg
+    pandas UDF each plan one Python stage."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    df = spark.range(8).withColumn("g", F.col("id") % 2)
+
+    @pandas_udf("double")
+    def mean_id(v: pd.Series) -> float:
+        return float(v.mean())
+
+    grouped = df.groupBy("g")
+    assert plans.num_python_stages(grouped.applyInPandas(lambda p: p, df.schema)) == 1
+    cogrouped = grouped.cogroup(df.groupBy("g")).applyInPandas(
+        lambda a, b: a, df.schema
+    )
+    assert plans.num_python_stages(cogrouped) == 1
+    assert plans.num_python_stages(grouped.agg(mean_id("id"))) == 1
+    assert plans.num_python_stages(df) == 0
 
 
 def test_config_shapes_join_strategy(spark):
@@ -344,7 +324,7 @@ def test_audit_summary_and_exchange_reuse(spark):
         "python_stages", "join_strategies", "pushed_filters",
     }
     assert a["python_stages"] == 0
-    assert a["exchanges"] <= 4  # mirrors tests/test_shuffle_budgets.py
+    assert a["exchanges"] <= Q.REGISTRY["lsh_candidates"].exchanges
 
     # diamond lineage: self-join of one aggregated subtree => the
     # second scan+shuffle is a ReusedExchange, not a recomputation

@@ -41,43 +41,30 @@ def test_query_under_ceiling(spark, name):
     )
 
 
-# Scheduler-job budgets for the iterative queries: per-job overhead is
-# ~0.1 s on a busy driver (the round-6 host-drift analysis showed
-# many-small-job queries inflating 1.6-1.8x on a slow scheduler), so
-# job COUNT is a first-class plan property, ratcheted like exchanges.
-# Budgets are the round-7 measured counts + small headroom; job count
-# is a function of plan shape + iteration count, not data size.
-JOB_BUDGETS = {
-    # round 10: counts ride the nodes_deg materialization, init ranks
-    # is a cache projection, and no-dangling iterations chain as lazy
-    # cuts — one scheduler job per iteration instead of two
-    "pagerank_copurchase": 26,  # measured 22 (was 40 in round 9)
-    "semantic_dedup": 18,       # measured 14 (was 20 in round 9)
-    "pca_whitening": 12,        # measured 10
-    "dedup_clusters": 46,       # measured 36 (was 59 in round 9)
-    # round 10: the fused tdigest_rollup (one state shuffle + one fold)
-    "tdigest_weekly_rollup": 12,  # measured 9
-}
+def _save(spark, name: str):
+    df = Q.REGISTRY[name].fn(spark, SF_DIR)
+    df.write.format("noop").mode("overwrite").save()
+    return df
 
 
-@pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
+def _next_job_id(spark) -> int:
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+# Job COUNT is a first-class plan property for the iterative queries
+# (per-job overhead is ~0.1 s on a busy driver), ratcheted like
+# exchanges through QuerySpec.jobs.
+@pytest.mark.parametrize(
+    "name", sorted(n for n, s in Q.REGISTRY.items() if s.jobs is not None)
+)
 def test_scheduler_job_budget(spark, name):
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
-    # warm run: AQE stage stats / codegen caches can change job counts
-    Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    before = next_job_id()
-    Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    used = next_job_id() - before
-    assert used <= JOB_BUDGETS[name], (
-        f"{name}: {used} scheduler jobs > budget {JOB_BUDGETS[name]} — "
+    _save(spark, name)  # warm run: AQE stage stats / codegen caches
+    before = _next_job_id(spark)
+    _save(spark, name)
+    used = _next_job_id(spark) - before
+    budget = Q.REGISTRY[name].jobs
+    assert used <= budget, (
+        f"{name}: {used} scheduler jobs > budget {budget} — "
         "a new per-iteration action/branch snuck in (driver collect, "
         "extra broadcast stage, or eager materialize)"
     )
@@ -101,9 +88,7 @@ def test_warm_rerun_compiles_no_class(spark):
 
     def run_all() -> None:
         for name in names:
-            Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            _save(spark, name)
 
     run_all()
     before = compiles()
@@ -120,26 +105,18 @@ def test_scheduler_job_budget_pagerank_shuffle_path(spark, monkeypatch):
     legitimately pays the one-time src re-layout plus a ranks-side
     shuffle per iteration over the broadcast shape (measured 52 at
     sf0.1 vs broadcast's 40), and nothing more."""
+    from sparkplans import plans
     from sparkplans.operators import graph
 
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
-    from sparkplans import plans
-
-    fn = Q.REGISTRY["pagerank_copurchase"].fn
     monkeypatch.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
-    df = fn(spark, SF_DIR)
-    df.write.format("noop").mode("overwrite").save()
+    df = _save(spark, "pagerank_copurchase")
     assert (graph.last_run_stats or {}).get("path") == "shuffle"
     # static plan contract matches the broadcast shape: the
     # returned frame reads the final checkpoint, zero exchanges
     assert plans.num_exchanges(df) == 0
-    before = next_job_id()
-    fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-    used = next_job_id() - before
+    before = _next_job_id(spark)
+    _save(spark, "pagerank_copurchase")
+    used = _next_job_id(spark) - before
     assert used <= 34, (
         f"pagerank shuffle path: {used} scheduler jobs > budget 34 "
         "(measured 28 after the round-10 lazy iteration chain; was 52) "

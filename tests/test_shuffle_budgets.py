@@ -2,11 +2,11 @@
 
 The reference asserts plan *shape* (its golden plans fail if a
 RepartitionExec sneaks in: tests/opt_parallel_execution.rs:65-82).
-This is our version at library scale: every registered query has a
-pinned maximum Exchange count (broadcasts excluded — those are the
-cheap alternative).  A refactor that silently adds a shuffle anywhere
-in the 96-query library fails here, at sf0.001, long before it costs
-hours at 100 TB.
+This is our version at library scale: every query declares its
+maximum Exchange count where it is registered (``QuerySpec.exchanges``;
+broadcasts excluded — those are the cheap alternative).  A refactor
+that silently adds a shuffle anywhere in the query library fails here,
+at sf0.001, long before it costs hours at 100 TB.
 
 Counting is by EXECUTED shuffles: canonically-identical exchanges
 count once, because ReuseExchange runs one shuffle per
@@ -20,8 +20,8 @@ a budget diff between environments where only the fallback is
 available is a counting artifact, not a plan change.
 
 Budgets are the currently-achieved counts — a deliberate ratchet.
-Lowering one is an optimization; raising one must be argued in the
-diff.
+Lowering one is an optimization; raising one must be argued beside it
+at the registration site.
 """
 
 from __future__ import annotations
@@ -31,543 +31,24 @@ import pytest
 import sparkplans.queries as Q
 from sparkplans import plans
 
-SF_DIR = "/root/testdata/sf0.001"
 
-# name -> max allowed shuffle exchanges in the (pre-AQE) physical plan
-BUDGETS = {
-    "agg_count_star": 1,
-    "anti_join": 0,
-    # tolerance-encoded oracle computes exact countDistinct beside the
-    # sketch: Spark's distinct-agg expansion adds the second exchange
-    "approx_distinct_users": 2,
-    "approx_value_quantiles": 1,
-    "argmax_struct": 1,
-    "array_agg_ops": 1,
-    "asof_join_events": 1,
-    "between_and_in_list": 0,
-    "bpe_token_counts": 0,
-    "broadcast_join_agg": 1,
-    "case_when_agg": 1,
-    "correlated_scalar_subquery": 1,
-    "cross_join_small": 0,
-    "cube_agg": 1,
-    "curation_pipeline": 2,
-    "date_funcs": 1,
-    "datebin_5min_counts": 1,
-    # 1 = the RETURNED plan assembles labels from the converged star
-    # edge set (nodes left-join min-agg over the checkpoint); the
-    # large-star/small-star rounds shuffle during construction
-    # (bounded: 4/round x O(log^2 n) rounds, diameter-independent)
-    "dedup_clusters": 1,
-    "dedup_exact": 1,
-    # the operator's pairwise scan + min-agg run ONCE (assigned and
-    # dup_of are both checkpointed inside it); the audit re-derives
-    # pairs from the ASSIGNED checkpoint directly (round 9 — the old
-    # res-based audit re-joined the corpus to dup_of first, paying
-    # exchange+sort pairs for columns the triangle never read), so
-    # what remains is the audit's own fold join + min-agg + the final
-    # slim join
-    "semantic_dedup": 3,
-    # (doc,bucket) count shuffle; 64-row stats/total/lambda stay small
-    # and broadcast back; final per-doc agg
-    "dsir_importance_weights": 4,
-    "distinct_agg": 2,
-    "doc_fingerprints": 0,
-    "embedding_near_dups": 2,
-    "embedding_norms": 0,
-    "except_op": 1,
-    "exists_subquery": 0,
-    # packed frame is materialized (the pack shuffle runs once inside
-    # it); the 4 counted are the distinct-agg expansion (2) + the
-    # groupBy(seq_id) loads + the 1-row bin_stats agg
-    "ffd_sequence_packing": 4,
-    # groupBy(source) runs once behind the 20-row checkpoint; the one
-    # counted exchange is the 1-row max over it — selection itself is
-    # a broadcast-join projection over the scan, zero corpus shuffles
-    "mixture_epoch_sample": 1,
-    "not_exists_subquery": 0,
-    "heavy_hitters_tokens": 2,
-    "higher_order_funcs": 0,
-    # fan_out + tf + per-token stats + single-row corpus count
-    "tfidf_top_terms": 4,
-    "quota_sample_per_lang": 1,
-    # fan_out + distinct-agg expand (2 keyed shuffles)
-    "repetition_ratio": 3,
-    # fan_out x2 (test/train gram subtrees) + train distinct + per-doc
-    # verdict agg + gram join
-    "decontamination_ngrams": 5,
-    # vocab localCheckpointed (the persisted-table stand-in): corpus
-    # tokenized twice, not three times; total is a vocab rollup
-    "unigram_logprob_scores": 3,
-    "sequence_packing": 1,
-    "posexplode_vectors": 0,
-    "bitwise_agg": 1,
-    "stats_moments": 1,
-    # per-(user,type) counts then per-user map assembly
-    "map_roundtrip": 2,
-    # (key,salt) spread stage + tiny per-key merge stage — by design
-    "salted_agg": 2,
-    # salted fact shuffle on (k, salt) + replicated dim shuffle + agg
-    # partial/final (at test scale the dim side broadcasts => 1)
-    "skewed_join_salted": 4,
-    "label_centroids": 1,
-    # per-user pivot + single-row rollup
-    "event_funnel": 2,
-    # first-seen agg + join-back + distinct-user expand
-    "cohort_retention": 3,
-    # fan_out + single-row rollup
-    "gopher_quality_rules": 2,
-    "sliding_window_counts": 1,
-    "filter_pushdown": 0,
-    "flagship_datebin": 1,
-    "full_outer_join": 2,
-    "grouping_sets_agg": 1,
-    "hypertable_rollup_1h": 2,
-    "in_subquery": 0,
-    "intersect_op": 1,
-    "ivf_ann_topk": 4,  # r6: projection assignment dropped one exchange
-    "join_implicit_equi": 0,
-    "json_extract_agg": 1,
-    "knn_brute_force": 0,
-    # invariant join of two iterative outputs (labels ⋈ comp ⋈ comp):
-    # both sides are node-sized at 100 TB so neither broadcasts; the
-    # iterations themselves are behind localCheckpoint cuts
-    "label_propagation_communities": 8,
-    "lang_id_heuristic": 0,
-    "left_join_agg": 1,
-    "length_histogram": 1,
-    "like_patterns": 0,
-    "lsh_ann_topk": 3,
-    "lsh_candidates": 4,
-    "math_funcs": 0,
-    "merge_join": 2,
-    "minhash_signatures": 2,
-    # candidates localCheckpointed; verify = semi-filter + set-array
-    # jaccard (was 10 with the exploded equi-join formulation)
-    "near_dup_pairs": 6,
-    "ngram_distinct": 0,
-    "null_handling": 0,
-    "percentile_exact": 1,
-    "pii_redaction_stats": 1,
-    "pivot_status": 2,
-    "pricing_summary": 2,
-    "projection_pushdown": 0,
-    "quality_scores": 1,
-    "regexp_extract_ids": 0,
-    "rollup_agg": 1,
-    "scalar_subquery": 2,
-    "scan_order": 1,
-    "semi_join": 0,
-    "session_window_agg": 1,
-    "sessionize_batch": 1,
-    "shuffle_hash_join": 2,
-    "simhash_fingerprints": 2,
-    "string_funcs": 0,
-    "text_stats": 1,
-    "top_suppliers_per_nation": 2,
-    "topk": 0,
-    # one hash shuffle onto the shard key; row_number sorts inside
-    # each shard's partition (never a global window)
-    "training_shard_order": 1,
-    "tpch_q10_returned_items": 1,
-    "tpch_q11_important_value": 3,
-    "tpch_q12_priority_shipping": 2,
-    "tpch_q13_custdist": 3,
-    "tpch_q14_promo": 1,
-    "tpch_q15_top_supplier": 4,
-    "tpch_q16_supplier_cnt": 2,
-    "tpch_q17_small_qty": 2,
-    "tpch_q18_large_volume": 3,
-    "tpch_q19_disjunctive": 1,
-    "tpch_q20_excess_shippers": 5,
-    "tpch_q21_waiting_supplier": 1,
-    "tpch_q22_idle_customers": 4,
-    "tpch_q2_min_cost_supplier": 4,
-    "tpch_q3_topk_revenue": 1,
-    "tpch_q4_priority": 2,
-    "tpch_q5_local_supplier": 2,
-    "tpch_q6_forecast_revenue": 1,
-    "tpch_q7_volume_shipping": 2,
-    "tpch_q8_market_share": 2,
-    "tpch_q9_product_profit": 2,
-    "train_test_split": 1,
-    "union_all": 0,
-    "union_distinct": 1,
-    "unpivot_metrics": 0,
-    "user_value_trend": 1,
-    "variant_extract": 0,
-    "window_distribution": 1,
-    "window_lag": 1,
-    "window_range_frame": 1,
-    "window_rank": 1,
-    "window_running_total": 1,
-    # --- batch 2 (queries/warehouse.py) ---
-    # user-keyed window + tiny (prev,next) rollup
-    "event_transitions": 2,
-    "scd2_user_value": 1,
-    # per-(user,type) counts + user-keyed ranking window
-    "mode_event_type": 2,
-    "listagg_customers": 1,
-    # fan_out + (doc,tok) counts + per-doc rollup
-    "token_entropy": 3,
-    # 2 per branch: hourly pre-agg + explicit fixed-N user_id
-    # repartition on BOTH the range branch and the hourly branch (the
-    # explicit repartition keeps AQE from coalescing the tiny per-user
-    # agg to 1 partition, which serialized the 31M-row sf3 grid
-    # explode into a single task: 349s -> 2.2s).  Both exchanges carry
-    # only pre-aggregated rows; the exploded grid is never shuffled.
-    "gap_fill_locf": 4,
-    # fan_out + per-doc wide agg, subtree repeated under the one-row
-    # stats rollup (2x2) + the rollup itself; AQE ReusedExchange
-    # collapses the repeat at runtime => 3 physical stages
-    "bm25_scores": 5,
-    # fan_out + map-side-distinct expand + token-keyed postings agg
-    "inverted_index": 3,
-    # fan_out + one (source,bucket) hash join + pair dedup
-    # was 3 with a dropDuplicates that shuffled the full candidate-pair
-    # stream (prefixes attached) — Omega(pairs) scratch, exhausted the
-    # disk at sf30; the owner-bucket rule dedups inside the join stage
-    "edit_distance_near_dups": 2,
-    # chunking is codegen-only; fan_out is the only exchange
-    "doc_chunks": 1,
-    # --- batch 3 (queries/analytics.py) ---
-    # (user,day) distinct + the distinct-agg pair on the exploded grid
-    "rolling_active_users_7d": 3,
-    # user-keyed self-join; band predicate rides the hash join
-    "attribution_clicks_24h": 1,
-    "exact_value_percentiles": 1,
-    # orders-side agg + one-row OVER() total; dims broadcast
-    "revenue_share_by_nation": 2,
-    # fan_out + fingerprint-keyed agg (32-byte keys, not text)
-    "bow_duplicate_groups": 2,
-    # one user-keyed window partitioning shared by frame + rank
-    "ewma_user_value": 1,
-    # same shape as ewma_user_value: one user-keyed window shuffle,
-    # fold is a JVM lambda over a <=12-element array
-    "holt_trend_forecast": 1,
-    # lang census + one-row totals rollup + broadcast-back
-    "lang_mixture_weights": 3,
-    # one keyed shuffle of fixed-size sketch states
-    # sketch agg + exact countDistinct (2 exchanges, distinct
-    # expansion) for the tolerance oracle; same-key join adds none
-    "hll_daily_users": 3,
-    # exact multi-column distinct => Expand + two single-partition
-    # state merges; approx operator mode is the scale path
-    # split -> explode(sequence) -> slice -> md5: pure pipelined
-    # projection+generate, whole-stage codegen end to end
-    "oversized_doc_split": 0,
-    # returned plan: 16-row driver-local invariant grid + its sort;
-    # the moment passes shuffle during construction (2 skinny
-    # explode-sum exchanges, d^2-row payloads)
-    "pca_whitening": 1,
-    # bin-count agg (materialized 10-row table) + final bin sort; the
-    # totals/min-max branches are 1-row broadcasts
-    "feature_drift_psi": 2,
-    # Spark's distinct-agg expansion on (split, fp): two exchanges of
-    # pre-aggregated rows; fingerprint+bucket are scan-side projection
-    "leakage_safe_split": 2,
-    # dimension-sized UnionLoop recursion + final min-agg
-    "recursive_cte_reach": 1,
-    "orders_profile": 2,
-    # one Expand+countDistinct pass for the column-local checks (2
-    # single-partition state hops), one dedup of the FK reference
-    # keys, one final-agg hop after the broadcast join; all
-    # constant-size states or dimension keys — no fact data shuffles
-    "orders_quality_gate": 4,
-    # one full-outer sort-merge join: each side shuffles on the key
-    # once; bucketed snapshots would bring this to 0
-    "orders_snapshot_diff": 2,
-    # LATERAL decorrelated into a ranking window (one keyed shuffle)
-    # + broadcast join with nation
-    "lateral_top_customers": 1,
-    # all 14 co-moments in one partial+final pass of DECIMAL states
-    "lineitem_corr_matrix": 1,
-    # ~80-row recursive spine broadcasts; one keyed agg on the fact
-    "recursive_month_spine": 1,
-    # (type,day) grid agg + per-type stats rollup + the grid-side
-    # re-shuffle under the stats join; all post-aggregate row counts
-    "daily_volume_anomalies": 3,
-    # triple join over the checkpointed (thresholded) edge list + two
-    # count rollups; the lineitem self-join shuffles happen once,
-    # before the checkpoint cut
-    "copurchase_triangles": 6,
-    # one lang-keyed rank window (+ tiny final exchange)
-    "weighted_doc_sample": 2,
-    # ranked-shingle arrays are checkpointed (shingle-df join + per-doc
-    # agg happen before the cut); the visible plan is the prefix
-    # self-join (broadcast at this scale) + candidate dedup
-    "ssjoin_near_dups": 1,
-    # per-iteration lineage is cut by localCheckpoint; the returned
-    # frame reads the final checkpoint (iteration shuffles are keyed
-    # aggregates counted per pass, not accumulated in the plan)
-    "pagerank_copurchase": 0,
-    # +1 vs the window formulation, deliberately: keeper min-agg
-    # combines map-side and the seg join is AQE-skew-splittable,
-    # while a window rank over the segment key is neither
-    "segment_dedup": 5,
-    # daily agg + type window + dow agg + rejoin (daily-grid-sized)
-    "seasonal_decomposition": 4,
-    # daily agg + totals + type-keyed cusum/argmax windows
-    "cusum_changepoint": 3,
-    # daily agg + type-keyed min-window/normal-equation agg
-    "daily_trend_slope": 2,
-    "daily_autocorr_lag1": 2,
-    # pure projection: split is a hash of the scanned id, zero shuffles
-    "stratified_split": 0,
-    # one source-keyed window + fan_out repartition of the small scan
-    "token_budget_mixture": 2,
-    # batch first-keeper groupBy + index anti join (0 when bucketed —
-    # pinned in test_bucketing.py)
-    "incremental_dedup_batch": 2,
-    # fan_out repartition only; media decode is per-partition CPU
-    "multimodal_ppm_features": 1,
-    # segment-dedup core (5) + lang join + (lang,split) rollup
-    "curation_pipeline_v2": 7,
-    "multimodal_wav_features": 1,
-    "multimodal_video_frames": 1,
-    "video_shot_boundaries": 1,
-    "audio_vad_segments": 1,
-    # TakeOrdered + bounded 100-row rank: no full-corpus exchange
-    "training_order_shuffle": 0,
-    # single-row theorem agg over checkpointed ranks
-    "pagerank_invariants": 1,
-    # user-day span agg + the per-day sweep window + max-per-day
-    # rollup; all post-aggregate (2 rows per user-day)
-    "max_concurrency_daily": 3,
-    # one series-keyed shuffle shared by the lead() window and the
-    # final per-series rollup
-    "time_weighted_avg": 1,
-    # daily grid checkpointed (corpus aggregates once); median/MAD
-    # branches run on types×days rows, both stat joins broadcast
-    "mad_outlier_days": 3,
-    # price-tier windows and the tier rollup all key on o_custkey —
-    # one hash shuffle reused (AQE), plus the tier-join hop
-    "pareto_frontier_orders": 2,
-    # token-overlap agg + two TakeOrdered top-100s; the 100-row rank
-    # windows and the fusion join are single-partition by size
-    "rrf_hybrid_retrieval": 3,
-    # codebook is driver-materialized literals (stats pass runs once,
-    # outside the plan); search is scan → TakeOrdered → 20-row rank
-    "sq_ann_topk": 2,
-    # both bar-local windows and the OHLC aggregate share one
-    # (event_type, day) shuffle (+ tiny final hop)
-    "ohlc_daily_bars": 2,
-    # one user-keyed shuffle shared by the island window and the
-    # streak rollup (+ distinct pre-agg hop)
-    "activity_streaks": 2,
-    # flag-keyed cumulative/total windows and the min() rollup reuse
-    # a single shuffle
-    # was 1 with the naive flag-partitioned running window — which
-    # capped parallelism at |flags| = 3 (sf30: 7x wall for 3x data).
-    # The scalable two-phase plan pays 6 exchanges, but every one is
-    # either a combine-heavy aggregation of the corpus (1 pass) or an
-    # exchange of the bounded bucket/median-slice frames
-    "weighted_median_price": 6,
-    # 9-group digit count (map-side combined) + the 9-row OVER ()
-    "benford_first_digit": 2,
-    # ONE basket repartition shared via ReuseExchange by both
-    # self-join sides AND the item-support branch (identical not-null
-    # filtered subtrees), + item agg + pair agg + the n_orders
-    # countDistinct branch (its own column-pruned corpus exchange +
-    # SinglePartition).  5 EXECUTED exchanges; the textual plan
-    # repeats the shared one per consumer
-    "copurchase_rules": 5,
-    # running-peak window and the per-series rollup share one
-    # series-keyed shuffle
-    "max_drawdown": 1,
-    # encode pass runs before the localCheckpoint cut; visible plan is
-    # probe-LUT build + broadcast + per-probe rank windows
-    "pq_ann_topk": 5,
-    # per-type extent pre-agg (broadcast back) + the bin count
-    "value_histogram": 1,
-    # contingency agg checkpointed (corpus aggregates once); marginal
-    # rollups + joins run on types×7 rows
-    "event_dow_chisq": 3,
-    # same shape as gap_fill_locf (see above): 2 per branch, fixed-N
-    # user_id repartitions keep the sf3 grid explode parallel
-    # (438s -> 1.5s); both IGNORE NULLS windows share one partitioning
-    "gap_fill_linear": 4,
-    # training iterations run at call time (word-count shuffle + tiny
-    # vocab aggs); the returned merge table is driver model state
-    "bpe_merge_table": 0,
-    # the lag() window over the 6-row driver-local merge table costs a
-    # single-partition exchange of 6 rows — bounded by num_merges
-    "bpe_invariants": 1,
-    # both explicit frames share one user-keyed shuffle
-    "window_frame_values": 1,
-    # (source, tok) dedup checkpointed once; visible plan: token
-    # self-join + pair agg + size joins (sources² rows)
-    "source_vocab_jaccard": 3,
-    # one two-phase aggregation
-    "group_by_all_daily": 1,
-    # daily grid agg + the one-row-per-day global frame window
-    "rolling_corr_7d": 2,
-    # user-keyed band join + per-click min + the one-row percentile
-    "time_to_convert_percentiles": 2,
-    # one (series, day)-keyed exact-percentile aggregation
-    "daily_value_percentile_bands": 1,
-    # sketch summaries merge at call time; the returned frame is the
-    # driver-trimmed top list (model-state output, like bpe's table)
-    # exact-count agg (1) + distinct-heavy filter; sketch side broadcasts
-    # the stream-length scalar moved INTO the plan (broadcast 1-row
-    # sum over the token counts), so the exact agg appears twice in
-    # the pre-AQE tree (runtime dedupes via ReusedExchange) — was a
-    # separate driver count() + extra tokenize pass; 3.5x faster
-    "approx_topk_tokens": 5,
-    # daily grid agg + the type-keyed lag window / WAPE rollup
-    "seasonal_naive_wape": 2,
-    # label census + the one-row totals branch (class-count rows)
-    "balanced_class_weights": 3,
-    # per-value grid checkpointed (corpus aggregates once); the CDF
-    # window + totals + final max run on |distinct lengths| rows
-    "ks_doc_length_drift": 2,
-    # extent is driver model state; 10-row bin table checkpointed —
-    # corpus scanned twice (extent + binning), never re-inlined
-    "psi_value_drift": 2,
-    # customer spend agg + the per-customer ranked windows
-    "revenue_gini": 2,
-    # smart partitioned hash join: both big sides shuffle on orderkey,
-    # then the group-by; the co-bucketed twin (test_bucketing) is 0
-    "multi_fact_join": 3,
-    # fan_out hop + one lang-keyed two-phase aggregation
-    "tokenizer_fertility_by_lang": 2,
-    # per-user first-seen agg + per-day rollup + day-ordered run
-    "cumulative_distinct_users": 3,
-    # same skeleton as segment_dedup: span first-keeper agg, the
-    # two-sided join-back, per-doc collect_set, reassembly join
-    "substring_dedup_docs": 5,
-    # substring_dedup_docs + the (doc -> source) dim join and the
-    # small source rollup
-    "span_contamination_by_source": 7,
-    # probes broadcast; ONE map-side-combined argmax shuffle
-    "hard_negatives_per_probe": 1,
-    # substring_dedup_docs chain + lang dim join + final rollup
-    "curation_pipeline_v3": 7,
-    # 0 = returned plan scores the checkpointed per-customer agg with
-    # literal quintile boundaries; the custkey shuffle runs once at
-    # checkpoint construction
-    "rfm_segments": 0,
-    # star-edge label assembly (1) + doc join-back + election agg
-    "cluster_representatives": 3,
-    # batch-8 (mlprep): fan_out exchange + one groupBy(doc_id)
-    "quality_classifier_scores": 2,
-    # checkpointed 20-row mixing table: 1-row total agg + final sort
-    "temperature_mixture_weights": 2,
-    # bigram rollup from checkpointed per-doc counts + scoring join
-    # re-shuffle + final per-doc agg (LM tables broadcast)
-    "bigram_lm_scores": 3,
-    # groupBy(distinct score) + bucket-partitioned prefix window;
-    # final 1-row agg folds into the window exchange
-    "roc_auc_cosine": 2,
-    # broadcast-BLAS route: fan_out round-robin + mapInPandas scores
-    # per partition — one exchange (the blocked large-probe route pays
-    # cogroup + final max, tested separately)
-    "semantic_decontamination": 1,
-    # doc-token shuffle feeds vocab rollup + per-doc scoring + final
-    # (lang,bucket) rollup; LM table broadcasts back
-    "ccnet_perplexity_buckets": 5,
-    # checkpointed per-source counts: 1-row budget agg, bounded
-    # water-fill window, level agg, final sort
-    "token_budget_epochs": 4,
-    # firsts agg + (bloom-hit sliver) anti-join + union branch; the
-    # bloom probe itself is a zero-exchange projection
-    "bloom_prefilter_dedup": 3,
-    # same shape as decontamination_ngrams — the probe adds no exchange
-    "bloom_decontamination": 5,
-    # sketch build agg + exact top-20 agg (one checkpointed tokenize
-    # pass feeds both); estimate side is broadcast-joined
-    "cms_token_counts": 3,
-    # quasi-identifier groupBy + 1-row total agg (broadcast back)
-    "k_anonymity_audit": 2,
-    # boundary agg + final (type,bin) agg; binning is a broadcast-join
-    # projection
-    "equi_depth_bins": 2,
-    # segment-stats agg; dim join + encode join-back both broadcast
-    "target_encoding_loo": 1,
-    # digest build (partials -> keyed merge), rank-audit agg, final
-    # order; the 7-row estimate/lossless sides ride broadcasts.
-    # 4 -> 7 in round 7: the corpus is no longer eagerly checkpointed
-    # between the build and audit passes (a single-column parquet
-    # re-scan measured CHEAPER than cache write+read at sf10), so the
-    # STATIC plan text now carries the digest subtree's merge exchange
-    # in each broadcast branch; at runtime ReuseExchange collapses
-    # them (executed plan shows 2 ReusedExchange; partials run once —
-    # sf10 wall dropped 45.9 -> 34.4 s with the change)
-    "tdigest_price_quantiles": 7,
-    # round-10 fused rollup: ONE fan-out of the shared (day, x) frame
-    # (build + audit probe read the same exchange), ONE state-row
-    # shuffle into the fused day->week fold (tdigest_rollup replaced
-    # build-then-merge's two), audit agg pair + final order
-    "tdigest_weekly_rollup": 5,
-    # ONE corpus shuffle into the checkpointed (key,cnt) frame; the 3
-    # rollup branches shuffle slim checkpoint scans only
-    "key_skew_report": 3,
-    # bucketed range join: the (tiny) campaign side broadcasts at this
-    # scale, leaving only the per-campaign agg exchange; at corpus
-    # scale the stats would flip it to a shuffle on the bucket key
-    "campaign_window_counts": 1,
-    # both exploded interval sides broadcast-sized here; owner-bucket
-    # dedup adds NO exchange by design
-    "campaign_incident_overlap": 0,
-    # 2-3 corpus exchanges (first-event aggs on user_id); the rest are
-    # single-partition windows/aggs over the span-bounded curve frame
-    # (≤1 row per duration-hour) — slim by construction
-    "kaplan_meier_conversion": 9,
-    # salted two-phase top-k: (probe,salt) window + probe window; the
-    # final agg reuses the probe partitioning
-    "ndcg_at_k": 2,
-    # marginals/total/final all re-aggregate the checkpointed 15-row
-    # cell table — tiny shuffles; the one corpus shuffle is the
-    # checkpointed (x,y) groupBy
-    "mutual_information_features": 4,
-    # vocab-sized count groupBy; top-500 is TakeOrdered and the rank
-    # window runs over exactly 500 rows
-    "zipf_fit_tokens": 1,
-    # scan-side score projection, 10-key groupBy + ORDER BY bin
-    "calibration_bins": 2,
-    # --- canonical TPC-H suite (queries/tpch.py) ---------------------
-    # partsupp is synthesized per use (CTE, not a table), so q2/q11/
-    # q16/q20 pay its DISTINCT shuffle once per reference; q2's
-    # correlated MIN re-derives it for the subquery side (Catalyst
-    # does not share CTE subtrees across a correlated boundary) —
-    # dimension-derived frames, so each exchange moves |part|-scale
-    # rows, never fact-scale
-    "tpch22_q2_min_cost_supplier": 10,
-    "tpch22_q4_order_priority": 2,
-    "tpch22_q6_forecast_revenue": 1,
-    "tpch22_q7_volume_shipping": 2,
-    "tpch22_q8_market_share": 2,
-    "tpch22_q9_product_profit": 4,
-    "tpch22_q10_returned_items": 1,
-    "tpch22_q11_important_stock": 7,
-    "tpch22_q12_shipmode_priority": 2,
-    "tpch22_q13_customer_distribution": 3,
-    "tpch22_q14_promo_effect": 1,
-    "tpch22_q15_top_supplier": 4,
-    "tpch22_q16_parts_supplier": 5,
-    "tpch22_q17_small_quantity": 2,
-    "tpch22_q18_large_volume_customer": 3,
-    "tpch22_q19_discounted_revenue": 1,
-    "tpch22_q20_part_promotion": 6,
-    "tpch22_q21_suppliers_waiting": 1,
-    "tpch22_q22_global_sales": 4,
-}
-
-
-def test_budget_covers_every_registered_query():
-    """A new query must declare its shuffle budget here."""
-    assert set(BUDGETS) == set(Q.REGISTRY), (
-        sorted(set(Q.REGISTRY) - set(BUDGETS)),
-        sorted(set(BUDGETS) - set(Q.REGISTRY)),
-    )
-
-
-@pytest.mark.parametrize("name", sorted(BUDGETS))
+@pytest.mark.parametrize("name", sorted(Q.REGISTRY))
 def test_shuffle_budget(spark, name, registry_frame):
-    # shared session memo — the no-python gate re-reads the same frames
-    df = registry_frame(name)
-    n = plans.num_exchanges(df)
-    assert n <= BUDGETS[name], (
-        f"{name}: {n} exchanges > budget {BUDGETS[name]} — a shuffle "
-        "crept into the plan; see tests/test_shuffle_budgets.py"
+    # shared session memo: the other plan sweeps read the same frames
+    budget = Q.REGISTRY[name].exchanges
+    n = plans.num_exchanges(registry_frame(name))
+    assert n <= budget, (
+        f"{name}: {n} exchanges > budget {budget} — a shuffle crept "
+        "into the plan; the budget is declared where the query is "
+        "registered (sparkplans/queries)"
     )
+
+
+def test_registering_without_a_budget_fails():
+    """The exchange budget is required: a query registered without one
+    fails at import, so no query can go unbudgeted."""
+    with pytest.raises(TypeError, match="exchanges"):
+        Q.register("unbudgeted", None)
+    with pytest.raises(TypeError, match="exchanges"):
+        Q._shared_sql("unbudgeted", "SELECT 1")
+    assert "unbudgeted" not in Q.REGISTRY

@@ -18,7 +18,6 @@ import re
 import pytest
 
 import sparkplans.queries as Q
-from tests.conftest import SF_DIR
 
 # Operators that bound the row count flowing up to the window.
 _BOUNDED_MARKERS = (
@@ -70,10 +69,9 @@ def _subtree(lines: list[str], i: int) -> list[str]:
     return out
 
 
-@pytest.mark.parametrize("name", sorted(Q.queries()))
-def test_no_unbounded_single_partition_window(spark, name):
-    df = Q.REGISTRY[name].fn(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
+@pytest.mark.parametrize("name", sorted(Q.REGISTRY))
+def test_no_unbounded_single_partition_window(spark, name, registry_frame):
+    plan = registry_frame(name)._jdf.queryExecution().executedPlan().toString()
     lines = plan.splitlines()
     for i, line in enumerate(lines):
         if "windowspecdefinition" not in line or not _specs_unpartitioned(
