@@ -26,10 +26,16 @@ at the registration site.
 
 from __future__ import annotations
 
+import os
+import re
+
 import pytest
 
 import sparkplans.queries as Q
+from conftest import SF_DIR
 from sparkplans import plans
+
+PLANS_MD = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "PLANS.md")
 
 
 @pytest.mark.parametrize("name", sorted(Q.REGISTRY))
@@ -52,3 +58,38 @@ def test_registering_without_a_budget_fails():
     with pytest.raises(TypeError, match="exchanges"):
         Q._shared_sql("unbudgeted", "SELECT 1")
     assert "unbudgeted" not in Q.REGISTRY
+
+
+def test_plans_md_matches_every_registered_plan(registry_frame):
+    """PLANS.md's table is what ``examples/plan_report.py`` prints for
+    the current tree: same queries, and per query the same exchanges,
+    broadcasts, sorts, Python stages and join strategies.  Reads the
+    shared frame memo, so after the sweeps above it plans nothing new."""
+    with open(PLANS_MD) as f:
+        text = f.read()
+    generated_at = re.search(r"Generated by `examples/plan_report.py` at `([^`]+)`", text)
+    if os.path.abspath(generated_at.group(1)) != os.path.abspath(SF_DIR):
+        pytest.skip(f"PLANS.md describes {generated_at.group(1)}, the tests read {SF_DIR}")
+    rows = {}
+    for line in text.splitlines()[text.splitlines().index("|---|---|---|---|---|---|") + 1:]:
+        if not line.startswith("| "):
+            break
+        name, *cells = (c.strip() for c in line.strip("|").split("|"))
+        rows[name] = cells
+    assert sorted(rows) == sorted(Q.REGISTRY)
+    drift = []
+    for name in sorted(Q.REGISTRY):
+        a = plans.audit(registry_frame(name))
+        got = [
+            str(a["exchanges"]),
+            str(a["broadcasts"]),
+            str(a["sorts"]),
+            str(a["python_stages"]),
+            ",".join(sorted(set(a["join_strategies"]))) or "-",
+        ]
+        if got != rows[name]:
+            drift.append(f"{name}: PLANS.md {rows[name]}, plan {got}")
+    assert not drift, (
+        "PLANS.md has drifted from the plans; regenerate it with "
+        "`python examples/plan_report.py`:\n" + "\n".join(drift)
+    )
