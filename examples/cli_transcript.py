@@ -18,9 +18,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from sparkplans import cli  # noqa: E402
 from sparkplans.engine import Engine  # noqa: E402
-from sparkplans.queries import _ALL_TABLES  # noqa: E402
 from sparkplans.session import EngineOptions, build_session  # noqa: E402
-from sparkplans.sources import load_table  # noqa: E402
+from sparkplans.sources import TABLES, load_table  # noqa: E402
 
 # (section header, reference doc, list of CLI lines)
 SECTIONS = [
@@ -67,7 +66,7 @@ def main() -> None:
         master="local[4]",
     )
     engine = Engine(spark=spark)
-    for t in _ALL_TABLES:
+    for t in TABLES:
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
         engine.create_external_table(t, f"{sf_dir}/{t}.parquet")
 

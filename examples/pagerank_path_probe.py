@@ -13,12 +13,12 @@ setting that constant to 0 — the configuration that IS the plan at 100x scale 
 graphs run ~20M nodes, past any sane broadcast ceiling), previously
 exercised only by the toy-scale parity test.
 
-Per path it reports total wall, the operator's own decomposition
-(``graph.last_run_stats``: prologue vs per-iteration walls — the
-per-iteration number is the one that multiplies at scale), scheduler
-job count, and a cpu_par contention leg before/after (bench.py's
-calibration axis) so a noisy-neighbor burst is visible in the
-artifact instead of silently inflating a path.  ``--parity``
+Per path it reports total wall, scheduler job count, and a cpu_par
+contention leg before/after (bench.py's calibration axis) so a
+noisy-neighbor burst is visible in the artifact instead of silently
+inflating a path.  (No per-iteration split: the iterations chain as
+lazy cuts, so a driver-side timer around each one measures plan
+building, not execution.)  ``--parity``
 additionally joins the two paths' ranks and asserts max |Δ| <= 1e-9
 (route choice is a physical-plan decision; the fixed point must not
 move).  Prints one JSON line for SCALE.md.
@@ -100,19 +100,15 @@ def main() -> int:
         wall = round(time.perf_counter() - t0, 1)
         j_used = jobs() - j0
         par_close = _cpu_par()
-        stats = dict(graph.last_run_stats or {})
-        iters = stats.get("iteration_secs", [])
         out["paths"][leg] = {
             "wall_sec": wall,
             "jobs": j_used,
             "cpu_par_open_sec": par_open,
             "cpu_par_close_sec": par_close,
-            **stats,
-            "iter_avg_sec": round(sum(iters) / len(iters), 3) if iters else None,
         }
         if parity:
             results[leg] = df
-        print(f"# {leg}: {wall}s, {j_used} jobs, {stats}", file=sys.stderr)
+        print(f"# {leg}: {wall}s, {j_used} jobs", file=sys.stderr)
 
     if parity and len(results) == 2:
         from pyspark.sql import functions as F

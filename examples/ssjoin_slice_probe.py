@@ -18,8 +18,10 @@ to first order.  This harness runs:
 The difference of the two walls isolates the MARGINAL per-slice cost
 (each call pays the prologue once), so the full-run extrapolation is
 ``prologue + K × marginal`` instead of the loose ``wall × K`` bound
-that charges the prologue K times.  Prints one JSON line; SCALE.md
-pins these as the sf100 rung of the SSJoin scale story.
+that charges the prologue K times.  K and the raw candidate count
+come from wrapping ``dedup._auto_slices``, the operator's pure
+slice-sizing step.  Prints one JSON line; SCALE.md pins these as the
+sf100 rung of the SSJoin scale story.
 """
 
 from __future__ import annotations
@@ -63,6 +65,22 @@ def main() -> int:
     docs = _t_cpu(spark, sf_dir, "documents")
     n_docs = docs.count()
 
+    decision: dict = {}
+    auto_slices = dedup._auto_slices
+
+    def recording_auto_slices(raw_rows):
+        slices, wanted, breach = auto_slices(raw_rows)
+        decision.update(
+            raw_candidate_rows=int(raw_rows),
+            slices=slices,
+            slices_wanted=wanted,
+            cap_bound=wanted > slices,
+            budget_breach_bytes=breach,
+        )
+        return slices, wanted, breach
+
+    dedup._auto_slices = recording_auto_slices
+
     scratch = tempfile.mkdtemp(prefix="ssjoin_probe_")
     try:
         def bounded_run(hi: int) -> tuple[float, int]:
@@ -78,7 +96,6 @@ def main() -> int:
             return time.perf_counter() - t0, n_pairs
 
         wall1, pairs1 = bounded_run(1)
-        decision = dict(dedup.last_auto_decision or {})
         k = int(decision.get("slices", 1))
         if k > 2:
             wall2, pairs2 = bounded_run(2)
@@ -97,13 +114,13 @@ def main() -> int:
                     "n_docs": n_docs,
                     "raw_candidate_rows": decision.get("raw_candidate_rows"),
                     "auto_slices": k,
-                    "budget_bytes": decision.get("budget_bytes"),
+                    "budget_bytes": dedup._SSJOIN_SLICE_BYTES,
                     # budget honesty (round 8): what the budget WANTED,
-                    # whether the ssjoinMaxSlices cap bound, and the
-                    # projected per-slice scratch overage when it did
+                    # whether the slice cap bound, and the projected
+                    # per-slice scratch overage when it did
                     "slices_wanted": decision.get("slices_wanted"),
                     "cap_bound": decision.get("cap_bound"),
-                    "max_slices": decision.get("max_slices"),
+                    "max_slices": dedup._SSJOIN_MAX_SLICES,
                     "budget_breach_bytes": decision.get("budget_breach_bytes"),
                     "slice0_pairs": pairs1,
                     "wall_1slice_sec": round(wall1, 1),

@@ -353,24 +353,6 @@ def _bucketed_spec_sort(bucket_cols, sort_cols):
     return normalize_sort_keys(list(sort_cols or bucket_cols))
 
 
-class BucketedWrites:
-    """Mixin-style helpers attached to Catalog (kept separate for
-    readability): bucketed managed tables — Spark's durable answer to
-    the reference's pre-partitioned/pre-sorted file layouts
-    (docs/7:162-177 'split sorted files into N sorted groups').
-
-    A table written ``bucketBy(N, k).sortBy(k)`` gives every reader:
-    - hash distribution on k with NO exchange (joins/aggs on k skip
-      the shuffle entirely — the reference's 'no RepartitionExec'
-      golden, tests/opt_parallel_execution.rs:69-81);
-    - per-bucket sorted files, so merge joins skip the sort when
-      Spark can prove one file per bucket.
-    At 100 TB co-bucketing the big fact tables on their join key is
-    THE lever: it amortizes one write-time shuffle across every
-    subsequent join/agg.
-    """
-
-
 def write_bucketed(
     self,
     df,
@@ -380,7 +362,21 @@ def write_bucketed(
     sort_cols=None,
     mode: str = "overwrite",
 ) -> TableSpec:
-    """Write a managed bucketed(+sorted) table and register it."""
+    """Write a managed bucketed(+sorted) table and register it.
+
+    Bucketed managed tables are Spark's durable answer to the
+    reference's pre-partitioned/pre-sorted file layouts (docs/7:162-177
+    'split sorted files into N sorted groups').
+
+    A table written ``bucketBy(N, k).sortBy(k)`` gives every reader:
+    - hash distribution on k with NO exchange (joins/aggs on k skip
+      the shuffle entirely — the reference's 'no RepartitionExec'
+      golden, tests/opt_parallel_execution.rs:69-81);
+    - per-bucket sorted files, so merge joins skip the sort when
+      Spark can prove one file per bucket.
+    At 100 TB co-bucketing the big fact tables on their join key is
+    THE lever: it amortizes one write-time shuffle across every
+    subsequent join/agg."""
     bucket_cols = [bucket_cols] if isinstance(bucket_cols, str) else list(bucket_cols)
     sort_cols = (
         [sort_cols] if isinstance(sort_cols, str) else list(sort_cols or bucket_cols)

@@ -187,9 +187,8 @@ def main(argv: list[str] | None = None) -> None:
     args = p.parse_args(argv)
 
     from sparkplans.engine import Engine
-    from sparkplans.queries import _ALL_TABLES
     from sparkplans.session import EngineOptions, build_session
-    from sparkplans.sources import load_table
+    from sparkplans.sources import TABLES, load_table
 
     spark = build_session(
         EngineOptions(target_partitions=args.cpus),
@@ -197,7 +196,7 @@ def main(argv: list[str] | None = None) -> None:
         master=f"local[{args.cpus}]",
     )
     engine = Engine(spark=spark)
-    for t in _ALL_TABLES:
+    for t in TABLES:
         try:
             load_table(spark, args.sf_dir, t).createOrReplaceTempView(t)
             engine.create_external_table(

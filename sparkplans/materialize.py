@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 import tempfile
-import threading
+import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
@@ -239,20 +239,6 @@ def release(df: DataFrame) -> bool:
         return False
 
 
-# observed() timeouts counted process-wide; the first one also warns.
-# A timeout means the query-execution listener never delivered the
-# Observation for an action that completed — each one silently costs
-# the caller the full poll timeout PLUS a fallback aggregate job, so
-# if a Spark upgrade stops firing the listener for localCheckpoint,
-# iterative operators (pagerank, connected components) would regress
-# ~timeout_s per iteration with no signal unless this is loud.
-# CUMULATIVE per process and never reset — harnesses comparing runs
-# must snapshot before and diff after; the increment is guarded by
-# ``_observed_lock`` so concurrent driver threads don't lose counts.
-observed_timeouts: int = 0
-_observed_lock = threading.Lock()
-
-
 def observed(obs, keys: list[str], timeout_s: float = 5.0):
     """Poll an ``Observation`` for its metrics without risking a
     blocked ``obs.get`` (the query-execution listener fires
@@ -260,9 +246,16 @@ def observed(obs, keys: list[str], timeout_s: float = 5.0):
     Returns a tuple of EXACT values in ``keys`` order — longs stay
     ints and decimals convert via str, never through float (callers
     compare hash sums for equality) — or None on timeout so callers
-    can fall back to an explicit aggregate.  Timeouts increment
-    ``observed_timeouts`` and the first one emits a warning (a silent
-    per-iteration stall is the failure mode this guards against)."""
+    can fall back to an explicit aggregate.
+
+    Every timeout warns: it means the query-execution listener never
+    delivered the Observation for an action that completed, and each
+    one costs the caller the full poll timeout PLUS a fallback
+    aggregate job — if a Spark upgrade stopped firing the listener for
+    localCheckpoint, iterative operators (pagerank, connected
+    components) would regress ~timeout_s per iteration with no other
+    signal.  Python's default warning filter shows it once per call
+    site."""
     import time as _time
 
     deadline = _time.monotonic() + timeout_s
@@ -284,23 +277,15 @@ def observed(obs, keys: list[str], timeout_s: float = 5.0):
                         out.append(float(s))
             return tuple(out)
         if _time.monotonic() >= deadline:
-            global observed_timeouts
-            with _observed_lock:
-                observed_timeouts += 1
-                first = observed_timeouts == 1
-            if first:
-                import warnings
-
-                warnings.warn(
-                    f"Observation metrics did not arrive within "
-                    f"{timeout_s}s; falling back to an explicit "
-                    "aggregate. Each occurrence costs the timeout plus "
-                    "a fallback job — if this repeats per iteration "
-                    "(materialize.observed_timeouts counts), the "
-                    "query-execution listener has stopped firing for "
-                    "this action type.",
-                    stacklevel=2,
-                )
+            warnings.warn(
+                f"Observation metrics did not arrive within "
+                f"{timeout_s}s; falling back to an explicit "
+                "aggregate. Each occurrence costs the timeout plus "
+                "a fallback job — if this repeats per iteration, the "
+                "query-execution listener has stopped firing for "
+                "this action type.",
+                stacklevel=2,
+            )
             return None
         _time.sleep(0.01)
 

@@ -213,25 +213,3 @@ def interval_overlap_join(
         *[F.col("_r")[c].alias(f"right_{c}") for c in right.columns],
     )
 
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi-join: explode the small/replicable right
-    side into ``salt`` copies and scatter the left side's hot keys
-    across them, so one giant key no longer lands on one task.
-
-    AQE's skew-join splitting handles most cases at runtime; explicit
-    salting is for deterministic layouts or pre-AQE engines, and as
-    the documented pattern for 100 TB skew (SURVEY §7: 'skewed keys
-    -> salting or AQE skew-join')."""
-    l_s = left.withColumn("_salt", (F.rand(seed=7) * salt).cast("int"))
-    r_s = right.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-    )
-    out = l_s.join(r_s, [key, "_salt"], how)
-    return out.drop("_salt")

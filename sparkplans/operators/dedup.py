@@ -298,34 +298,17 @@ def connected_components(
     prev_sig = (int(row0["cnt"]), None if row0["hs"] is None else int(row0["hs"]))
 
     converged = False
-    global cc_last_round_plan
-    cc_last_round_plan = None
     for _round in range(max_iter):
         obs = Observation()
+        # UNLIKE pagerank/label_propagation there is no static corpus
+        # frame to persist partition-preserving: the edge set is
+        # REWRITTEN every round (both stars emit new (dst, m) pairs),
+        # so the per-round corpus exchange IS the round-output
+        # re-layout.  The round-shape ratchet test pins the round's
+        # live exchange count instead.
         round_df = _star(_star(edges, large=True), large=False).observe(
             obs, *_sig_metrics()
         )
-        if _round == 0:
-            # Round-shape diagnostics (cached subtrees excluded), the
-            # partition-preservation audit's per-operator assertion:
-            # UNLIKE pagerank/label_propagation there is no static
-            # corpus frame here — the edge set is REWRITTEN every
-            # round (both stars emit new (dst, m) pairs), so the
-            # per-round corpus exchange IS the round-output re-layout
-            # and a preserve-partitioning materialize has nothing to
-            # preserve across rounds.  The ratchet test pins the
-            # round's live exchange count so a regression that adds
-            # an avoidable exchange (e.g. losing ReuseExchange on the
-            # adj scan) still fails loudly.
-            from sparkplans import plans as _plans
-
-            try:
-                cc_last_round_plan = {
-                    "exchanges": _plans.live_exchanges(round_df),
-                    "sorts": _plans.live_sorts(round_df),
-                }
-            except Exception:
-                pass
         new = materialize(round_df)
         sig = observed(obs, ["cnt", "hs"])
         if sig is None:  # listener didn't fire: one explicit aggregate
@@ -503,15 +486,43 @@ _SSJOIN_MAX_SLICES = 1024
 # Age after which a caller-supplied slice_dir's run= subdirs are pruned.
 _SSJOIN_SLICE_RETENTION_S = 86400.0
 
-# Last slices="auto" decision (diagnostics for scale harnesses; see
-# prefix_filter_pairs) — driver-only, overwritten per call.
-last_auto_decision: dict | None = None
 
-# First-round live plan shape of the last connected_components() run
-# ({"exchanges": [...], "sorts": [...]}, cached subtrees excluded) —
-# set early in the function body, read by the round-shape ratchet
-# test and SCALE.md.
-cc_last_round_plan: dict | None = None
+def _auto_slices(raw_rows: int) -> tuple[int, int, int]:
+    """``slices="auto"`` sizing for :func:`prefix_filter_pairs`:
+    ``(slices, wanted, breach)`` for ``raw_rows`` raw candidate rows.
+
+    ``wanted`` is the slice count that keeps each slice's projected
+    scratch under ``_SSJOIN_SLICE_BYTES``; ``slices`` clamps it to
+    ``_SSJOIN_MAX_SLICES``, the ceiling that stops a mis-estimated
+    candidate volume exploding into tens of thousands of tiny jobs.
+    When the cap binds the per-slice scratch EXCEEDS the budget — at
+    sf100 the 8 GiB budget wants ~6.5k slices and the 1024 clamp would
+    run ~51 GB/slice, 6.4x the promise — so ``breach`` is the
+    projected per-slice overage in bytes (0 when the cap does not
+    bind), and a warning says so: never silent."""
+    budget = _SSJOIN_SLICE_BYTES
+    cap = _SSJOIN_MAX_SLICES
+    # ~72 bytes of peak disk per raw row, calibrated at sf10 (SCALE.md):
+    # 7.1e9 raw rows, and a 1/64 slice held ~8 GB of transient
+    # spill+shuffle (unsafe rows written twice: sorter spill runs +
+    # shuffle files, zstd)
+    scratch = int(raw_rows) * 72
+    wanted = max(1, -(-scratch // max(budget, 1)))
+    slices = min(max(cap, 1), wanted)
+    breach = max(0, scratch // slices - budget)
+    if wanted > slices:
+        import warnings
+
+        warnings.warn(
+            f"ssjoin slices='auto' wanted {wanted} slices to honor "
+            f"a {budget}-byte scratch budget but the {cap}-slice "
+            f"cap binds: projected peak scratch per slice exceeds "
+            f"the budget by ~{breach / (1 << 30):.1f} GiB. Pass an "
+            f"explicit slices={wanted} and run it via slice_range "
+            "in resumable chunks.",
+            stacklevel=3,
+        )
+    return slices, wanted, breach
 
 
 def prefix_filter_pairs(
@@ -719,11 +730,6 @@ def prefix_filter_pairs(
         # sum_p count_index(p) * count_probe(p) — the raw row count of
         # the candidate join before the length filter — computed with
         # one small aggregation over the (materialized) prefix rows.
-        # Measured calibration at sf10 (SCALE.md): 7.1e9 raw rows, and
-        # a 1/64 slice held ~8 GB of transient spill+shuffle on disk,
-        # i.e. ~72 bytes of peak disk per raw row (unsafe rows written
-        # twice: sorter spill runs + shuffle files, zstd).
-        budget = _SSJOIN_SLICE_BYTES
         raw_ub = (
             pref.groupBy("p")
             .agg(
@@ -736,41 +742,7 @@ def prefix_filter_pairs(
             .collect()[0]["raw"]
             or 0
         )
-        wanted = max(1, -(-int(raw_ub) * 72 // max(budget, 1)))
-        # The slice-count ceiling exists so a mis-estimated candidate
-        # volume can't explode into tens of thousands of tiny jobs.
-        # When it binds, the per-slice scratch EXCEEDS the budget — at
-        # sf100 the 8 GiB budget wants ~6.5k slices and the 1024 clamp
-        # would run ~51 GB/slice, 6.4x the promise.  The breach is
-        # computed, recorded, and warned, never silent.
-        cap = _SSJOIN_MAX_SLICES
-        slices = min(max(cap, 1), wanted)
-        breach = max(0, int(raw_ub) * 72 // max(int(slices), 1) - budget)
-        # diagnostic hook: scale harnesses read the measured decision
-        # (candidate volume, chosen K) without re-running the
-        # aggregation — module-level, driver-only, overwritten per call
-        global last_auto_decision
-        last_auto_decision = {
-            "raw_candidate_rows": int(raw_ub),
-            "slices": int(slices),
-            "slices_wanted": int(wanted),
-            "budget_bytes": budget,
-            "max_slices": cap,
-            "cap_bound": wanted > slices,
-            "budget_breach_bytes": int(breach),
-        }
-        if wanted > slices:
-            import warnings
-
-            warnings.warn(
-                f"ssjoin slices='auto' wanted {wanted} slices to honor "
-                f"a {budget}-byte scratch budget but the {cap}-slice "
-                f"cap binds: projected peak scratch per slice exceeds "
-                f"the budget by ~{breach / (1 << 30):.1f} GiB. Pass an "
-                f"explicit slices={wanted} and run it via slice_range "
-                "in resumable chunks.",
-                stacklevel=2,
-            )
+        slices = _auto_slices(raw_ub)[0]
 
     if slice_range is not None:
         lo, hi = int(slice_range[0]), int(slice_range[1])

@@ -15,26 +15,12 @@ join reuses the same partitioning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
-from sparkplans.materialize import materialize, materialize_lazy, release
+from sparkplans.materialize import materialize, materialize_lazy, observed, release
 
 # pagerank() broadcasts the |V|-row rank frame each iteration at or
 # below this many nodes and takes the shuffle path above it (see the
 # memory envelope in pagerank's docstring).
 _PAGERANK_BROADCAST_NODES = 8_000_000
-
-# Last pagerank() run decomposition (diagnostics for scale harnesses,
-# same pattern as dedup.last_auto_decision): which path ran
-# (broadcast/shuffle), graph size, and the driver-side wall split
-# between the prologue (edge derivation + layout + counts) and each
-# power iteration — the numbers SCALE.md's per-path comparison needs
-# without instrumenting the caller.  Module-level, driver-only,
-# overwritten per call; None until the first run completes.
-last_run_stats: dict | None = None
-
-# First-round live plan shape ({"exchanges": [...], "sorts": [...]},
-# cached subtrees excluded) of the last label_propagation() run —
-# the per-round corpus-exchange contract test reads it.
-lpa_last_round_plan: dict | None = None
 
 
 def pagerank(
@@ -124,8 +110,7 @@ def pagerank(
     between GC cycles (<~0.5 GiB at the default; executors
     additionally keep one block each).  Above the
     threshold the shuffle path costs one extra exchange per iteration
-    but holds no |V|-row broadcast at all; ``last_run_stats`` reports
-    the threshold as ``broadcast_limit``.
+    but holds no |V|-row broadcast at all.
     * ranks carry the static ``outdeg`` column, so dangling mass is a
       conditional sum over the rank frame — and that scalar RIDES THE
       MATERIALIZATION ACTION every iteration already pays, as an
@@ -153,16 +138,10 @@ def pagerank(
     # edge list to avoid that doubled corpus-cache pressure instead
     # (a second 180M-row checkpoint at sf10 GC-thrashed the run to
     # 452 s vs 217 s).  One derivation, one corpus-sized cache.
-    import time as _time
-
     from pyspark.sql import Window
 
-    global last_run_stats
-    last_run_stats = None  # a mid-run failure must not leave stale stats
-    t_start = _time.perf_counter()
     spark = edges.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    bcast_limit = _PAGERANK_BROADCAST_NODES
     # Edge prologue, ONE corpus exchange (round-9 rework; was three —
     # distinct on (src,dst), join-with-outdeg on src, re-layout on the
     # iteration key): hash-partition the raw pairs by src once, dedup
@@ -176,8 +155,9 @@ def pagerank(
     #
     # src is the SHUFFLE path's iteration key, so the big-|V| graphs
     # where that path is the plan pay no re-layout at all; the
-    # broadcast path (|V| <= bcast_limit, known only after the counts
-    # action below) re-layouts to dst once, releasing the src copy.
+    # broadcast path (|V| <= _PAGERANK_BROADCAST_NODES, known only
+    # after the counts action below) re-layouts to dst once, releasing
+    # the src copy.
     # Filter on the ALIASED output column: filtering with F.col(src)
     # after the rename would resolve against the projection output, so
     # a caller whose column names swap roles (src="dst", dst="src")
@@ -226,9 +206,7 @@ def pagerank(
         ),
         preserve_partitioning=True,
     )
-    from sparkplans.materialize import observed as _observed_tuple
-
-    cnt_vals = _observed_tuple(cnt_obs, ["n", "nd"])
+    cnt_vals = observed(cnt_obs, ["n", "nd"])
     if cnt_vals is None:
         row = nodes_deg.agg(
             F.count("*").alias("n"),
@@ -237,21 +215,13 @@ def pagerank(
         cnt_vals = (row["n"], row["nd"])
     n_total, n_dangling = int(cnt_vals[0]), int(cnt_vals[1])
     if n_total == 0:
-        last_run_stats = {
-            "path": "empty",
-            "n_nodes": 0,
-            "n_dangling": 0,
-            "broadcast_limit": bcast_limit,
-            "prologue_sec": round(_time.perf_counter() - t_start, 3),
-            "iteration_secs": [],
-        }
         out = nodes_deg.select("node").withColumn("rank", F.lit(0.0))
         # cache entries outlive the call unless released; the empty
         # frame recomputes trivially if ever re-read
         release(e_deg)
         release(nodes_deg)
         return out
-    use_bcast = n_total <= bcast_limit
+    use_bcast = n_total <= _PAGERANK_BROADCAST_NODES
     if use_bcast:
         # broadcast path wants the corpus laid out by dst — the
         # per-iteration contribution aggregate and the rank-update
@@ -288,12 +258,7 @@ def pagerank(
     # (round 10, guide §2.6).  Arithmetic is untouched: the rank
     # expression already folded dm=0.0 into the same literal.
     no_dangling = n_dangling == 0
-    prologue_sec = _time.perf_counter() - t_start
-    iteration_secs: list[float] = []
-    iter_exchanges: list[str] | None = None
-    iter_sorts: list[str] | None = None
     for i in range(iterations):
-        t_iter = _time.perf_counter()
         rank_side = ranks.select("node", "rank")
         if use_bcast:
             rank_side = F.broadcast(rank_side)
@@ -316,19 +281,6 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if i == 0:
-            # record what one iteration EXECUTES (cached subtrees
-            # excluded) — the contract is: no corpus-side exchange or
-            # sort, ever; only the slim ranks shuffle (+ the dst
-            # partial-agg exchange on the shuffle path).  Free plan
-            # walk, no job; tests and SCALE.md pin it.
-            from sparkplans import plans as _plans
-
-            try:
-                iter_exchanges = _plans.live_exchanges(update)
-                iter_sorts = _plans.live_sorts(update)
-            except Exception:
-                pass
         if no_dangling:
             last = i == iterations - 1
             # last iteration EAGER: it executes the deferred chain
@@ -353,50 +305,26 @@ def pagerank(
                     ).alias("dm"),
                 )
             )
-            dm = _observed(obs, "dm")
-            if dm is None:
+            vals = observed(obs, ["dm"])
+            if vals is None:
                 # a checkpoint route whose materialization action
                 # doesn't fire the observation listener: fall back to
                 # one explicit aggregate over the materialized frame
-                dm = ranks.filter(F.col("outdeg").isNull()).agg(
+                vals = ranks.filter(F.col("outdeg").isNull()).agg(
                     F.coalesce(F.sum("rank"), F.lit(0.0))
-                ).collect()[0][0]
+                ).collect()[0]
+            dm = float(vals[0])
         # 10 iterations of dead |V|-row cache add up.  prev is dead even
         # behind a lazy cut: building one runs its broadcast/shuffle
         # stages (AQE materializes query stages before the final RDD
         # exists), and those are prev's only reads
         release(prev)
-        iteration_secs.append(round(_time.perf_counter() - t_iter, 3))
-    last_run_stats = {
-        "path": "broadcast" if use_bcast else "shuffle",
-        "n_nodes": n_total,
-        "n_dangling": n_dangling,
-        "broadcast_limit": bcast_limit,
-        "prologue_sec": round(prologue_sec, 3),
-        "iteration_secs": iteration_secs,
-        "iteration_exchanges": iter_exchanges,
-        "iteration_sorts": iter_sorts,
-        # True => iterations chained as lazy cuts (no dangling mass to
-        # observe); per-iteration secs are then plan-build latency and
-        # the LAST entry carries the chain's execution
-        "iterations_lazy_chained": no_dangling,
-    }
     # the returned frame reads only the final ranks checkpoint; the
     # static persisted frames are dead weight past this point, and
     # CacheManager holds them until an explicit unpersist
     release(e_deg)
     release(nodes_deg)
     return ranks.select("node", "rank")
-
-
-def _observed(obs: Observation, key: str, timeout_s: float = 5.0):
-    """Single-metric float wrapper over :func:`materialize.observed`
-    (poll-with-timeout; None means fall back to an explicit
-    aggregate)."""
-    from sparkplans.materialize import observed
-
-    vals = observed(obs, [key], timeout_s=timeout_s)
-    return None if vals is None else float(vals[0])
 
 
 def label_propagation(
@@ -466,8 +394,6 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .transform(materialize_lazy)
     )
-    global lpa_last_round_plan
-    lpa_last_round_plan = None
     for i in range(iterations):
         nbr = e.join(labels, e.b == labels.node).select(
             F.col("a").alias("node"), "label"
@@ -478,18 +404,6 @@ def label_propagation(
             .agg(F.max(F.struct(F.col("c"), (-F.col("label")).alias("nl"))).alias("m"))
             .select("node", (-F.col("m.nl")).alias("label"))
         )
-        if i == 0:
-            # what one round EXECUTES (cached subtrees excluded); the
-            # contract tests pin: no exchange/sort on the corpus key b
-            from sparkplans import plans as _plans
-
-            try:
-                lpa_last_round_plan = {
-                    "exchanges": _plans.live_exchanges(update),
-                    "sorts": _plans.live_sorts(update),
-                }
-            except Exception:
-                pass
         prev = labels
         labels = (
             materialize(update)

@@ -238,6 +238,14 @@ def _seg(marker: int, payload: bytes) -> bytes:
     return struct.pack(">BBH", 0xFF, marker, len(payload) + 2) + payload
 
 
+def _dqt(tid: int, q: np.ndarray) -> bytes:
+    return _seg(0xDB, bytes([tid]) + bytes(int(x) for x in q.flatten()[_ZZ_IDX]))
+
+
+def _dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
+    return _seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
+
+
 def _encode_block(bw: _BitWriter, block, q, prev_dc: int) -> int:
     """FDCT + quantize + entropy-code one 8x8 block; returns its DC
     (the caller threads per-component DC prediction)."""
@@ -332,12 +340,6 @@ def encode_jpeg(
                     bw, cr[cy : cy + 8, cx : cx + 8], qc, prev_dc[2]
                 )
 
-    def dqt(tid: int, q: np.ndarray) -> bytes:
-        return _seg(0xDB, bytes([tid]) + bytes(int(x) for x in q.flatten()[_ZZ_IDX]))
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return _seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
     y_samp = 0x22 if subsample else 0x11
     sof = _seg(
         0xC0,
@@ -349,12 +351,12 @@ def encode_jpeg(
     return (
         b"\xff\xd8"
         + app0
-        + dqt(0, qy)
-        + dqt(1, qc)
-        + dht(0, 0, _DC_BITS, _DC_VALS)
-        + dht(0, 1, _DC_BITS, _DC_VALS)
-        + dht(1, 0, _AC_BITS, _AC_VALS)
-        + dht(1, 1, _AC_BITS, _AC_VALS)
+        + _dqt(0, qy)
+        + _dqt(1, qc)
+        + _dht(0, 0, _DC_BITS, _DC_VALS)
+        + _dht(0, 1, _DC_BITS, _DC_VALS)
+        + _dht(1, 0, _AC_BITS, _AC_VALS)
+        + _dht(1, 1, _AC_BITS, _AC_VALS)
         + sof
         + sos
         + bw.flush()
@@ -516,12 +518,6 @@ def _encode_progressive(a: np.ndarray, qy: np.ndarray, qc: np.ndarray) -> bytes:
                             bw.write(b, 1)
             out += sos([(comp + 1, 0, ta)], ss, se, 1, 0) + bw.flush()
 
-    def dqt(tid: int, q: np.ndarray) -> bytes:
-        return _seg(0xDB, bytes([tid]) + bytes(int(x) for x in q.flatten()[_ZZ_IDX]))
-
-    def dht(tc: int, th: int, bits: list[int], vals: list[int]) -> bytes:
-        return _seg(0xC4, bytes([(tc << 4) | th]) + bytes(bits) + bytes(vals))
-
     sof = _seg(
         0xC2,
         struct.pack(">BHHB", 8, h, w, 3)
@@ -531,11 +527,11 @@ def _encode_progressive(a: np.ndarray, qy: np.ndarray, qc: np.ndarray) -> bytes:
     return (
         b"\xff\xd8"
         + app0
-        + dqt(0, qy)
-        + dqt(1, qc)
-        + dht(0, 0, _DC_BITS, _DC_VALS)
-        + dht(1, 0, _AC_BITS, _AC_VALS)
-        + dht(1, 1, _AC_BITS, _AC_VALS)
+        + _dqt(0, qy)
+        + _dqt(1, qc)
+        + _dht(0, 0, _DC_BITS, _DC_VALS)
+        + _dht(1, 0, _AC_BITS, _AC_VALS)
+        + _dht(1, 1, _AC_BITS, _AC_VALS)
         + sof
         + bytes(out)
         + b"\xff\xd9"

@@ -385,18 +385,6 @@ def sq_quantize(
     )
 
 
-def quantized_dot(a, b) -> F.Column:
-    """Integer dot product of two quantized vectors — exact (bounded
-    by dim·levels², far under 2^53) and engine-identical."""
-    return F.aggregate(
-        F.zip_with(F.col(a) if isinstance(a, str) else a,
-                   F.col(b) if isinstance(b, str) else b,
-                   lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def sq_topk(
     quantized: DataFrame,
     probes: DataFrame,

@@ -57,7 +57,7 @@ from sparkplans.functions import (
     quality_score,
     token_count,
 )
-from sparkplans.sources import load_table
+from sparkplans.sources import TABLES, load_table
 from sparkplans.materialize import materialize, materialize_lazy
 
 
@@ -113,12 +113,6 @@ def _shared_sql(name: str, sql: str, *, exchanges: int) -> None:
     REGISTRY[name] = QuerySpec(fn, sql, exchanges)
 
 
-_ALL_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
-
 def _register_needed_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
     # Word-boundary match, not substring: "part" lives inside
     # "PARTITION BY" and "nation" inside "decontamination", so a
@@ -129,7 +123,7 @@ def _register_needed_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
     import re as _re
 
     low = sql.lower()
-    for t in _ALL_TABLES:
+    for t in TABLES:
         if _re.search(rf"\b{t}\b", low):
             load_table(spark, sf_dir, t).createOrReplaceTempView(t)
 

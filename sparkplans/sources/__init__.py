@@ -200,10 +200,3 @@ def incremental_files(
     if not new:
         return None, commit
     return spark.read.format(format).load(new), commit
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
-    """Register each table as a temp view (names match the DuckDB
-    oracle's pre-registered views)."""
-    for t in tables:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)

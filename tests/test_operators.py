@@ -646,16 +646,6 @@ def test_audio_resample_plumbing(spark):
         assert rate == 16000 and dec.shape[0] == r.n_samples
 
 
-def test_salted_join_matches_plain(spark):
-    ev = load_table(spark, SF_DIR, "events")
-    dim = load_table(spark, SF_DIR, "customer").select(
-        F.col("c_custkey").alias("user_id"), "c_mktsegment"
-    )
-    plain = ev.join(dim, "user_id").count()
-    salted = asof.salted_join(ev, dim, "user_id", salt=8).count()
-    assert salted == plain
-
-
 def test_applyinpandas_trend_matches_sql_twin(spark):
     """Grouped-map Pandas UDF (SURVEY §2.10): per-user least-squares
     slope via numpy inside applyInPandas, cross-checked against the
@@ -1098,6 +1088,7 @@ def test_pagerank_shuffle_path_parity(spark, monkeypatch):
     (ADVICE r5: unpinned branch)."""
     from sparkplans.operators import graph
     from sparkplans.operators.graph import pagerank
+    from tests.cuts import pagerank_path, record_cuts
 
     # richer graph than the closed-form test: a hub, a cycle, two
     # dangling sinks, and a self-feeding pair
@@ -1109,10 +1100,13 @@ def test_pagerank_shuffle_path_parity(spark, monkeypatch):
 
     with monkeypatch.context() as mp:
         mp.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
+        cuts = record_cuts(mp, graph)
         shuffled = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
-        assert graph.last_run_stats["path"] == "shuffle"
-    bcast = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
-    assert graph.last_run_stats["path"] == "broadcast"
+        assert pagerank_path(cuts) == "shuffle"
+    with monkeypatch.context() as mp:
+        cuts = record_cuts(mp, graph)
+        bcast = {r.node: r.rank for r in pagerank(edges, iterations=8).collect()}
+        assert pagerank_path(cuts) == "broadcast"
 
     assert set(shuffled) == set(bcast)
     for v in bcast:
@@ -1650,15 +1644,26 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
     """When _SSJOIN_MAX_SLICES clamps the auto slice count below what
     the _SSJOIN_SLICE_BYTES budget wants, the breach must be LOUD: a
     warning fires (telling the caller to pass an explicit slices=N
-    with slice_range) and last_auto_decision records cap_bound + the
-    projected per-slice scratch overage — on a real cluster with
-    small executor-local disks a silent clamp is exactly the failure
-    the budget exists to prevent."""
+    with slice_range) and the sizing carries the projected per-slice
+    scratch overage — on a real cluster with small executor-local
+    disks a silent clamp is exactly the failure the budget exists to
+    prevent.  The sizing is read by wrapping ``dedup._auto_slices``,
+    which receives the measured raw candidate volume."""
     import random
     import warnings
 
     from sparkplans.operators import dedup
     from sparkplans.operators.dedup import prefix_filter_pairs
+
+    decisions: list[tuple[int, tuple[int, int, int]]] = []
+    real_auto = dedup._auto_slices
+
+    def auto(raw_rows):
+        out = real_auto(raw_rows)
+        decisions.append((int(raw_rows), out))
+        return out
+
+    monkeypatch.setattr(dedup, "_auto_slices", auto)
 
     rng = random.Random(13)
     vocab = [f"w{i}" for i in range(8)]
@@ -1685,21 +1690,17 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
                 ).collect()
             )
         assert got == want  # clamping never changes the result
-        d = dedup.last_auto_decision
-        assert d["cap_bound"] is True
-        assert d["slices"] == 2 and d["slices_wanted"] > 2
-        assert d["max_slices"] == 2
+        assert len(decisions) == 1
+        raw, (slices, wanted, breach) = decisions[0]
+        assert slices == 2 and wanted > 2  # the cap binds
         # breach = projected per-slice scratch minus budget, positive
-        assert (
-            d["budget_breach_bytes"]
-            == d["raw_candidate_rows"] * 72 // d["slices"] - d["budget_bytes"]
-        )
-        assert d["budget_breach_bytes"] > 0
+        assert breach == raw * 72 // slices - 5000
+        assert breach > 0
         msgs = [str(w.message) for w in caught]
-        advice = f"explicit slices={d['slices_wanted']} and run it via slice_range"
+        advice = f"explicit slices={wanted} and run it via slice_range"
         assert any(advice in m and "exceeds" in m for m in msgs), msgs
 
-    # unclamped control on the same data: no breach recorded
+    # unclamped control on the same data: no breach
     with warnings.catch_warnings(record=True) as caught2:
         warnings.simplefilter("always")
         got2 = sorted(
@@ -1710,10 +1711,39 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
             ).collect()
         )
     assert got2 == want
-    d2 = dedup.last_auto_decision
-    assert d2["cap_bound"] is False
-    assert d2["budget_breach_bytes"] == 0
+    assert len(decisions) == 2
+    raw2, (slices2, wanted2, breach2) = decisions[1]
+    assert raw2 == raw and slices2 == wanted2 > 2
+    assert breach2 == 0
     assert not any("slice_range" in str(w.message) for w in caught2)
+
+
+def test_auto_slices_arithmetic(monkeypatch):
+    """``_auto_slices`` without Spark: the budget sets the wanted
+    count (ceil of 72 bytes per raw candidate row over the budget),
+    the cap clamps it, and a binding cap reports the projected
+    per-slice overage and warns with the explicit-slices advice."""
+    import warnings
+
+    from sparkplans.operators import dedup
+
+    monkeypatch.setattr(dedup, "_SSJOIN_SLICE_BYTES", 1000)
+    monkeypatch.setattr(dedup, "_SSJOIN_MAX_SLICES", 4)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")  # none of these may warn
+        assert dedup._auto_slices(0) == (1, 1, 0)
+        assert dedup._auto_slices(13) == (1, 1, 0)  # 936 B fits one slice
+        assert dedup._auto_slices(14) == (2, 2, 0)  # 1008 B needs two
+        assert dedup._auto_slices(55) == (4, 4, 0)  # 3960 B: 4 x 990 B
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        # 10000 raw rows = 720000 B: wants 720 slices, capped at 4,
+        # so each slice holds 180000 B against the 1000 B budget
+        assert dedup._auto_slices(10_000) == (4, 720, 179_000)
+    (w,) = caught
+    msg = str(w.message)
+    assert "explicit slices=720 and run it via slice_range" in msg, msg
+    assert "exceeds" in msg and "4-slice cap binds" in msg, msg
 
 
 def test_prefix_filter_slice_range_partitions_the_result(spark, tmp_path):

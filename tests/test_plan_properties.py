@@ -542,9 +542,11 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark, monkeypatch):
     ranks-side shuffle (node) and the dst partial-agg exchange.
     Before round 9 the localCheckpoint route lost the layout and each
     iteration re-exchanged + re-sorted the full corpus (probe-proven:
-    3 exchanges + 2 sorts vs 1)."""
+    3 exchanges + 2 sorts vs 1).  Every iteration's cut is checked,
+    walked as the operator hands it over (tests/cuts.py)."""
     from pyspark.sql import functions as F
     from sparkplans.operators import graph
+    from tests.cuts import pagerank_path, record_cuts
 
     edges = spark.range(0, 20_000).select(
         (F.col("id") % 700).alias("src"),
@@ -558,11 +560,15 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark, monkeypatch):
     try:
         with monkeypatch.context() as mp:
             mp.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
+            cuts = record_cuts(mp, graph)
             graph.pagerank(edges, iterations=2).count()
-        st = graph.last_run_stats
-        assert st["path"] == "shuffle"
-        exchanges, sorts = st["iteration_exchanges"], st["iteration_sorts"]
-        assert exchanges is not None and sorts is not None
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
+    assert pagerank_path(cuts) == "shuffle"
+    iters = [c for c in cuts if not c["preserve"]]
+    assert len(iters) == 2, iters
+    for it in iters:
+        exchanges, sorts = it["exchanges"], it["sorts"]
         # the corpus key must appear in NO live exchange or sort
         offenders = [d for d in exchanges + sorts if "src#" in d]
         assert not offenders, offenders
@@ -570,26 +576,30 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark, monkeypatch):
         # the matching two slim sorts
         assert len(exchanges) <= 2, exchanges
         assert len(sorts) <= 2, sorts
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
 
     # broadcast path: zero live exchanges per iteration (the docstring
     # claim, now actually true — localCheckpoint used to erase the
     # layout and re-exchange the partial-agg rows every pass)
-    graph.pagerank(edges, iterations=2).count()
-    st = graph.last_run_stats
-    assert st["path"] == "broadcast"
-    assert st["iteration_exchanges"] == [], st["iteration_exchanges"]
+    with monkeypatch.context() as mp:
+        cuts = record_cuts(mp, graph)
+        graph.pagerank(edges, iterations=2).count()
+    assert pagerank_path(cuts) == "broadcast"
+    iters = [c for c in cuts if not c["preserve"]]
+    assert len(iters) == 2, iters
+    for it in iters:
+        assert it["exchanges"] == [], it["exchanges"]
 
 
-def test_label_propagation_round_no_corpus_exchange(spark):
+def test_label_propagation_round_no_corpus_exchange(spark, monkeypatch):
     """label_propagation's symmetric edge list is STATIC, so round 9
     lays it out + sorts it on the join key `b` once behind a
     partition-preserving materialize: one round must execute NO
     exchange and NO sort on `b` — only the slim node-keyed shuffles
-    (labels join side, vote counts, argmax)."""
+    (labels join side, vote counts, argmax).  Every round's cut is
+    checked; the first non-preserving cut is the initial labels."""
     from pyspark.sql import functions as F
     from sparkplans.operators import graph
+    from tests.cuts import record_cuts
 
     edges = spark.range(0, 5_000).select(
         (F.col("id") % 300).alias("src"), ((F.col("id") * 17) % 280).alias("dst")
@@ -597,17 +607,18 @@ def test_label_propagation_round_no_corpus_exchange(spark):
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        cuts = record_cuts(monkeypatch, graph)
         graph.label_propagation(edges, iterations=2).count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    shape = graph.lpa_last_round_plan
-    assert shape is not None
-    offenders = [d for d in shape["exchanges"] + shape["sorts"] if "b#" in d]
-    assert not offenders, offenders
-    assert len(shape["exchanges"]) <= 3, shape["exchanges"]
+    assert [c["preserve"] for c in cuts] == [True, False, False, False]
+    for shape in cuts[2:]:
+        offenders = [d for d in shape["exchanges"] + shape["sorts"] if "b#" in d]
+        assert not offenders, offenders
+        assert len(shape["exchanges"]) <= 3, shape["exchanges"]
 
 
-def test_connected_components_round_shape_ratchet(spark):
+def test_connected_components_round_shape_ratchet(spark, monkeypatch):
     """connected_components has NO static corpus frame — both stars
     REWRITE the edge set every round, so the per-round corpus
     exchange is the round-output re-layout itself and there is
@@ -618,9 +629,11 @@ def test_connected_components_round_shape_ratchet(spark):
     m/nbrs), which canonicalizes to ReusedExchange at runtime — a
     refactor that breaks that canonical equality would multiply real
     shuffle work.  Ratchet the static round shape at its measured
-    size."""
+    size.  The round is read from the eager cut each round hands to
+    ``materialize`` (the node and edge cuts before it are lazy)."""
     from pyspark.sql import functions as F
     from sparkplans.operators import dedup
+    from tests.cuts import record_cuts
 
     pairs = spark.range(0, 3_000).select(
         (F.col("id") % 400).alias("id_a"), ((F.col("id") * 13) % 390).alias("id_b")
@@ -628,11 +641,13 @@ def test_connected_components_round_shape_ratchet(spark):
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        cuts = record_cuts(monkeypatch, dedup)
         dedup.connected_components(pairs).count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    shape = dedup.cc_last_round_plan
-    assert shape is not None
+    rounds = [c for c in cuts if not c["lazy"]]
+    assert rounds, cuts
+    shape = rounds[0]
     # measured 22 static exchanges / 14 sorts on Spark 4.1.2 (inner
     # star referenced 4x; runtime collapses the copies via
     # ReusedExchange) — lowering is an optimization, raising must be

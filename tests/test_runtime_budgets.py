@@ -107,10 +107,13 @@ def test_scheduler_job_budget_pagerank_shuffle_path(spark, monkeypatch):
     sf0.1 vs broadcast's 40), and nothing more."""
     from sparkplans import plans
     from sparkplans.operators import graph
+    from tests.cuts import pagerank_path, record_cuts
 
     monkeypatch.setattr(graph, "_PAGERANK_BROADCAST_NODES", 0)
-    df = _save(spark, "pagerank_copurchase")
-    assert (graph.last_run_stats or {}).get("path") == "shuffle"
+    with monkeypatch.context() as mp:
+        cuts = record_cuts(mp, graph)
+        df = _save(spark, "pagerank_copurchase")
+    assert pagerank_path(cuts) == "shuffle"
     # static plan contract matches the broadcast shape: the
     # returned frame reads the final checkpoint, zero exchanges
     assert plans.num_exchanges(df) == 0
