@@ -46,8 +46,9 @@ def main() -> None:
         "Each query declares its exchange budget where it is registered",
         "(`exchanges=` in `sparkplans/queries/`, checked by",
         "`tests/test_shuffle_budgets.py`).  `python` counts Python exec",
-        "nodes in the plan text (a Python stage inside a materialized cut",
-        "is not visible); it is 0 by the no-Python-hot-path gate except",
+        "nodes in the plan walk, cached build plans included (a Python",
+        "stage inside a materialized cut is not visible); it is 0 by the",
+        "no-Python-hot-path gate except",
         "for the queries registered `python=True`: "
         + ", ".join(f"`{n}`" for n in sorted(Q.REGISTRY) if Q.REGISTRY[n].python)
         + ".",

@@ -10,7 +10,7 @@ CollectLeft hash join).
 
 Spark mapping: ``explain`` modes wrap ``df.explain``; ``analyze``
 executes the plan and pulls SQLMetrics off ``executedPlan``; plan
-properties are regex counts over the executed/physical plan string.
+properties are filters over one py4j walk of the physical plan tree.
 Property assertions (``num_exchanges``, ``num_sorts``,
 ``join_strategies``) are version-drift-proof, unlike golden plan text.
 In Spark, every Exchange is a process/node shuffle boundary — counting
@@ -37,7 +37,7 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
     'simple', 'cost', 'codegen', 'executed' (post-AQE final plan).
     """
     if mode == "executed":
-        return executed_plan_str(df)
+        return physical_plan_str(df)
     spark_mode = {"tree": "formatted", "indent": "extended"}.get(mode, mode)
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -47,15 +47,9 @@ def plan_text(df: DataFrame, mode: str = "formatted") -> str:
 
 def physical_plan_str(df: DataFrame) -> str:
     """Current physical plan string.  Under AQE this is the adaptive
-    plan — initial shape before any action, re-planned final shape
-    after one (same accessor as :func:`executed_plan_str`; both names
-    kept because call sites read differently pre- vs post-action)."""
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def executed_plan_str(df: DataFrame) -> str:
-    """Final plan string; if the query already ran under AQE this shows
-    the re-planned form."""
+    plan — initial shape before any action; after one it prints the
+    re-planned final plan AND the initial plan, so never count nodes
+    in it (the counters below walk the plan instead)."""
     return df._jdf.queryExecution().executedPlan().toString()
 
 
@@ -73,201 +67,211 @@ def normalize_plan(text: str) -> str:
 # -- plan properties --------------------------------------------------------
 
 
-def _plan_for_matching(df: DataFrame) -> str:
-    return physical_plan_str(df)
+# Every concrete Python exec node of Spark 4.1 (sql/execution/python):
+# scalar UDFs and UDTFs, grouped/window aggregate UDFs, map/group/
+# cogroup functions over pandas or Arrow batches, and stateful groups.
+_PYTHON_EXECS = {
+    "BatchEvalPythonExec", "BatchEvalPythonUDTFExec",
+    "ArrowEvalPythonExec", "ArrowEvalPythonUDTFExec",
+    "ArrowAggregatePythonExec", "ArrowWindowPythonExec",
+    "MapInPandasExec", "MapInArrowExec",
+    "FlatMapGroupsInPandasExec", "FlatMapGroupsInArrowExec",
+    "FlatMapCoGroupsInPandasExec", "FlatMapCoGroupsInArrowExec",
+    "FlatMapGroupsInPandasWithStateExec", "TransformWithStateInPySparkExec",
+}
+
+# join_strategies lists them in this order, "Exec" dropped
+_JOIN_EXECS = (
+    "BroadcastHashJoinExec", "SortMergeJoinExec", "ShuffledHashJoinExec",
+    "BroadcastNestedLoopJoinExec", "CartesianProductExec",
+)
+
+
+def _each(seq):
+    it = seq.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _walk(df: DataFrame) -> list[tuple[str, object, bool]]:
+    """``(class name, node, cached)`` for every physical node of the
+    frame's plan, pre-order from the root; every counter below filters
+    one such walk.  It reads the static plan, so it gives the same
+    answer before and after the frame has run:
+
+    * ``AdaptiveSparkPlanExec`` resolves to its ``initialPlan``
+      (post-EnsureRequirements, pre-runtime-replan — the shape a
+      ratchet should pin; runtime AQE only ever REMOVES work from it),
+      a ``*QueryStageExec`` to its ``plan``;
+    * below the ``InMemoryTableScanExec`` leaf the walk goes on into
+      the cached build plan with ``cached=True``: that work ran once,
+      when the cache filled, not in this query;
+    * plans nested in EXPRESSIONS (scalar and IN subqueries, DPP filter
+      plans) are not ``children()``; each distinct one is visited once.
+    """
+    out: list = []
+    subqueries: list = []
+
+    def tree(root, cached: bool) -> None:
+        # a tree's own nodes first, then each subquery it met, in order
+        # (EXPLAIN FORMATTED's order)
+        found = []
+        stack = [(root, cached)]
+        while stack:
+            node, cached = stack.pop()
+            name = node.getClass().getSimpleName()
+            out.append((name, node, cached))
+            if name == "AdaptiveSparkPlanExec":
+                stack.append((node.initialPlan(), cached))
+                continue
+            if name.endswith("QueryStageExec"):
+                stack.append((node.plan(), cached))
+                continue
+            for sub in _each(node.subqueries()):
+                if not any(sub.sameResult(seen) for seen in subqueries):
+                    subqueries.append(sub)
+                    found.append((sub, cached))
+            nested = [(child, cached) for child in _each(node.children())]
+            if name == "InMemoryTableScanExec":
+                nested.append((node.relation().cachedPlan(), True))
+            stack.extend(reversed(nested))
+        for sub, sub_cached in found:
+            tree(sub, sub_cached)
+
+    tree(df._jdf.queryExecution().executedPlan(), False)
+    return out
+
+
+def _names(df: DataFrame) -> list[str]:
+    return [name for name, _, _ in _walk(df)]
+
+
+def _exchange_counts(walk: list) -> tuple[int, int]:
+    """(distinct shuffle exchanges, reused exchanges), cached build
+    plans left out.  An exchange that ``sameResult``s an earlier one —
+    the equality Spark's ReuseExchange uses — is a reuse; a
+    non-adaptive plan already carries those as ``ReusedExchangeExec``."""
+    distinct: list = []
+    shuffles = reused = 0
+    for name, node, cached in walk:
+        if cached:
+            continue
+        if name == "ReusedExchangeExec":
+            reused += 1
+        elif name in ("ShuffleExchangeExec", "BroadcastExchangeExec"):
+            if any(n == name and node.sameResult(d) for n, d in distinct):
+                reused += 1
+            else:
+                distinct.append((name, node))
+                shuffles += name == "ShuffleExchangeExec"
+    return shuffles, reused
 
 
 def num_exchanges(df: DataFrame) -> int:
     """Count the shuffle boundaries the query would EXECUTE (the
     scale-critical metric; the reference's RepartitionExec analog).
     Broadcast exchanges are not counted — they are the *cheap*
-    alternative we want.
+    alternative we want — and neither are a cached build plan's.
 
     Canonically-identical exchanges count ONCE: Spark's ReuseExchange
     (``spark.sql.exchange.reuse``, on by default and never disabled by
     this engine) runs one shuffle per canonically-equal subtree and
     feeds every consumer from it — verified on copurchase_rules, whose
     final AQE plan carries 4 ReusedExchange nodes over one basket
-    repartition.  A plain regex count over the plan STRING charges a
-    shared exchange once per consumer, penalizing exactly the
+    repartition.  Counting every exchange node would charge a shared
+    exchange once per consumer, penalizing exactly the
     share-one-exchange-across-branches design the reference's
-    never-repartition rule asks for.  The dedup key is the
-    canonicalized subtree — the same equality ReuseExchange uses — so
-    two different shuffles never collapse."""
-    try:
-        nodes: list = []
-        _walk_live(df._jdf.queryExecution().executedPlan(), nodes)
-        distinct: list = []
-        for name, jp in nodes:
-            if name.startswith("ShuffleExchangeExec"):
-                if not any(jp.sameResult(other) for other in distinct):
-                    distinct.append(jp)
-        return len(distinct)
-    except Exception:
-        # py4j walk unavailable (e.g. mocked plan) — regex fallback,
-        # which may over-count shared exchanges
-        plan = _plan_for_matching(df)
-        return len(re.findall(r"Exchange (?:hashpartitioning|rangepartitioning|RoundRobinPartitioning|SinglePartition)", plan))
-
-
-def num_broadcasts(df: DataFrame) -> int:
-    return len(re.findall(r"BroadcastExchange", _plan_for_matching(df)))
-
-
-def _walk_live(jplan, out: list) -> None:
-    name = jplan.getClass().getSimpleName().removesuffix("$")
-    out.append((name, jplan))
-    # AQE wraps the real tree in leaf containers; descend explicitly.
-    # initialPlan (post-EnsureRequirements, pre-runtime-replan) is the
-    # static shape a ratchet should pin — runtime AQE only ever
-    # REMOVES work (coalesce, reuse, skew-split) from it.
-    if name.startswith("AdaptiveSparkPlanExec"):
-        _walk_live(jplan.initialPlan(), out)
-        return
-    if name.endswith("QueryStageExec"):
-        _walk_live(jplan.plan(), out)
-        return
-    # Plans nested in EXPRESSIONS (non-correlated scalar subqueries,
-    # in-subqueries, DPP filter plans) are not in children() — without
-    # this, a shuffle inside a subquery is invisible to the exchange
-    # ratchet.
-    try:
-        sit = jplan.subqueries().iterator()
-        while sit.hasNext():
-            _walk_live(sit.next(), out)
-    except Exception:
-        pass
-    it = jplan.children().iterator()
-    while it.hasNext():
-        _walk_live(it.next(), out)
-
-
-def live_plan_nodes(df: DataFrame) -> list[tuple[str, str]]:
-    """(class_name, one_line_desc) for every physical operator this
-    query EXECUTES — a py4j tree walk from the plan root that, unlike
-    the regex counters above, never sees cached subtrees:
-    ``InMemoryTableScan`` is a physical LEAF (its cached build plan —
-    which legitimately holds the one-time layout Exchange — is
-    printed inline by ``toString`` but is not part of this query), so
-    the walk stops there.  The tool for asserting that an iterative
-    consumer of a partition-preserving ``materialize`` really pays no
-    per-iteration Exchange/Sort (the reference's never-repartition-
-    pre-partitioned-data rule, docs/7:100-160)."""
-    nodes: list = []
-    _walk_live(df._jdf.queryExecution().executedPlan(), nodes)
-    out = []
-    for name, jp in nodes:
-        try:
-            desc = str(jp.simpleString(100))
-        except Exception:
-            desc = name
-        out.append((name, desc))
-    return out
-
-
-def live_exchanges(df: DataFrame) -> list[str]:
-    """One-line descs of the shuffle exchanges this query executes,
-    excluding cached subtrees and broadcasts (see
-    :func:`live_plan_nodes`)."""
-    return [
-        d
-        for n, d in live_plan_nodes(df)
-        if n.startswith("ShuffleExchangeExec")
-    ]
-
-
-def live_sorts(df: DataFrame) -> list[str]:
-    """One-line descs of the sorts this query executes, excluding
-    cached subtrees (see :func:`live_plan_nodes`)."""
-    return [d for n, d in live_plan_nodes(df) if n.startswith("SortExec")]
-
-
-def num_sorts(df: DataFrame) -> int:
-    plan = _plan_for_matching(df)
-    return len(re.findall(r"^\s*[+\-:*\s]*Sort ", plan, flags=re.M)) + len(
-        re.findall(r"SortExec", plan)
-    )
-
-
-def join_strategies(df: DataFrame) -> list[str]:
-    plan = _plan_for_matching(df)
-    out = []
-    for name in (
-        "BroadcastHashJoin",
-        "SortMergeJoin",
-        "ShuffledHashJoin",
-        "BroadcastNestedLoopJoin",
-        "CartesianProduct",
-    ):
-        out.extend([name] * len(re.findall(name, plan)))
-    return out
-
-
-def scan_pushed_filters(df: DataFrame) -> list[str]:
-    """PushedFilters lists from the formatted plan — evidence that
-    predicates reached the parquet scan (reference 'partial_filters',
-    docs/5:31-32)."""
-    txt = plan_text(df, "formatted")
-    return re.findall(r"PushedFilters: \[([^\]]*)\]", txt)
-
-
-def scan_read_schema(df: DataFrame) -> list[str]:
-    """ReadSchema of each scan — evidence of column pruning
-    (docs/4:113-140 projection pushdown)."""
-    txt = plan_text(df, "formatted")
-    return re.findall(r"ReadSchema: (\S+)", txt)
+    never-repartition rule asks for."""
+    return _exchange_counts(_walk(df))[0]
 
 
 def num_reused_exchanges(df: DataFrame) -> int:
-    """Count ``ReusedExchange`` nodes — shuffles/broadcasts Catalyst
-    deduplicated because an identical subtree appears elsewhere in the
-    plan (self-joins, diamond lineage).  High reuse means the plan
-    pays for shared lineage once; the pair ``(num_exchanges,
-    num_reused_exchanges)`` is the full shuffle story.
-
-    Under AQE, reuse is decided when query stages materialize, so the
-    marker often appears only in the executed plan — count whichever
-    rendering shows more (execute the df first for the runtime
-    answer)."""
-    pre = len(re.findall(r"ReusedExchange", _plan_for_matching(df)))
-    try:
-        post = len(re.findall(r"ReusedExchange", executed_plan_str(df)))
-    except Exception:
-        post = 0
-    return max(pre, post)
+    """Count the shuffle and broadcast exchanges that repeat an
+    earlier one — lineage that appears twice in the plan (self-joins,
+    diamonds) and that Catalyst's exchange reuse runs once.  The copies
+    of a repeated subtree's inner exchanges count too: each is a
+    shuffle not run.  The pair ``(num_exchanges,
+    num_reused_exchanges)`` is the full shuffle story.  Static: AQE
+    applies reuse when query stages materialize, but which exchanges
+    it merges is known from the plan before that."""
+    return _exchange_counts(_walk(df))[1]
 
 
-# Every concrete Python exec node of Spark 4.1 (sql/execution/python):
-# scalar UDFs and UDTFs, grouped/window aggregate UDFs, map/group/
-# cogroup functions over pandas or Arrow batches, and stateful groups.
-_PYTHON_NODES = re.compile(
-    r"\b(?:BatchEvalPython|ArrowEvalPython)(?:UDTF)?\b"
-    r"|\bArrow(?:Aggregate|Window)Python\b"
-    r"|\b(?:MapIn|FlatMapGroupsIn|FlatMapCoGroupsIn)(?:Pandas|Arrow)\b"
-    r"|\bFlatMapGroupsInPandasWithState\b"
-    r"|\bTransformWithStateInPySpark\b"
-)
+def num_broadcasts(df: DataFrame) -> int:
+    return _names(df).count("BroadcastExchangeExec")
+
+
+def num_sorts(df: DataFrame) -> int:
+    return _names(df).count("SortExec")
 
 
 def num_python_stages(df: DataFrame) -> int:
     """Count plan nodes that leave the JVM (row-at-a-time or
-    Arrow-batched Python).  0 for every registered query not declared
-    ``python=True`` — the global gate in tests/test_plan_properties.py."""
-    return len(_PYTHON_NODES.findall(_plan_for_matching(df)))
+    Arrow-batched Python), cached build plans included.  0 for every
+    registered query not declared ``python=True`` — the global gate in
+    tests/test_plan_properties.py."""
+    return sum(name in _PYTHON_EXECS for name in _names(df))
+
+
+def _join_strategies(names: list[str]) -> list[str]:
+    return [j.removesuffix("Exec") for j in _JOIN_EXECS for n in names if n == j]
+
+
+def join_strategies(df: DataFrame) -> list[str]:
+    return _join_strategies(_names(df))
+
+
+def live_plan_nodes(df: DataFrame) -> list[tuple[str, str]]:
+    """(class_name, one_line_desc) for every physical operator this
+    query EXECUTES: the walk without cached build plans (the
+    ``InMemoryTableScanExec`` leaf itself is listed).  The tool for
+    asserting that an iterative consumer of a partition-preserving
+    ``materialize`` really pays no per-iteration Exchange/Sort (the
+    reference's never-repartition-pre-partitioned-data rule,
+    docs/7:100-160)."""
+    return [(name, node.simpleString(100)) for name, node, cached in _walk(df) if not cached]
+
+
+def _scan_metadata(walk: list, key: str) -> list[str]:
+    """``key``'s value in each file scan's metadata; empty lists are
+    dropped, as EXPLAIN FORMATTED drops them."""
+    values = [n.metadata().apply(key) for name, n, _ in walk if name == "FileSourceScanExec"]
+    return [v for v in values if v not in ("", "[]")]
+
+
+def _pushed_filters(walk: list) -> list[str]:
+    return [v[1:-1] for v in _scan_metadata(walk, "PushedFilters")]  # strip [ ]
+
+
+def scan_pushed_filters(df: DataFrame) -> list[str]:
+    """The PushedFilters list of each file scan — evidence that
+    predicates reached the parquet scan (reference 'partial_filters',
+    docs/5:31-32)."""
+    return _pushed_filters(_walk(df))
+
+
+def scan_read_schema(df: DataFrame) -> list[str]:
+    """ReadSchema of each file scan — evidence of column pruning
+    (docs/4:113-140 projection pushdown)."""
+    return _scan_metadata(_walk(df), "ReadSchema")
 
 
 def audit(df: DataFrame) -> dict:
     """One-call structural cost summary of a plan — the quantities the
-    engine treats as the performance contract (SCALE.md).  Cheap: pure
-    plan-text inspection, no execution."""
+    engine treats as the performance contract (SCALE.md).  Cheap: one
+    plan walk, no execution; the same answer before and after the
+    frame has run."""
+    walk = _walk(df)
+    names = [name for name, _, _ in walk]
+    exchanges, reused = _exchange_counts(walk)
     return {
-        "exchanges": num_exchanges(df),
-        "reused_exchanges": num_reused_exchanges(df),
-        "broadcasts": num_broadcasts(df),
-        "sorts": num_sorts(df),
-        "python_stages": num_python_stages(df),
-        "join_strategies": join_strategies(df),
-        "pushed_filters": scan_pushed_filters(df),
+        "exchanges": exchanges,
+        "reused_exchanges": reused,
+        "broadcasts": names.count("BroadcastExchangeExec"),
+        "sorts": names.count("SortExec"),
+        "python_stages": sum(name in _PYTHON_EXECS for name in names),
+        "join_strategies": _join_strategies(names),
+        "pushed_filters": _pushed_filters(walk),
     }
 
 
@@ -287,7 +291,7 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
         # AdaptiveSparkPlan; after an action the final plan shows the
         # codegen stars — execute a cheap action and read that.
         df.collect()  # executes THIS df's QueryExecution (diagnostics cost)
-        ids = _ids(executed_plan_str(df))
+        ids = _ids(physical_plan_str(df))
     return len(ids)
 
 

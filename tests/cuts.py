@@ -30,12 +30,13 @@ def record_cuts(monkeypatch, module) -> list[dict]:
             root = df._jdf.queryExecution().analyzed().toString().splitlines()[0]
             cuts.append({"preserve": True, "lazy": lazy, "root": root})
         else:
+            nodes = plans.live_plan_nodes(df)
             cuts.append(
                 {
                     "preserve": False,
                     "lazy": lazy,
-                    "exchanges": plans.live_exchanges(df),
-                    "sorts": plans.live_sorts(df),
+                    "exchanges": [d for n, d in nodes if n == "ShuffleExchangeExec"],
+                    "sorts": [d for n, d in nodes if n == "SortExec"],
                 }
             )
 

@@ -246,7 +246,7 @@ def test_aqe_splits_skewed_join(spark):
         # execute THIS plan (count() would be a different query
         # execution and the AQE final plan lives on the executed one)
         assert len(joined.collect()) == n
-        executed = P.executed_plan_str(joined)
+        executed = P.physical_plan_str(joined)
         assert "skew=true" in executed, executed[:1500]
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_bc)
@@ -333,8 +333,59 @@ def test_audit_summary_and_exchange_reuse(spark):
     diamond = per_user.alias("a").join(
         per_user.alias("b"), "user_id"
     )
-    diamond.collect()  # AQE decides reuse when stages materialize
+    # static: read before execution, though AQE applies the reuse
+    # only when the query stages materialize
     assert plans.num_reused_exchanges(diamond) >= 1
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        # a non-adaptive plan carries the reuse as a ReusedExchange leaf
+        again = per_user.alias("a").join(per_user.alias("b"), "user_id")
+        assert plans.num_reused_exchanges(again) >= 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
+
+
+def test_pushed_in_filter_lists_whole(spark):
+    """A pushed ``In`` filter keeps its bracketed value list whole in
+    the scan's PushedFilters entry."""
+    pushed = plans.scan_pushed_filters(_df(spark, "between_and_in_list"))
+    assert any("In(l_returnflag, [A,N])" in p for p in pushed), pushed
+
+
+@pytest.mark.parametrize(
+    "name", ["tdigest_price_quantiles", "copurchase_rules", "audio_vad_segments"]
+)
+def test_audit_same_before_and_after_collect(spark, name):
+    """The audit reads the static plan: running the frame, after which
+    its AQE plan string prints both the final and the initial plan,
+    changes no field."""
+    df = _df(spark, name)
+    before = plans.audit(df)
+    df.collect()
+    assert plans.audit(df) == before
+
+
+def test_cached_build_plan_counts(spark):
+    """The cache rule: a Python node in a cached build plan counts as a
+    Python stage (as in the plan text), while the cached repartition
+    is not an exchange of this query (it ran once, when the cache
+    filled); running the frame changes neither count."""
+    cached = (
+        spark.range(100).repartition(4, "id").mapInPandas(lambda it: it, "id long").cache()
+    )
+    try:
+        df = cached.groupBy((F.col("id") % 3).alias("k")).count()
+
+        def counts():
+            live = [n for n, _ in plans.live_plan_nodes(df) if n == "ShuffleExchangeExec"]
+            return plans.num_python_stages(df), plans.num_exchanges(df), len(live)
+
+        assert counts() == (1, 1, 1)
+        df.collect()
+        assert counts() == (1, 1, 1)
+    finally:
+        cached.unpersist()
 
 
 def test_partition_histogram_balanced_and_skewed(spark):

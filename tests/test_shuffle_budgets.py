@@ -12,12 +12,9 @@ Counting is by EXECUTED shuffles: canonically-identical exchanges
 count once, because ReuseExchange runs one shuffle per
 canonically-equal subtree and feeds every consumer from it (see
 plans.num_exchanges) — sharing one exchange across plan branches is
-an optimization the ratchet must reward, not punish.  The live walk
-also descends into expression-nested plans (scalar subqueries, DPP
-filter plans), which the regex FALLBACK path does not see — and the
-fallback conversely counts a reused exchange once per consumer — so
-a budget diff between environments where only the fallback is
-available is a counting artifact, not a plan change.
+an optimization the ratchet must reward, not punish.  The walk also
+descends into expression-nested plans (scalar subqueries, DPP filter
+plans).
 
 Budgets are the currently-achieved counts — a deliberate ratchet.
 Lowering one is an optimization; raising one must be argued beside it
