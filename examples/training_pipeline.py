@@ -155,7 +155,7 @@ def main() -> None:
 
     # multimodal side-car: real codecs + cross-modal perceptual dedup
     media = multimodal.synthetic_png_media(spark, n=12)
-    feats = multimodal.extract_image_features_real(media)
+    feats = multimodal.extract_image_features(media)
     print(f"[9] media featurized: {feats.count()} images "
           f"(real PNG decode, Arrow-batched)")
     pairs = multimodal.media_near_dups(media)

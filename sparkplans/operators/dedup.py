@@ -129,29 +129,6 @@ def minhash_wide(
     return sh.groupBy(id_col).agg(*aggs)
 
 
-def lsh_candidate_pairs(
-    sig: DataFrame,
-    id_col: str = "doc_id",
-    num_perm: int = 16,
-    bands: int = 4,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """Band the signature and self-join on (band, band_hash):
-    documents agreeing on ALL rows of any band become candidates.
-
-    The self-join shuffles on the band hash — tiny compared to the
-    corpus.  ``max_bucket`` caps degenerate buckets (boilerplate
-    text) so one hot key cannot quadratically blow up a task; capped
-    buckets are dropped (standard practice — such docs are handled
-    by exact dedup on the fingerprint instead)."""
-    rows_per_band = num_perm // bands
-    banded = sig.withColumn("band", (F.col("perm") / rows_per_band).cast("int"))
-    band_sig = banded.groupBy(id_col, "band").agg(
-        F.md5(F.concat_ws(",", F.sort_array(F.collect_list(F.concat_ws(":", "perm", "minhash"))))).alias("band_hash")
-    )
-    return _pairs_from_band_sig(band_sig, id_col, max_bucket)
-
-
 def lsh_candidate_pairs_wide(
     wide: DataFrame,
     id_col: str = "doc_id",
@@ -159,29 +136,16 @@ def lsh_candidate_pairs_wide(
     bands: int = 4,
     max_bucket: int = 1000,
 ) -> DataFrame:
-    """Banding over the wide signature (minhash_wide): band hashes are
-    computed as a projection — no (id, perm) unpivot and no
-    groupBy(id, band) shuffle — then exploded to (id, band,
-    band_hash).  Hash values are bit-identical to the narrow path
-    (same sorted 'perm:minhash' encoding), so candidates are identical
-    too; only the plan is cheaper (one shuffle saved per corpus
-    pass)."""
+    """Band the wide signature (minhash_wide) and pair up documents
+    that agree on ALL rows of any band.  Band hashes are a projection
+    (md5 of the band's sorted 'perm:minhash' entries) exploded to
+    (id, band, band_hash); one groupBy(band, band_hash) collects each
+    bucket's sorted ids, and a codegen'd array expression emits the
+    pairs (id_a < id_b for free).  Only band-hash keys shuffle, never
+    all-pairs.  Buckets above ``max_bucket`` ids (boilerplate text)
+    are dropped — exact dedup on the fingerprint handles those docs —
+    so one task generates at most max_bucket²/2 pairs."""
     band_sig = _band_hashes_wide(wide, id_col, num_perm, bands)
-    return _pairs_from_band_sig(band_sig, id_col, max_bucket)
-
-
-def _pairs_from_band_sig(
-    band_sig: DataFrame, id_col: str, max_bucket: int
-) -> DataFrame:
-    """One groupBy(band, band_hash) collecting the bucket's ids, then
-    pair generation as a codegen'd array expression (sorted ids =>
-    id_a < id_b for free).  A single aggregation replaces the
-    size-prefilter join + bucket self-join formulation: the upstream
-    signature lineage is evaluated once instead of three times, and
-    the only shuffles left are the bucket groupBy and the final
-    distinct.  Per-bucket pair fan-out is bounded by ``max_bucket``
-    (<= max_bucket²/2 pairs generated inside one task), so a hot
-    boilerplate bucket cannot blow up memory at 100 TB scale."""
     buckets = (
         band_sig.groupBy("band", "band_hash")
         .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
@@ -953,7 +917,7 @@ def _band_hashes_wide(
 ) -> DataFrame:
     """(id, band, band_hash) from a wide signature — banding as a pure
     projection (shared by lsh_candidate_pairs_wide and the incremental
-    index path; hashes bit-identical to the narrow formulation)."""
+    index path)."""
     rows_per_band = num_perm // bands
     structs = []
     for b in range(bands):

@@ -21,16 +21,17 @@ no external library —
           detection;
   video:  Y4M / YUV4MPEG2 (ffmpeg's uncompressed interchange format,
           pure numpy) → decode / timestamp frame sampling /
-          scene-cut detection; animated GIF frames sample over their
-          own delay timeline through the same schema.
-The DEFAULT API names (`extract_image_features`, `resize_images`,
-`sample_video_frames`, `resample_audio`) all run these real codecs —
-payloads are sniffed by magic bytes and dispatched to the matching
-decoder; unknown formats raise ``ValueError``, the honest boundary of
-a container with no external codec libraries.  The ``*_real`` names
-remain as compatibility aliases.  Compressed bitstreams that would
-need external libraries (MP3/OGG frames, H.264/MP4 video) get REAL
-container-level metadata probes instead (`extract_media_metadata` /
+          shot-boundary detection; animated GIF frames sample over
+          their own delay timeline through the same schema.
+Each media task has ONE operator (`extract_image_features`,
+`resize_images`, `sample_video_frames`, `resample_audio`) that runs
+these real codecs — payloads are sniffed by magic bytes and
+dispatched to the matching decoder; unknown formats raise
+``ValueError``, the honest boundary of a container with no external
+codec libraries.  To restrict formats, filter the rows before the
+call.  Compressed bitstreams that would need external libraries
+(MP3/OGG frames, H.264/MP4 video) get REAL container-level metadata
+probes instead (`extract_media_metadata` /
 operators/mediaprobe: MP4 box walk, MP3 frame headers), because
 duration/codec/bitrate gates are what a pipeline needs from them.
 
@@ -58,7 +59,6 @@ list.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -94,51 +94,33 @@ def extract_image_features(media: DataFrame) -> DataFrame:
     (:func:`decode_image` — PNG/PPM/BMP/JPEG/GIF), emitting actual
     width/height and per-channel pixel means.  Partition-parallel; the
     UDF sees pandas DataFrames and never crosses the driver."""
-    return extract_image_features_real(media)
 
-
-def extract_image_features_arrow(media: DataFrame) -> DataFrame:
-    """`mapInArrow` twin of :func:`extract_image_features`: the UDF
-    consumes raw ``pyarrow.RecordBatch``es with NO pandas conversion.
-    For wide binary payloads this is the cheaper path at scale —
-    pandas materializes every payload as a Python ``bytes`` object per
-    row (copy + boxing), while Arrow keeps the batch in one
-    contiguous buffer until the kernel actually reads a value.
-    Same real decode kernel (:func:`decode_image`), bit-identical
-    output to the pandas twin; tests assert equality."""
-    import pyarrow as pa
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in it:
-            ids = rb.column(rb.schema.get_field_index("media_id"))
-            arrs = [
-                decode_image(b)
-                for b in rb.column(rb.schema.get_field_index("payload")).to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array([a.shape[1] for a in arrs], pa.int32()),
-                    pa.array([a.shape[0] for a in arrs], pa.int32()),
-                    pa.array(
-                        [[float(m) for m in a.mean(axis=(0, 1))] for a in arrs],
-                        pa.list_(pa.float64()),
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            arrs = pdf["payload"].map(decode_image)
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
+                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
+                    "channel_means": arrs.map(
+                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
                     ),
-                ],
-                names=["media_id", "width", "height", "channel_means"],
+                }
             )
 
-    return media.filter(F.col("kind") == "image").mapInArrow(
+    return media.filter(F.col("kind") == "image").mapInPandas(
         batches, PPM_FEATURES_SCHEMA
     )
 
 
 def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL frame sampling over video payloads, format-sniffed per
-    row: Y4M/YUV4MPEG2 decodes with the pure-numpy codec; animated GIF
+    """REAL frame sampling over video rows and GIF images, format-
+    sniffed per row: Y4M/YUV4MPEG2 picks the frame nearest each tick
+    at the clip's own fps; animated GIF (``kind='image'`` rows too)
     composites frames over the stream's own delay timeline.  One
     output row per every_ms tick with the active frame's actual luma
-    statistics (same schema as :func:`sample_y4m_frames`)."""
+    statistics (``Y4M_FRAME_SCHEMA``)."""
     import numpy as np
 
     def frame_rows(media_id, payload: bytes, rows: list) -> None:
@@ -191,9 +173,9 @@ def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
                 columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"],
             )
 
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
-    )
+    return media.filter(
+        (F.col("kind") == "video") | (F.col("mime") == "image/gif")
+    ).mapInPandas(batches, Y4M_FRAME_SCHEMA)
 
 
 RESIZED_SCHEMA = StructType(
@@ -209,17 +191,62 @@ RESIZED_SCHEMA = StructType(
 def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
     """REAL format-generic resize: sniff + decode with the matching
     codec, nearest-neighbor resample, re-encode in the SAME format
-    (PPM/PNG/BMP lossless; JPEG at q=85).  Delegates to
-    :func:`resize_images_real` (kept as a compatibility alias)."""
-    return resize_images_real(media, width=width, height=height)
+    (PPM/PNG/BMP lossless; JPEG at q=85)."""
+    import numpy as np
+
+    def rz_payload(b: bytes) -> bytes:
+        a = decode_image(b)
+        h, w = a.shape[:2]
+        yi = np.minimum((np.arange(height) * h) // height, h - 1)
+        xi = np.minimum((np.arange(width) * w) // width, w - 1)
+        out = a[yi][:, xi]
+        raw = bytes(b)
+        if raw.startswith(_PNG_SIG):
+            return encode_png(out)
+        if raw.startswith(b"P6"):
+            return encode_ppm(out)
+        if raw.startswith(b"BM"):
+            return encode_bmp(out)
+        from sparkplans.operators.jpeg import encode_jpeg
+
+        return encode_jpeg(out[:, :, :3], quality=85)
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "width": width,
+                    "height": height,
+                    "payload": pdf["payload"].map(rz_payload),
+                }
+            )
+
+    return media.filter(F.col("kind") == "image").mapInPandas(
+        batches, RESIZED_SCHEMA
+    )
 
 
 def resample_audio(media: DataFrame, target_hz: int = 16000) -> DataFrame:
-    """REAL audio resample: decode WAV PCM16, linear-interpolate to
-    ``target_hz``, re-encode — actual waveforms, not digests.
-    Delegates to :func:`resample_wav_audio` (kept as a compatibility
-    alias)."""
-    return resample_wav_audio(media, target_hz=target_hz)
+    """REAL audio resample for audio/wav payloads: decode (PCM16 or
+    G.711), linear-interpolate to ``target_hz``, re-encode as PCM16 —
+    actual waveforms, not digests."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = pdf["payload"].map(lambda b: resample_wav(bytes(b), target_hz))
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["media_id"],
+                    "sample_rate": target_hz,
+                    "n_samples": out.map(lambda b: decode_wav(b)[0].shape[0]).astype("int64"),
+                    "payload": out,
+                }
+            )
+
+    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
+        batches, WAV_RESAMPLE_SCHEMA
+    )
 
 
 def synthetic_media(spark, n: int = 64) -> DataFrame:
@@ -278,12 +305,10 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
 # ---------------------------------------------------------------------
 # A REAL codec path: PPM (P6) images in pure numpy
 # ---------------------------------------------------------------------
-# PPM needs no external codec library, so this branch of the multimodal
-# surface is fully real end-to-end: binary payloads decode to pixel
-# arrays, resize is actual nearest-neighbor resampling, and features
-# are computed from real pixels — same mapInPandas plumbing the
-# stubbed PNG/WAV/MP4 paths use, proving the pattern with bytes the
-# tests can verify numerically.
+# PPM needs no external codec library: a short ASCII header, then raw
+# RGB bytes.  `decode_image` sniffs the ``P6`` magic and lands here, so
+# the generic operators (`extract_image_features`, `resize_images`)
+# featurize and resize PPM payloads from real pixels.
 
 PPM_FEATURES_SCHEMA = StructType(
     [
@@ -332,69 +357,14 @@ def decode_ppm(payload: bytes):
     return np.frombuffer(payload, dtype="uint8", count=w * h * 3, offset=i).reshape(h, w, 3)
 
 
-def decode_ppm_features(media: DataFrame) -> DataFrame:
-    """REAL decode + featurize for image/x-portable-pixmap payloads:
-    per-channel pixel means from the actual decoded array, via the
-    same Arrow-batched mapInPandas flow as the stubbed codecs."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_ppm)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/x-portable-pixmap").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
-
-
-def resize_ppm_images(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """REAL nearest-neighbor resize for PPM payloads: decode, resample
-    with integer index striding, re-encode — the actual pixel
-    transform, not a digest stand-in."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rz(b: bytes) -> bytes:
-                a = decode_ppm(b)
-                h, w = a.shape[:2]
-                yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                return encode_ppm(a[yi][:, xi])
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/x-portable-pixmap").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------
 # A SECOND real codec path: PNG in stdlib zlib + numpy
 # ---------------------------------------------------------------------
 # PNG needs no external library either: chunks are length/type/CRC
 # framing, IDAT is zlib (stdlib), and scanline unfiltering (None /
-# Sub / Up / Average / Paeth) is numpy row arithmetic.  This upgrades
-# the round-1 PNG stub to a fully real branch —
-# encode, decode, featurize, resize — through the identical
-# mapInPandas plumbing.  8-bit RGB/RGBA, non-interlaced (the common
-# case for generated/training imagery); anything else raises.
+# Sub / Up / Average / Paeth) is numpy row arithmetic.  8-bit gray or
+# RGB(A), plain or Adam7-interlaced; anything else raises.  The generic image
+# operators reach it through `decode_image`.
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -605,58 +575,6 @@ def _png_unfilter_subimage(data: bytes, offset: int, h: int, w: int, c: int):
     return out.astype("uint8").reshape(h, w, c), offset + need
 
 
-def decode_png_features(media: DataFrame) -> DataFrame:
-    """REAL decode + featurize for image/png payloads: per-channel
-    pixel means from the actual decoded array — the PPM branch's twin,
-    same Arrow-batched mapInPandas flow, no PIL anywhere."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_png)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/png").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
-
-
-def resize_png_images(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """REAL nearest-neighbor resize for PNG payloads: decode,
-    integer-stride resample, re-encode — actual pixels, not digests."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rz(b: bytes) -> bytes:
-                a = decode_png(b)
-                h, w = a.shape[:2]
-                yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                return encode_png(a[yi][:, xi])
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/png").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
-
-
 def synthetic_png_media(spark, n: int = 16) -> DataFrame:
     """Deterministic real PNG images (per-id gradients, varying sizes,
     alternating RGB/RGBA, every scanline filter exercised)."""
@@ -684,10 +602,9 @@ def synthetic_png_media(spark, n: int = 16) -> DataFrame:
 # ---------------------------------------------------------------------
 # RIFF/WAVE PCM needs no external library: the container is
 # length-framed chunks (struct), samples are little-endian int16
-# (numpy frombuffer).  This upgrades the round-1 audio stub to a fully
-# real branch — decode, resample (linear interpolation), feature
-# extraction (RMS / zero-crossing rate / spectral centroid over a real
-# numpy FFT) — through the identical mapInPandas plumbing.
+# (numpy frombuffer).  Decode, resample (linear interpolation) and
+# feature extraction (RMS / zero-crossing rate / spectral centroid over
+# a real numpy FFT) all run in Arrow-batched mapInPandas stages.
 
 WAV_FEATURES_SCHEMA = StructType(
     [
@@ -906,27 +823,6 @@ def resample_wav(payload: bytes, target_hz: int):
     return encode_wav(np.clip(np.round(out), -32768, 32767).astype("<i2"), target_hz)
 
 
-def resample_wav_audio(media: DataFrame, target_hz: int = 16000) -> DataFrame:
-    """REAL audio resample for audio/wav payloads: decode, linear-interp
-    to target_hz, re-encode — actual waveforms, not digests."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf["payload"].map(lambda b: resample_wav(bytes(b), target_hz))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": target_hz,
-                    "n_samples": out.map(lambda b: decode_wav(b)[0].shape[0]).astype("int64"),
-                    "payload": out,
-                }
-            )
-
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, WAV_RESAMPLE_SCHEMA
-    )
-
-
 def synthetic_wav_media(spark, n: int = 12) -> DataFrame:
     """Deterministic real WAV payloads: per-id sine (and mixed-tone)
     waveforms at varying rates/durations, mono and stereo."""
@@ -977,11 +873,9 @@ def synthetic_ppm_media(spark, n: int = 16) -> DataFrame:
 # ---------------------------------------------------------------------
 # 24-bit uncompressed BMP is a 14-byte file header + 40-byte
 # BITMAPINFOHEADER + bottom-up BGR rows padded to 4 bytes — all
-# struct/numpy.  With PNG, PPM and BMP real, `decode_image` sniffs the
-# payload magic and dispatches, so the *generic* image path
-# (extract_image_features_real) is fully real for every format this
-# container can legally decode; only formats that genuinely require
-# external codecs (JPEG etc.) still raise.
+# struct/numpy.  `decode_image` sniffs the payload magic and
+# dispatches to the PNG, PPM, BMP, JPEG or GIF codec, so every image
+# operator is format-generic; any other format raises.
 
 
 def encode_bmp(arr) -> bytes:
@@ -1055,40 +949,15 @@ def decode_image(payload: bytes):
     )
 
 
-def extract_image_features_real(media: DataFrame) -> DataFrame:
-    """The generic image-features path, REAL end-to-end: sniff + decode
-    each payload with decode_image and emit actual pixel statistics
-    (width/height + per-channel means) — format-agnostic across every
-    codec this module implements."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_image)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
-
-
 # ---------------------------------------------------------------------
 # A FOURTH real codec path: Y4M (YUV4MPEG2) video in pure numpy
 # ---------------------------------------------------------------------
 # YUV4MPEG2 is ffmpeg's uncompressed interchange format: one ASCII
 # header line (`YUV4MPEG2 W.. H.. F<num>:<den> .. C444`), then
-# `FRAME\n` + raw planar YUV per frame.  No external codec needed, so
-# the round-1 video stub (digest fakes) gains a fully real branch:
-# decode, timestamp-accurate frame sampling, per-frame luma features,
-# and scene-cut detection — all real pixels, same mapInPandas flow.
+# `FRAME\n` + raw planar YUV per frame.  No external codec needed:
+# decode, timestamp-accurate frame sampling (`sample_video_frames`),
+# per-frame luma features and shot-boundary detection all read real
+# pixels in the same mapInPandas flow.
 
 Y4M_FRAME_SCHEMA = StructType(
     [
@@ -1099,16 +968,6 @@ Y4M_FRAME_SCHEMA = StructType(
         StructField("luma_std", DoubleType()),
     ]
 )
-
-SCENE_CUT_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("frame_idx", IntegerType()),
-        StructField("t_ms", LongType()),
-        StructField("luma_delta", DoubleType()),
-    ]
-)
-
 
 def encode_y4m(frames, fps_num: int = 25, fps_den: int = 1) -> bytes:
     """Encode an (n_frames, h, w, 3) uint8 YUV array as YUV4MPEG2
@@ -1163,73 +1022,11 @@ def decode_y4m(payload: bytes):
     return np.stack(frames) if frames else np.zeros((0, h, w, 3), "uint8"), fps_num / fps_den
 
 
-def sample_y4m_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL frame sampling for video/x-yuv4mpeg payloads: decode, pick
-    the frame nearest each every_ms timestamp, emit actual luma
-    statistics.  One output row per sampled frame — the video twin of
-    the image/audio real branches."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, fps = decode_y4m(bytes(r["payload"]))
-                n = frames.shape[0]
-                if n == 0:
-                    continue
-                dur_ms = n / fps * 1000
-                t = 0.0
-                while t < dur_ms:
-                    idx = min(int(round(t / 1000 * fps)), n - 1)
-                    y = frames[idx, :, :, 0].astype("float64")
-                    rows.append(
-                        (r["media_id"], idx, int(t), float(y.mean()), float(y.std()))
-                    )
-                    t += every_ms
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"]
-            )
-
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
-    )
-
-
-def detect_scene_cuts(media: DataFrame, threshold: float = 30.0) -> DataFrame:
-    """Scene-cut detection over real decoded frames: a cut is a frame
-    whose mean absolute luma delta vs the previous frame exceeds
-    ``threshold`` (0-255 scale).  The canonical first step of a video
-    training-data pipeline (keyframe selection / shot segmentation)."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, fps = decode_y4m(bytes(r["payload"]))
-                if frames.shape[0] < 2:
-                    continue
-                y = frames[:, :, :, 0].astype("float64")
-                deltas = np.abs(y[1:] - y[:-1]).mean(axis=(1, 2))
-                for i, d in enumerate(deltas, start=1):
-                    if d > threshold:
-                        rows.append(
-                            (r["media_id"], i, int(i / fps * 1000), float(d))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_delta"]
-            )
-
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, SCENE_CUT_SCHEMA
-    )
-
-
 def synthetic_y4m_media(spark, n: int = 8) -> DataFrame:
     """Deterministic real Y4M clips: gradient frames whose luma drifts
     smoothly, with a hard scene cut (luma jump) at the midpoint frame
-    so detect_scene_cuts has exactly one planted positive per clip."""
+    so detect_shot_boundaries at threshold 30 has exactly one planted
+    positive per clip."""
     import numpy as np
 
     rows = []
@@ -1318,19 +1115,12 @@ def image_dhash(media: DataFrame) -> DataFrame:
     )
 
 
-def image_near_dups(media: DataFrame, max_hamming: int = 6) -> DataFrame:
-    """Image near-dup pairs: dHash -> four 16-bit band keys -> band
-    equi-join for candidates (near-identical hashes agree on at least
-    one band whenever <= 3 of the 64 bits differ per band region) ->
-    exact Hamming verify via bit_count(a XOR b), all JVM-side.
-
-    Scale shape: hashes are 8 bytes/image; the candidate join
-    shuffles band keys only — the corpus of image bytes is touched
-    once, by the hashing pass."""
-    h = image_dhash(media)
-    bands = h.select(
-        "media_id",
-        "dhash",
+def _dhash_bands(hashes: DataFrame, cols: list) -> DataFrame:
+    """``cols`` plus (band, key) for each of the four 16-bit bands of
+    the ``dhash`` column: one row per band, so an equi-join on
+    (band, key) pairs hashes that agree on any band."""
+    return hashes.select(
+        *cols,
         F.explode(
             F.array(
                 *[
@@ -1344,7 +1134,19 @@ def image_near_dups(media: DataFrame, max_hamming: int = 6) -> DataFrame:
                 ]
             )
         ).alias("bk"),
-    ).select("media_id", "dhash", "bk.band", "bk.key")
+    ).select(*cols, "bk.band", "bk.key")
+
+
+def image_near_dups(media: DataFrame, max_hamming: int = 6) -> DataFrame:
+    """Image near-dup pairs: dHash -> four 16-bit band keys -> band
+    equi-join for candidates (near-identical hashes agree on at least
+    one band whenever <= 3 of the 64 bits differ per band region) ->
+    exact Hamming verify via bit_count(a XOR b), all JVM-side.
+
+    Scale shape: hashes are 8 bytes/image; the candidate join
+    shuffles band keys only — the corpus of image bytes is touched
+    once, by the hashing pass."""
+    bands = _dhash_bands(image_dhash(media), ["media_id", "dhash"])
     a = bands.select(
         "band", "key", F.col("media_id").alias("id_a"), F.col("dhash").alias("ha")
     )
@@ -1426,87 +1228,6 @@ def detect_voice_activity(
 
     return media.filter(F.col("mime") == "audio/wav").mapInPandas(
         batches, VAD_SCHEMA
-    )
-
-
-def resize_images_real(
-    media: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Format-generic REAL resize: sniff + decode with the matching
-    codec, nearest-neighbor resample, re-encode in the SAME format
-    (PPM/PNG/BMP lossless; JPEG at q=85).  `resize_images` is the
-    default name for this path; this name is kept as a compatibility
-    alias."""
-    import numpy as np
-
-    def rz_payload(b: bytes) -> bytes:
-        a = decode_image(b)
-        h, w = a.shape[:2]
-        yi = np.minimum((np.arange(height) * h) // height, h - 1)
-        xi = np.minimum((np.arange(width) * w) // width, w - 1)
-        out = a[yi][:, xi]
-        raw = bytes(b)
-        if raw.startswith(_PNG_SIG):
-            return encode_png(out)
-        if raw.startswith(b"P6"):
-            return encode_ppm(out)
-        if raw.startswith(b"BM"):
-            return encode_bmp(out)
-        from sparkplans.operators.jpeg import encode_jpeg
-
-        return encode_jpeg(out[:, :, :3], quality=85)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz_payload),
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
-
-
-def sample_gif_frames(media: DataFrame, every_ms: int = 100) -> DataFrame:
-    """REAL frame sampling for animated GIF payloads (image/gif):
-    frames composite per the stream's own delays; one output row per
-    every_ms tick with the luma stats of the frame active at that
-    time — web-media animation handled by the same schema as the Y4M
-    video branch."""
-    import numpy as np
-
-    from sparkplans.operators.gif import decode_gif
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, delays = decode_gif(bytes(r["payload"]))
-                total = sum(delays)
-                starts = np.cumsum([0] + delays[:-1])
-                t = 0
-                while t < total:
-                    idx = int(np.searchsorted(starts, t, side="right") - 1)
-                    y = (
-                        0.299 * frames[idx, :, :, 0]
-                        + 0.587 * frames[idx, :, :, 1]
-                        + 0.114 * frames[idx, :, :, 2]
-                    )
-                    rows.append(
-                        (r["media_id"], idx, int(t), float(y.mean()), float(y.std()))
-                    )
-                    t += every_ms
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"]
-            )
-
-    return media.filter(F.col("mime") == "image/gif").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
     )
 
 
@@ -1705,25 +1426,9 @@ def video_near_dups(
     16-bit band equi-join as image_near_dups (never all-pairs);
     matching is join + group count over the 8-byte-per-frame
     fingerprint table, JVM-side."""
-    h = video_frame_dhashes(media)
-    bands = h.select(
-        "media_id",
-        "frame_idx",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(bnd).alias("band"),
-                        F.shiftright(F.col("dhash"), 16 * bnd)
-                        .bitwiseAND(F.lit(0xFFFF))
-                        .alias("key"),
-                    )
-                    for bnd in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("media_id", "frame_idx", "dhash", "bk.band", "bk.key")
+    bands = _dhash_bands(
+        video_frame_dhashes(media), ["media_id", "frame_idx", "dhash"]
+    )
     a = bands.select(
         "band", "key",
         F.col("media_id").alias("id_a"), F.col("frame_idx").alias("fa"),

@@ -1834,11 +1834,11 @@ def q_multimodal_ppm_features(spark, sf_dir):
     8x8 RGB image is synthesized from the pure formula
     ``pixel[i] = (doc_id*7 + i*13) % 256``, ENCODED as a real binary
     PPM payload, DECODED back through the production codec path
-    (`operators/multimodal.decode_ppm_features`, Arrow-batched
-    mapInPandas), and reduced to per-channel pixel means.  The DuckDB
-    oracle predicts those means independently from the formula — so a
-    bug anywhere in encode, decode, batching, or feature math breaks
-    the hash.  Means of 64 bytes are exact in binary (sum < 2^53,
+    (`operators/multimodal.extract_image_features`, magic-sniffed,
+    Arrow-batched mapInPandas), and reduced to per-channel pixel
+    means.  The DuckDB oracle predicts those means independently from
+    the formula — so a bug anywhere in encode, decode, batching, or
+    feature math breaks the hash.  Means of 64 bytes are exact in binary (sum < 2^53,
     /64), so cross-engine equality is bit-exact.
 
     Scale shape: two chained mapInPandas stages over the scan, zero
@@ -1874,7 +1874,7 @@ def q_multimodal_ppm_features(spark, sf_dir):
             )
 
     media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
-    feats = mm.decode_ppm_features(media)
+    feats = mm.extract_image_features(media)
     return feats.select(
         F.col("media_id").alias("doc_id"),
         "width",
@@ -1969,7 +1969,7 @@ def q_multimodal_video_frames(spark, sf_dir):
     """Driver-checked VIDEO round trip: each document becomes a real
     Y4M clip of ``4 + doc_id % 3`` constant-luma frames
     (``luma_f = (doc_id*5 + f*11) % 256``) at 10 fps, then
-    `sample_y4m_frames(every_ms=100)` — one sample per frame, exact
+    `sample_video_frames(every_ms=100)` — one sample per frame, exact
     integer timestamps — must recover every frame's index, timestamp,
     and luma mean, each predicted in closed form by the oracle.
     Decode, frame walk, and luma statistics all sit on the hash."""
@@ -2000,7 +2000,7 @@ def q_multimodal_video_frames(spark, sf_dir):
             )
 
     media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
-    frames = mm.sample_y4m_frames(media, every_ms=100)
+    frames = mm.sample_video_frames(media, every_ms=100)
     return frames.select(
         F.col("media_id").alias("doc_id"),
         "frame_idx",

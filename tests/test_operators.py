@@ -72,8 +72,8 @@ def test_minhash_identical_docs_share_signature(spark, docs):
     dup = two.withColumn("doc_id", F.lit(1)).unionByName(
         two.withColumn("doc_id", F.lit(2))
     )
-    sig = dedup.minhash_signatures(dup, num_perm=8)
-    pairs = dedup.lsh_candidate_pairs(sig, num_perm=8, bands=2)
+    wide = dedup.minhash_wide(dup, num_perm=8)
+    pairs = dedup.lsh_candidate_pairs_wide(wide, num_perm=8, bands=2)
     assert [(r.id_a, r.id_b) for r in pairs.collect()] == [(1, 2)]
     jac = dedup.jaccard_pairs(dup, pairs).collect()
     assert jac[0].jaccard == 1.0
@@ -535,57 +535,30 @@ def test_image_features_plumbing(spark):
         )
 
 
-def test_image_features_arrow_twin_identical(spark):
-    """mapInArrow path produces bit-identical output to the
-    mapInPandas path (same kernel, no pandas conversion)."""
-    media = multimodal.synthetic_media(spark, n=30)
-    pd_rows = sorted(
-        multimodal.extract_image_features(media).collect(),
-        key=lambda r: r.media_id,
-    )
-    ar_rows = sorted(
-        multimodal.extract_image_features_arrow(media).collect(),
-        key=lambda r: r.media_id,
-    )
-    assert [r.asDict() for r in pd_rows] == [r.asDict() for r in ar_rows]
-
-
-def test_ppm_decode_roundtrip_and_real_features(spark):
-    """The PPM branch is REAL end-to-end: encode->decode round-trips
-    bit-for-bit, and the Spark-side channel means equal numpy's on the
-    actual pixels."""
+def test_image_features_match_numpy(spark):
+    """extract_image_features is REAL on PPM and on PNG (RGB and RGBA)
+    tables: PPM encode->decode round-trips bit-for-bit, and the
+    Spark-side size and channel means equal numpy's on each format
+    codec's decode of the actual pixels."""
     import numpy as np
 
     a = (np.arange(4 * 3 * 3, dtype="uint8") * 5 % 256).reshape(3, 4, 3)
     assert (multimodal.decode_ppm(multimodal.encode_ppm(a)) == a).all()
 
-    media = multimodal.synthetic_ppm_media(spark, n=12)
-    feats = {r.media_id: r for r in multimodal.decode_ppm_features(media).collect()}
-    assert len(feats) == 12
-    for row in media.collect():
-        arr = multimodal.decode_ppm(bytes(row.payload))
-        got = feats[row.media_id]
-        assert (got.width, got.height) == (arr.shape[1], arr.shape[0])
-        want = [float(m) for m in arr.mean(axis=(0, 1))]
-        assert got.channel_means == pytest.approx(want)
-
-
-def test_ppm_resize_real_nearest_neighbor(spark):
-    """Resize output decodes to exactly the nearest-neighbor
-    subsampling of the source pixels (verified against numpy)."""
-    import numpy as np
-
-    media = multimodal.synthetic_ppm_media(spark, n=6)
-    out = {r.media_id: bytes(r.payload)
-           for r in multimodal.resize_ppm_images(media, width=4, height=4).collect()}
-    for row in media.collect():
-        src = multimodal.decode_ppm(bytes(row.payload))
-        h, w = src.shape[:2]
-        yi = np.minimum((np.arange(4) * h) // 4, h - 1)
-        xi = np.minimum((np.arange(4) * w) // 4, w - 1)
-        want = src[yi][:, xi]
-        got = multimodal.decode_ppm(out[row.media_id])
-        assert (got == want).all()
+    for make, decode in [
+        (multimodal.synthetic_ppm_media, multimodal.decode_ppm),
+        (multimodal.synthetic_png_media, multimodal.decode_png),
+    ]:
+        media = make(spark, n=12)
+        feats = {r.media_id: r
+                 for r in multimodal.extract_image_features(media).collect()}
+        assert len(feats) == 12
+        for row in media.collect():
+            arr = decode(bytes(row.payload))
+            got = feats[row.media_id]
+            assert (got.width, got.height) == (arr.shape[1], arr.shape[0])
+            want = [float(m) for m in arr.mean(axis=(0, 1))]
+            assert got.channel_means == pytest.approx(want)
 
 
 def test_video_frame_sampling_plumbing(spark):
@@ -1918,36 +1891,6 @@ def test_png_decode_roundtrip_all_filters(spark):
         multimodal.decode_png(bytes(blob))
 
 
-def test_png_features_match_numpy(spark):
-    """Spark-side PNG channel means equal numpy's on the decoded
-    pixels — the planted-PNG feature test mirroring the PPM branch."""
-    media = multimodal.synthetic_png_media(spark, n=12)
-    feats = {r.media_id: r for r in multimodal.decode_png_features(media).collect()}
-    assert len(feats) == 12
-    for row in media.collect():
-        arr = multimodal.decode_png(bytes(row.payload))
-        got = feats[row.media_id]
-        assert (got.width, got.height) == (arr.shape[1], arr.shape[0])
-        want = [float(m) for m in arr.mean(axis=(0, 1))]
-        assert got.channel_means == pytest.approx(want)
-
-
-def test_png_resize_real_nearest_neighbor(spark):
-    import numpy as np
-
-    media = multimodal.synthetic_png_media(spark, n=6)
-    out = {r.media_id: bytes(r.payload)
-           for r in multimodal.resize_png_images(media, width=4, height=4).collect()}
-    for row in media.collect():
-        src = multimodal.decode_png(bytes(row.payload))
-        h, w = src.shape[:2]
-        yi = np.minimum((np.arange(4) * h) // 4, h - 1)
-        xi = np.minimum((np.arange(4) * w) // 4, w - 1)
-        want = src[yi][:, xi]
-        got = multimodal.decode_png(out[row.media_id])
-        assert (got == want).all()
-
-
 # -- real WAV / Y4M / BMP codec branches ------------------------------------
 
 
@@ -2047,7 +1990,7 @@ def test_wav_resample_real_linear_interp(spark):
 
     media = multimodal.synthetic_wav_media(spark, n=6)
     out = {r.media_id: r
-           for r in multimodal.resample_wav_audio(media, target_hz=16000).collect()}
+           for r in multimodal.resample_audio(media, target_hz=16000).collect()}
     for row in media.collect():
         src, rate = multimodal.decode_wav(bytes(row.payload))
         got_arr, got_rate = multimodal.decode_wav(bytes(out[row.media_id].payload))
@@ -2086,7 +2029,7 @@ def test_y4m_roundtrip_and_real_frame_sampling(spark):
     assert fps == 30.0 and (dec == fr).all()
 
     media = multimodal.synthetic_y4m_media(spark, n=8)
-    rows = multimodal.sample_y4m_frames(media, every_ms=300).collect()
+    rows = multimodal.sample_video_frames(media, every_ms=300).collect()
     by_id = {}
     for r in rows:
         by_id.setdefault(r.media_id, []).append(r)
@@ -2111,10 +2054,14 @@ def test_y4m_roundtrip_and_real_frame_sampling(spark):
 
 def test_y4m_scene_cut_detection(spark):
     """Each synthetic clip plants exactly one hard luma jump at its
-    midpoint; the detector finds it (and nothing else) on real
-    pixels."""
+    midpoint; the shot-boundary detector at threshold 30 flags it (and
+    nothing else) on real pixels."""
     media = multimodal.synthetic_y4m_media(spark, n=8)
-    cuts = multimodal.detect_scene_cuts(media, threshold=30.0).collect()
+    cuts = (
+        multimodal.detect_shot_boundaries(media, threshold=30.0)
+        .filter("is_boundary")
+        .collect()
+    )
     got = {r.media_id: r for r in cuts}
     assert len(cuts) == 8  # one cut per clip, no false positives
     for row in media.collect():
@@ -2144,7 +2091,7 @@ def test_bmp_roundtrip_and_generic_image_dispatch(spark):
         rows.append((i, "image", mime, enc(a), a.shape[1], a.shape[0], None))
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     feats = {r.media_id: r
-             for r in multimodal.extract_image_features_real(media).collect()}
+             for r in multimodal.extract_image_features(media).collect()}
     assert len(feats) == 9
     for i, a in arrays.items():
         got = feats[i]
@@ -2432,7 +2379,7 @@ def test_generic_image_dispatch_includes_jpeg(spark):
         rows.append((i, "image", mime, payload, w, h, None))
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     feats = {r.media_id: r
-             for r in multimodal.extract_image_features_real(media).collect()}
+             for r in multimodal.extract_image_features(media).collect()}
     assert len(feats) == 6
     for i, a in arrays.items():
         got = feats[i]
@@ -2602,9 +2549,10 @@ def test_jpeg_420_subsampling_roundtrip():
 
 
 def test_generic_resize_real_across_formats(spark):
-    """resize_images_real decodes with the sniffed codec, resamples
-    real pixels, and re-encodes in the same container: lossless
-    formats round-trip to exactly the numpy nearest-neighbor result;
+    """resize_images decodes with the sniffed codec, resamples real
+    pixels, and re-encodes in the same container: lossless formats
+    (one image as PNG/PPM/BMP, plus varying-size PPM and RGB/RGBA PNG
+    tables) round-trip to exactly the numpy nearest-neighbor result;
     JPEG output re-decodes close to it."""
     import numpy as np
 
@@ -2621,23 +2569,34 @@ def test_generic_resize_real_across_formats(spark):
         (3, "image", "image/bmp", multimodal.encode_bmp(img), w, h, None),
         (4, "image", "image/jpeg", jpeg.encode_jpeg(img, quality=92), w, h, None),
     ]
+    src = {1: img, 2: img, 3: img}
+    for base, make, decode in [
+        (10, multimodal.synthetic_ppm_media, multimodal.decode_ppm),
+        (20, multimodal.synthetic_png_media, multimodal.decode_png),
+    ]:
+        for r in make(spark, n=6).collect():
+            rows.append((base + r.media_id,) + tuple(r)[1:])
+            src[base + r.media_id] = decode(bytes(r.payload))
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     out = {r.media_id: bytes(r.payload)
-           for r in multimodal.resize_images_real(media, width=8, height=8).collect()}
-    yi = np.minimum((np.arange(8) * h) // 8, h - 1)
-    xi = np.minimum((np.arange(8) * w) // 8, w - 1)
-    want = img[yi][:, xi]
-    for mid, magic in [(1, b"\x89PN"), (2, b"P6"), (3, b"BM"), (4, b"\xff\xd8")]:
-        assert out[mid].startswith(magic[:2]) or out[mid].startswith(magic)
+           for r in multimodal.resize_images(media, width=8, height=8).collect()}
+    assert set(out) == {r[0] for r in rows}
+
+    def nearest_8x8(a):
+        yi = np.minimum((np.arange(8) * a.shape[0]) // 8, a.shape[0] - 1)
+        xi = np.minimum((np.arange(8) * a.shape[1]) // 8, a.shape[1] - 1)
+        return a[yi][:, xi]
+
+    for mid, _kind, _mime, payload, *_ in rows:
+        assert out[mid][:2] == bytes(payload)[:2]  # same container magic
         got = multimodal.decode_image(out[mid])
         if mid == 4:
             # JPEG path: decode(encode(resized jpeg-decoded pixels));
             # two lossy steps, so compare loosely
-            src = multimodal.decode_image(bytes(rows[3][3]))
-            want4 = src[yi][:, xi]
-            assert np.abs(got.astype(int) - want4.astype(int)).mean() < 12
+            want = nearest_8x8(multimodal.decode_image(bytes(payload)))
+            assert np.abs(got.astype(int) - want.astype(int)).mean() < 12
         else:
-            assert (got == want).all()
+            assert (got == nearest_8x8(src[mid])).all()
 
 
 def test_incremental_dedup_equals_global_dedup(spark):
@@ -2814,7 +2773,7 @@ def test_gif_codec_and_animated_frame_sampling(spark):
         multimodal.MEDIA_SCHEMA,
     )
     rows = sorted(
-        multimodal.sample_gif_frames(media, every_ms=100).collect(),
+        multimodal.sample_video_frames(media, every_ms=100).collect(),
         key=lambda r: r.t_ms,
     )
     # timeline: frame0 at 0, frame1 at 100+200ms, frame2 at 300
@@ -2828,6 +2787,31 @@ def test_gif_codec_and_animated_frame_sampling(spark):
             + 0.114 * anim[r.frame_idx, :, :, 2]
         )
         assert r.luma_mean == pytest.approx(float(y.mean()))
+
+
+def test_frame_sampling_mixed_media_table(spark):
+    """One sample_video_frames call over a table holding a Y4M clip,
+    an animated GIF stored as an image, a PNG image and an MP3 audio
+    row samples exactly the Y4M and GIF rows."""
+    import numpy as np
+
+    from sparkplans.operators import gif, mediaprobe
+
+    clip = np.zeros((3, 6, 8, 3), dtype="uint8")
+    anim = np.stack([np.full((6, 8, 3), 40 * f, dtype="uint8") for f in range(3)])
+    rows = [
+        (1, "video", "video/x-yuv4mpeg", multimodal.encode_y4m(clip, 10, 1),
+         8, 6, 300),
+        (2, "image", "image/gif", gif.encode_gif(anim, delays_ms=[100, 100, 100]),
+         8, 6, 300),
+        (3, "image", "image/png", multimodal.encode_png(anim[0]), 8, 6, None),
+        (4, "audio", "audio/mpeg",
+         mediaprobe.build_mp3_header(192, 48000, mono=True, n_frames=50),
+         None, None, None),
+    ]
+    media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
+    got = multimodal.sample_video_frames(media, every_ms=100).collect()
+    assert {r.media_id for r in got} == {1, 2}
 
 
 def test_g711_wav_support(spark):
